@@ -213,25 +213,27 @@ def _roll_mean_std(values: np.ndarray, window_size: int) -> tuple[np.ndarray, np
     with the same fixed-window bounds, skipping only the Series/Rolling
     API layers (~0.4 ms per call on short series — the kernel calls this
     once per series; r6). Falls back to the API when pandas internals
-    move (parity-pinned either way)."""
+    move: the module is gone (``ImportError``) or a private signature
+    changed (``TypeError``); parity-pinned either way."""
     n = len(values)
-    if _pd_window_aggregations is None:  # pragma: no cover
-        s = pd.Series(values)
-        return (
-            s.rolling(window=window_size).mean().to_numpy(),
-            s.rolling(window=window_size).std().to_numpy(),
-        )
-    end = np.arange(1, n + 1, dtype=np.int64)
-    start = np.clip(end - window_size, 0, None)
-    values = np.ascontiguousarray(values, dtype=np.float64)
-    mean = _pd_window_aggregations.roll_mean(values, start, end, window_size)
-    var = _pd_window_aggregations.roll_var(values, start, end, window_size, 1)
-    with np.errstate(all="ignore"):
-        std = np.sqrt(var)
-        neg = var < 0
-    if neg.any():
-        std[neg] = 0.0
-    return mean, std
+    if _pd_window_aggregations is not None:
+        end = np.arange(1, n + 1, dtype=np.int64)
+        start = np.clip(end - window_size, 0, None)
+        contiguous = np.ascontiguousarray(values, dtype=np.float64)
+        try:
+            mean = _pd_window_aggregations.roll_mean(contiguous, start, end, window_size)
+            var = _pd_window_aggregations.roll_var(contiguous, start, end, window_size, 1)
+        except TypeError:
+            pass
+        else:
+            with np.errstate(all="ignore"):
+                std = np.sqrt(var)
+                neg = var < 0
+            if neg.any():
+                std[neg] = 0.0
+            return mean, std
+    rolling = pd.Series(values).rolling(window=window_size)
+    return rolling.mean().to_numpy(), rolling.std().to_numpy()
 
 
 def detect_jumps(values: np.ndarray, window_size: int = 5, threshold: float = 3.0) -> list[int]:

@@ -1,42 +1,36 @@
-"""Custom STATEFUL streaming operator #5: live counter tier.
+"""Live counter tier.
 
-``applyInPandasWithState`` analog of ``operators.counters.counter_rollup``:
-per series the state is ONE OPEN BUCKET (plus the last accepted point),
-because accepted arrivals are strictly time-increasing (out-of-order
-rows are skipped, the shared policy), so the bucket index is
-nondecreasing and a bucket CLOSES exactly when the first point of a
-later bucket arrives. Closed buckets are emitted with the full batch
-column set (n, first/last envelope, inc_within, resets,
-boundary_increase/reset, bucket_increase, rate).
+Keyed stateful stream (``streaming/stateful``), the analog of
+``operators.counters.counter_rollup``: per series the state is ONE OPEN
+BUCKET (plus the last accepted point), because accepted arrivals are
+strictly time-increasing, so the bucket index is nondecreasing and a
+bucket CLOSES exactly when the first point of a later bucket arrives.
+Closed buckets are emitted with the full batch column set (n, first/last
+envelope, inc_within, resets, boundary_increase/reset, bucket_increase,
+rate).
 
 Exactness: the within-bucket walk adds contributions in time order both
 here and in the batch JVM fold — the carry continues the same left
-fold, so on a fully delivered in-order stream every CLOSED bucket is
-**bit-equal** to the batch ``counter_rollup`` row (float data included;
-test-pinned across micro-batch splits). Late re-deliveries reconcile
-through the batch ``refresh_tier`` path, as with the rollup stream.
+fold, and timestamps are quantized by the SAME JVM expression the batch
+uses (applied in the stream's pre-projection), so on a fully delivered
+in-order stream every CLOSED bucket is **bit-equal** to the batch
+``counter_rollup`` row (float data and fractional timestamps included;
+test-pinned across micro-batch splits).
 
 Per batch the arithmetic is vectorized: one diff/where pass over all
 accepted points plus ``np.add.reduceat`` per bucket segment — Python
 touches segments (≤ buckets per batch), never rows.
-
-``state_ttl_ms > 0`` additionally FLUSHES the open bucket when a series
-goes idle (emit-on-timeout), trading the exact close-on-next-bucket
-boundary for bounded emission delay.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schema import TIER_SECONDS
+from .stateful import bucket_runs, left_fold, quantized_t, stateful_stream
 
 COUNTER_BUCKET = T.StructType(
     [
@@ -71,8 +65,6 @@ _STATE_SCHEMA = T.StructType(
     ]
 )
 
-_COLS = [f.name for f in COUNTER_BUCKET.fields]
-
 
 def counter_stream(
     points_stream: DataFrame,
@@ -85,36 +77,21 @@ def counter_stream(
     """Keyed stateful counter tier over a stream of (key, t, value)."""
     sec = TIER_SECONDS[tier]
 
-    def _close(key, st) -> tuple:
+    def _flush(key, st) -> tuple:
         (_lt, b, n, ft, fv, lv, inc, res, binc, bres) = st
         total = inc + binc
         return (key, b, n, ft, fv, _lt, lv, inc, res, binc, bres, total, total / sec)
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            if state.exists:
-                row = _close(key[0], state.get)
-                state.remove()
-                yield pd.DataFrame([row], columns=_COLS)
-            else:
-                state.remove()
-            return
-        pdf = pd.concat(list(batches), ignore_index=True)
+    def _step(key, pdf, st):
         pdf = pdf.dropna(subset=[value_col]).sort_values(time_col)
         ts = pdf[time_col].to_numpy(dtype="float64")
         xs = pdf[value_col].to_numpy(dtype="float64")
-        open_st = list(state.get) if state.exists else None
+        open_st = list(st) if st is not None else None
         if open_st is not None:
             keep = ts > open_st[0]
             ts, xs = ts[keep], xs[keep]
         if len(ts) == 0:
-            if open_st is not None and state_ttl_ms > 0:
-                state.setTimeoutDuration(state_ttl_ms)
-            return
+            return None, None
 
         buckets = (np.floor(ts / sec) * sec).astype(np.int64)
         prev = np.empty(len(xs))
@@ -128,64 +105,41 @@ def counter_stream(
             contrib[0] = 0.0  # series' very first point: no predecessor
             reset[0] = False
 
-        # segment starts: bucket transitions (plus index 0)
-        starts = np.concatenate(([0], np.flatnonzero(buckets[1:] != buckets[:-1]) + 1))
+        starts, ends = bucket_runs(buckets)
         seg_res = np.add.reduceat(reset.astype(np.int64), starts)
-        ends = np.concatenate((starts[1:], [len(xs)])) - 1
-
-        # bit-equality with the batch JVM fold requires the SAME addition
-        # order: cumsum is a strict left fold (ufunc.accumulate, never
-        # pairwise), so seed it with the carry — np.add.reduceat is
-        # pairwise and reassociates (caught: 3% of straddling buckets off
-        # in the last ulp)
-        def _fold(seed: float, c: np.ndarray) -> float:
-            if len(c) == 0:
-                return seed
-            return float(np.cumsum(np.concatenate(([seed], c)))[-1])
-
         out = []
-        for j, s in enumerate(starts):
-            e = ends[j]
+        for j, (s, e) in enumerate(zip(starts, ends)):
             b = int(buckets[s])
             if open_st is not None and b == open_st[1]:
                 # continue the open bucket: the segment's first diff is a
                 # WITHIN contribution (same bucket as the carry point)
-                open_st[2] += int(e - s + 1)
-                open_st[5] = float(xs[e])
-                open_st[6] = _fold(open_st[6], contrib[s : e + 1])
+                open_st[2] += int(e - s)
+                open_st[5] = float(xs[e - 1])
+                open_st[6] = left_fold(open_st[6], contrib[s:e])
                 open_st[7] += int(seg_res[j])
-                open_st[0] = float(ts[e])
+                open_st[0] = float(ts[e - 1])
                 continue
             if open_st is not None:
-                out.append(_close(key[0], open_st))
+                out.append(_flush(key, open_st))
             # new bucket: its first point's contribution is the BOUNDARY
             open_st = [
-                float(ts[e]),
+                float(ts[e - 1]),
                 b,
-                int(e - s + 1),
+                int(e - s),
                 float(ts[s]),
                 float(xs[s]),
-                float(xs[e]),
-                _fold(0.0, contrib[s + 1 : e + 1]),
+                float(xs[e - 1]),
+                left_fold(0.0, contrib[s + 1 : e]),
                 int(seg_res[j] - reset[s]),
                 float(contrib[s]),
                 int(reset[s]),
             ]
-        state.update(tuple(open_st))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=_COLS)
+        return tuple(open_st), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
+    # identical JVM quantization to the batch operator's first projection
+    quantized = points_stream.select(
+        F.col(key_col), quantized_t(time_col).alias(time_col), F.col(value_col)
     )
-    return points_stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=COUNTER_BUCKET,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        quantized, key_col, _step, COUNTER_BUCKET, _STATE_SCHEMA, state_ttl_ms, _flush
     )

@@ -1,12 +1,12 @@
 """Streaming content drift: live per-url crawl change classification.
 
-ELEVENTH custom stateful operator (``applyInPandasWithState``): the
-streaming twin of ``operators/drift.content_drift`` — as recrawls
-arrive, classify each against the url's previous crawl
-(first/unchanged/cosmetic/rewrite) using the SAME signature expressions
-(xxhash64 byte-identity + the dedup SimHash Arrow fold, computed in the
-stream's pre-projection — one signature law in the codebase) and the
-SAME classification law (imported constants, not re-typed).
+Keyed stateful stream (``streaming/stateful``), the streaming twin of
+``operators/drift.content_drift`` — as recrawls arrive, classify each
+against the url's previous crawl (first/unchanged/cosmetic/rewrite)
+using the SAME signature expressions (xxhash64 byte-identity + the dedup
+SimHash Arrow fold, computed in the stream's pre-projection — one
+signature law in the codebase) and the SAME classification law (imported
+constants, not re-typed).
 
 State per url: exactly (last_t, last_exact, last_sig) — 24 bytes, the
 smallest state of any operator here; 10⁸ live urls ≈ 2.4 GB across the
@@ -25,17 +25,14 @@ segments, never rows.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.drift import _popcount64  # one popcount in the codebase
+from .stateful import quantized_t, stateful_stream
 
 DRIFT_EVENT = T.StructType(
     [
@@ -71,51 +68,39 @@ def content_drift_stream(
 
     sig = pages_stream.select(
         F.col(url_col).alias("url"),
-        F.col(time_col).cast("timestamp_ltz").cast("double").alias("t"),
+        quantized_t(time_col).alias("t"),
         F.xxhash64(F.coalesce(F.col(text_col), F.lit(""))).alias("exact_hash"),
         _simhash_fold(_token_hashes(text_col, portable=portable)).alias("simhash"),
     )
 
     thr = int(hamming_threshold)
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_t, last_exact, last_sig = (None, None, None)
-        if state.exists:
-            last_t, last_exact, last_sig = state.get
-        pdf = pd.concat(list(batches), ignore_index=True)
+    def _step(key, pdf, st):
         pdf = pdf.sort_values(["t", "exact_hash"], kind="mergesort")
         t = pdf["t"].to_numpy(dtype="float64")
         exact = pdf["exact_hash"].to_numpy(dtype="int64")
         sig_v = pdf["simhash"].to_numpy(dtype="int64")
 
-        late = t < (last_t if last_t is not None else -np.inf)
+        late = t < (st[0] if st is not None else -np.inf)
         # previous-crawl columns for the in-order rows: shift within the
         # accepted segment, seeding from state
         ok = ~late
         t_ok, e_ok, s_ok = t[ok], exact[ok], sig_v[ok]
         n = len(t_ok)
-        # int64, not float: xxhash64 values exceed 2^53, a float compare
-        # would collapse distinct hashes
-        prev_e = np.empty(n, dtype="int64")
-        prev_s = np.empty(n, dtype="int64")
-        has_prev = np.ones(n, dtype=bool)
+        new_state, parts = None, []
         if n:
+            # int64, not float: xxhash64 values exceed 2^53, a float
+            # compare would collapse distinct hashes
+            prev_e = np.empty(n, dtype="int64")
+            prev_s = np.empty(n, dtype="int64")
             prev_e[1:] = e_ok[:-1]
             prev_s[1:] = s_ok[:-1]
-            if last_t is None:
+            has_prev = np.ones(n, dtype=bool)
+            if st is None:
                 has_prev[0] = False
-                prev_e[0] = 0
-                prev_s[0] = 0
+                prev_e[0] = prev_s[0] = 0
             else:
-                prev_e[0] = last_exact
-                prev_s[0] = last_sig
+                prev_e[0], prev_s[0] = st[1], st[2]
             ham = _popcount64(s_ok ^ prev_s)
             change = np.where(
                 ~has_prev,
@@ -128,55 +113,30 @@ def content_drift_stream(
             )
             out = pd.DataFrame(
                 {
-                    "url": key[0],
+                    "url": key,
                     "t": t_ok,
                     "exact_hash": e_ok,
                     "simhash": s_ok,
-                    "hamming": pd.array(
-                        np.where(has_prev, ham, 0), dtype="Int32"
-                    ),
+                    "hamming": pd.array(np.where(has_prev, ham, 0), dtype="Int32"),
                     "change": change,
                 }
             )
             out.loc[~has_prev, "hamming"] = pd.NA
-            state.update(
-                (float(t_ok[-1]), int(e_ok[-1]), int(s_ok[-1]))
-            )
-        else:
-            out = pd.DataFrame(columns=[f.name for f in DRIFT_EVENT.fields])
+            parts.append(out)
+            new_state = (float(t_ok[-1]), int(e_ok[-1]), int(s_ok[-1]))
         if late.any():
-            out = pd.concat(
-                [
-                    out,
-                    pd.DataFrame(
-                        {
-                            "url": key[0],
-                            "t": t[late],
-                            "exact_hash": exact[late],
-                            "simhash": sig_v[late],
-                            "hamming": pd.array(
-                                [pd.NA] * int(late.sum()), dtype="Int32"
-                            ),
-                            "change": "late",
-                        }
-                    ),
-                ],
-                ignore_index=True,
+            parts.append(
+                pd.DataFrame(
+                    {
+                        "url": key,
+                        "t": t[late],
+                        "exact_hash": exact[late],
+                        "simhash": sig_v[late],
+                        "hamming": pd.array([pd.NA] * int(late.sum()), dtype="Int32"),
+                        "change": "late",
+                    }
+                )
             )
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if len(out):
-            yield out
+        return new_state, pd.concat(parts, ignore_index=True) if parts else None
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return sig.groupBy("url").applyInPandasWithState(
-        _update,
-        outputStructType=DRIFT_EVENT,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
+    return stateful_stream(sig, "url", _step, DRIFT_EVENT, _STATE_SCHEMA, state_ttl_ms)

@@ -1,38 +1,30 @@
-"""Custom STATEFUL streaming operator: live funnel progression.
+"""Live funnel progression.
 
-``applyInPandasWithState`` analog of the batch funnel
+Keyed stateful stream (``streaming/stateful``), the analog of the batch funnel
 (operators/funnel.funnel_reach): per user, each arriving event can
 advance the prefix-filled first-reach state by at most one step; a row is
 emitted the moment a step is newly reached, so a dashboard sees
 conversion as it happens instead of re-folding history.
 
-State per user (GroupState, explicitly bounded):
+State per user (explicitly bounded):
 
 * ``step_ts`` — array of k first-reach epoch seconds (null = unreached),
   O(k) doubles per key, frozen once the funnel completes,
-* ``last_t``  — last accepted event time; out-of-order arrivals with
-  ``t <= last_t`` are skipped (the batch fold sorts globally and never
-  sees disorder — the same cross-batch policy the gap/jump streams use).
+* ``last_t``  — last accepted event time.
 
-Within one micro-batch events are sorted before replay, so intra-batch
-disorder is handled exactly; only CROSS-batch late events are dropped.
 On a fully-delivered, in-order stream the final state per user equals
 ``funnel_reach`` bit-for-bit (test-pinned, including the time budget).
 
 Output rows: (user_id, step, step_name, t) per newly-reached step.
-Scale: one shuffle on user_id, O(k) state per key, ``state_ttl_ms``
-evicts idle users via ProcessingTime timeouts.
+Scale: one shuffle on user_id, O(k) state per key.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import stateful_stream
 
 FUNNEL_EVENT = T.StructType(
     [
@@ -64,35 +56,19 @@ def funnel_stream(
     (user_id, t:epoch-seconds double, event_type) rows. Emits one row per
     newly-reached step. Same advance rule as the batch fold: the next
     open step index is the count of reached steps; ``within_sec`` bounds
-    the whole funnel relative to step 1.
-
-    ``state_ttl_ms > 0`` is for long-running production streams with
-    churning user sets; leave it 0 for ``processAllAvailable``-style
-    draining (tests, batch replay) — an enabled ProcessingTime timeout
-    makes Spark schedule state-cleanup micro-batches forever, so the
-    drain never sees the stream go idle (same caveat as gap_stream)."""
+    the whole funnel relative to step 1; ``state_ttl_ms > 0`` evicts
+    idle users."""
     k = len(steps)
     if k == 0:
         raise ValueError("steps must be non-empty")
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        step_ts: list[float | None] = [None] * k
-        last_t = None
-        if state.exists:
-            raw, last_t = state.get
-            step_ts = list(raw)
-        pdf = pd.concat(list(batches), ignore_index=True).sort_values(time_col)
+    def _step(key, pdf, st):
+        step_ts, last_t = ([None] * k, None) if st is None else (list(st[0]), st[1])
+        pdf = pdf.sort_values(time_col)
         out = []
         for t, tp in zip(pdf[time_col].to_numpy(dtype="float64"), pdf[type_col]):
             if last_t is not None and t <= last_t:
-                continue  # cross-batch disorder — same skip policy as gap/jump
+                continue
             last_t = float(t)
             j = sum(s is not None for s in step_ts)
             if j >= k:
@@ -101,22 +77,9 @@ def funnel_stream(
                 continue
             if tp == steps[j]:
                 step_ts[j] = float(t)
-                out.append((key[0], j + 1, steps[j], float(t)))
-        state.update((step_ts, last_t))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "step", "step_name", "t"])
+                out.append((key, j + 1, steps[j], float(t)))
+        return (step_ts, last_t), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return events_stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=FUNNEL_EVENT,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        events_stream, key_col, _step, FUNNEL_EVENT, _STATE_SCHEMA, state_ttl_ms
     )

@@ -1,11 +1,12 @@
-"""Custom STATEFUL streaming operator: live gap detection per series.
+"""Live gap detection per series.
 
-``applyInPandasWithState`` over a keyed stream — the Structured Streaming
-analog of the batch gap detector (W9, ``operators/correct.detect_gaps_native``
-/ ``oracle.detect_gaps``): per series, flag arrivals whose distance to the
-previous sample exceeds ``threshold_factor`` × the running median interval.
+Keyed stateful stream (``streaming/stateful``), the Structured Streaming
+analog of the batch gap detector (W9,
+``operators/correct.detect_gaps_native`` / ``oracle.detect_gaps``): per
+series, flag arrivals whose distance to the previous sample exceeds
+``threshold_factor`` × the running median interval.
 
-State per series (GroupState, explicitly bounded):
+State per series (explicitly bounded):
 
 * ``last_t``      — time of the last sample seen,
 * ``deltas``      — reservoir of up to ``max_deltas`` recent inter-arrival
@@ -13,7 +14,6 @@ State per series (GroupState, explicitly bounded):
   over an unbounded stream needs unbounded state; the bounded reservoir is
   the deliberate streaming trade-off (the batch path stays exact), and at
   ``max_deltas`` samples the estimate converges for stationary cadences.
-* a timeout clears state for series idle longer than ``state_ttl_ms``.
 
 Output rows mirror the batch detector: (series_key, t, prev_t, delta) for
 each gap START. Scale notes: state is per-key and O(max_deltas) doubles —
@@ -23,14 +23,11 @@ beyond what the key distribution already has.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import stateful_stream
 
 GAP_EVENT = T.StructType(
     [
@@ -57,32 +54,13 @@ def detect_gaps_stream(
     key_col: str = "series_key",
     time_col: str = "t",
 ) -> DataFrame:
-    """Keyed stateful gap detection on a stream of (series_key, t, ...) rows.
+    """Keyed stateful gap detection on a stream of (series_key, t, ...)
+    rows; ``state_ttl_ms > 0`` evicts idle series."""
 
-    ``state_ttl_ms > 0`` enables ProcessingTime timeouts that evict state for
-    idle series — set it on long-running production streams with churning
-    key sets. Default is NoTimeout: state is already bounded per key by the
-    reservoir, and an enabled timeout makes Spark schedule state-cleanup
-    micro-batches forever, so ``processAllAvailable``-style draining (tests,
-    batch-replay) never sees the stream go idle."""
-
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_t, deltas = (None, [])
-        if state.exists:
-            last_t, deltas = state.get
-            deltas = list(deltas)
-        ts = np.sort(
-            np.concatenate([pdf[time_col].to_numpy(dtype="float64") for pdf in batches])
-        )
+    def _step(key, pdf, st):
+        last_t, deltas = (None, []) if st is None else (st[0], list(st[1]))
         out = []
-        for t in ts:
+        for t in np.sort(pdf[time_col].to_numpy(dtype="float64")):
             if last_t is not None:
                 delta = float(t - last_t)
                 if delta <= 0:
@@ -96,26 +74,13 @@ def detect_gaps_stream(
                 if len(deltas) >= 4:  # enough history for a median estimate
                     med = float(np.median(deltas))
                     if med > 0 and delta > threshold_factor * med:
-                        out.append((key[0], float(t), float(last_t), delta))
+                        out.append((key, float(t), float(last_t), delta))
                 deltas.append(delta)
                 if len(deltas) > max_deltas:
                     deltas = deltas[-max_deltas:]
             last_t = float(t)
-        state.update((last_t, deltas))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=["series_key", "t", "prev_t", "delta"])
+        return (last_t, deltas), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return points_stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=GAP_EVENT,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        points_stream, key_col, _step, GAP_EVENT, _STATE_SCHEMA, state_ttl_ms
     )

@@ -1,13 +1,9 @@
-"""Custom STATEFUL streaming operator #9: live fixed-bin histogram tier.
+"""Live fixed-bin histogram tier.
 
-``applyInPandasWithState`` analog of ``operators.histogram
-.histogram_rollup``: per series the state is ONE OPEN BUCKET's counts
-array (nbins+2 longs). Counting commutes, so — like the top-k stream
-and unlike the integral/counter streams — out-of-order rows INSIDE the
-open bucket are accepted; only the bucket frontier is monotone: a
-bucket CLOSES when a row for a LATER bucket arrives, and rows for
-already-closed buckets are skipped (late data reconciles through the
-batch ``refresh_tier``/cascade path, the shared policy).
+Keyed stateful stream (``streaming/stateful``), the analog of
+``operators.histogram.histogram_rollup``: per series the state is ONE
+OPEN BUCKET's counts array (nbins+2 longs). Only the bucket frontier is
+monotone: a bucket CLOSES when a row for a LATER bucket arrives.
 
 Exactness: closed buckets are **bit-equal** to ``histogram_rollup``
 rows by construction — bucket id AND bin slot are computed by the SAME
@@ -21,26 +17,18 @@ The per-batch update is vectorized: one ``np.bincount`` per touched
 bucket segment over the batch's slot column — Python touches (bucket)
 segments, never rows. Closed rows feed ``histogram_cascade`` /
 ``histogram_quantile`` unchanged.
-
-``state_ttl_ms > 0`` additionally FLUSHES the open bucket when a
-series goes idle (emit-on-timeout), trading the exact
-close-on-next-bucket boundary for bounded emission delay.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.histogram import slot_expr
 from ..schema import TIER_SECONDS
+from .stateful import bucket_runs, quantized_t, stateful_stream
 
 HISTOGRAM_BUCKET = T.StructType(
     [
@@ -57,8 +45,6 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("counts", T.ArrayType(T.LongType())),
     ]
 )
-
-_COLS = [f.name for f in HISTOGRAM_BUCKET.fields]
 
 
 def histogram_stream(
@@ -81,74 +67,46 @@ def histogram_stream(
     sec = TIER_SECONDS[tier]
     nslots = nbins + 2
 
-    def _close(key: str, bucket: int, counts: np.ndarray) -> tuple:
+    def _close(key: str, bucket: int, counts) -> tuple:
+        counts = np.asarray(counts, dtype=np.int64)
         return (key, bucket, counts.tolist(), int(counts.sum()))
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            if state.exists:
-                b, cs = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    [_close(key[0], b, np.asarray(cs, dtype=np.int64))],
-                    columns=_COLS,
-                )
-            else:
-                state.remove()
-            return
-        pdf = pd.concat(list(batches), ignore_index=True).dropna(subset=["_slot"])
-        if state.exists:
-            b_open, cs = state.get
-            counts = np.asarray(cs, dtype=np.int64)
+    def _step(key, pdf, st):
+        pdf = pdf.dropna(subset=["_slot"])
+        if st is not None:
+            b_open, counts = st[0], np.asarray(st[1], dtype=np.int64)
+            pdf = pdf[pdf["_bucket"] >= b_open]
         else:
             b_open, counts = None, np.zeros(nslots, dtype=np.int64)
-        if b_open is not None:
-            pdf = pdf[pdf["_bucket"] >= b_open]
         if len(pdf) == 0:
-            if b_open is not None and state_ttl_ms > 0:
-                state.setTimeoutDuration(state_ttl_ms)
-            return
+            return None, None
 
         buckets = pdf["_bucket"].to_numpy(dtype=np.int64)
         slots = pdf["_slot"].to_numpy(dtype=np.int64)
         order = np.argsort(buckets, kind="stable")
         buckets, slots = buckets[order], slots[order]
-        starts = np.concatenate(([0], np.flatnonzero(buckets[1:] != buckets[:-1]) + 1))
-        ends = np.concatenate((starts[1:], [len(buckets)]))
         out = []
-        for s, e in zip(starts, ends):
+        for s, e in zip(*bucket_runs(buckets)):
             b = int(buckets[s])
             if b_open is not None and b != b_open:
-                out.append(_close(key[0], b_open, counts))
+                out.append(_close(key, b_open, counts))
                 counts = np.zeros(nslots, dtype=np.int64)
             b_open = b
             counts += np.bincount(slots[s:e], minlength=nslots)
-        state.update((b_open, counts.tolist()))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=_COLS)
+        return (b_open, counts.tolist()), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    t = F.col(time_col).cast("timestamp_ltz").cast("double")
     v = F.col(value_col).cast("double")
     pre = points_stream.where(v.isNotNull()).select(
         F.col(key_col),
-        (F.floor(t / sec) * sec).cast("long").alias("_bucket"),
+        (F.floor(quantized_t(time_col) / sec) * sec).cast("long").alias("_bucket"),
         slot_expr(v, lo, hi, nbins).alias("_slot"),
     )
-    return pre.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=HISTOGRAM_BUCKET,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        pre,
+        key_col,
+        _step,
+        HISTOGRAM_BUCKET,
+        _STATE_SCHEMA,
+        state_ttl_ms,
+        lambda key, st: _close(key, *st),
     )

@@ -1,16 +1,15 @@
-"""Custom STATEFUL streaming operator: live CUSUM level-shift detection.
+"""Live CUSUM level-shift detection.
 
-``applyInPandasWithState`` analog of the batch jump detector (W6,
-``oracle.detect_jumps`` — reference scripts/processor.py:118-199): per
-series, each arrival is normalized against the mean/std of the previous
-``window_size`` samples and accumulated into a signed CUSUM that triggers
-(and resets) when ``|cusum| > threshold``.
+Keyed stateful stream (``streaming/stateful``), the analog of the batch
+jump detector (W6, ``oracle.detect_jumps`` — reference
+scripts/processor.py:118-199): per series, each arrival is normalized
+against the mean/std of the previous ``window_size`` samples and
+accumulated into a signed CUSUM that triggers (and resets) when
+``|cusum| > threshold``.
 
-State per series (GroupState, explicitly bounded):
+State per series (explicitly bounded):
 
-* ``last_t``  — time of the last accepted sample (out-of-order arrivals with
-  ``t ≤ last_t`` are skipped, same policy as the gap stream: the batch
-  detector sorts globally and never sees disorder),
+* ``last_t``  — time of the last accepted sample,
 * ``window``  — ring of the last ``window_size`` values (the trailing
   context the batch detector reads via ``rolling(window)``), O(window_size)
   doubles per key,
@@ -30,14 +29,11 @@ like the batch kernel.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import stateful_stream
 
 _EPS = 1e-6
 
@@ -69,57 +65,31 @@ def detect_jumps_stream(
     value_col: str = "value",
 ) -> DataFrame:
     """Keyed stateful CUSUM jump detection on a stream of
-    (series_key, t, value) rows. ``state_ttl_ms > 0`` evicts idle-series
-    state via ProcessingTime timeouts (see gap_stream for why the default
-    is NoTimeout)."""
+    (series_key, t, value) rows; ``state_ttl_ms > 0`` evicts idle series."""
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_t, window, cusum = (None, [], 0.0)
-        if state.exists:
-            last_t, window, cusum = state.get
-            window = list(window)
-        pdf = pd.concat(list(batches), ignore_index=True)
+    def _step(key, pdf, st):
+        last_t, window, cusum = (None, [], 0.0) if st is None else (st[0], list(st[1]), st[2])
         pdf = pdf.sort_values(time_col)
         ts = pdf[time_col].to_numpy(dtype="float64")
         vs = pdf[value_col].to_numpy(dtype="float64")
         out = []
         for t, v in zip(ts, vs):
             if last_t is not None and t <= last_t:
-                continue  # cross-batch disorder — same skip policy as gaps
+                continue
             if len(window) == window_size:
                 w = np.asarray(window)
                 std = float(np.std(w, ddof=1))
                 if std > _EPS and not np.isnan(std):
                     cusum += (float(v) - float(np.mean(w))) / std
                 if abs(cusum) > threshold:
-                    out.append((key[0], float(t), float(v), float(cusum)))
+                    out.append((key, float(t), float(v), float(cusum)))
                     cusum = 0.0
             window.append(float(v))
             if len(window) > window_size:
                 window.pop(0)
             last_t = float(t)
-        state.update((last_t, window, float(cusum)))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=["series_key", "t", "value", "cusum"])
+        return (last_t, window, float(cusum)), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return points_stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=JUMP_EVENT,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        points_stream, key_col, _step, JUMP_EVENT, _STATE_SCHEMA, state_ttl_ms
     )

@@ -1,36 +1,31 @@
-"""Custom STATEFUL streaming operator #6: live quantile-digest tier.
+"""Live quantile-digest tier.
 
-``applyInPandasWithState`` analog of ``operators.quantile
-.quantile_rollup``: per series the state is the OPEN bucket's raw
-values (bounded by points-per-bucket, the same boundedness the batch
-``collect_list`` relies on) plus the last accepted timestamp. Accepted
-arrivals are strictly time-increasing (shared out-of-order skip), so a
-bucket CLOSES when a later bucket's first point arrives; the closed
-bucket's values run through the SAME deterministic compression the
-batch tier uses (sort by value, tie-merge, equal-weight binning), so
-closed digests are **bit-equal to batch ``quantile_rollup`` rows** —
-arrays included (test-pinned across micro-batch splits). Null values
-are dropped, matching the batch filter.
+Keyed stateful stream (``streaming/stateful``), the analog of
+``operators.quantile.quantile_rollup``: per series the state is the OPEN
+bucket's raw values (bounded by points-per-bucket, the same boundedness
+the batch ``collect_list`` relies on) plus the last accepted timestamp.
+Accepted arrivals are strictly time-increasing, so a bucket CLOSES when a
+later bucket's first point arrives; the closed bucket's values run
+through the SAME deterministic compression the batch tier uses (sort by
+value, tie-merge, equal-weight binning), so closed digests are
+**bit-equal to batch ``quantile_rollup`` rows** — arrays included
+(test-pinned across micro-batch splits). Null values are dropped,
+matching the batch filter.
 
 Emitted rows feed the same downstream surface as the stored tier:
 ``quantile_cascade`` merges them upward, ``digest_quantiles`` evaluates
-percentiles. ``state_ttl_ms > 0`` flushes an idle series' open bucket
-(emit-on-timeout).
+percentiles.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.quantile import DEFAULT_K, _compress_scalar
 from ..schema import TIER_SECONDS
+from .stateful import bucket_runs, stateful_stream
 
 QUANTILE_BUCKET = T.StructType(
     [
@@ -51,8 +46,6 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("vals", T.ArrayType(T.DoubleType())),
     ]
 )
-
-_COLS = [f.name for f in QUANTILE_BUCKET.fields]
 
 
 def quantile_stream(
@@ -81,60 +74,35 @@ def quantile_stream(
             weights.tolist(),
         )
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            if state.exists:
-                last_t, bucket, vals = state.get
-                state.remove()
-                yield pd.DataFrame([_close(key[0], bucket, list(vals))], columns=_COLS)
-            else:
-                state.remove()
-            return
-        pdf = pd.concat(list(batches), ignore_index=True)
+    def _step(key, pdf, st):
         pdf = pdf.dropna(subset=[value_col]).sort_values(time_col)
         ts = pdf[time_col].to_numpy(dtype="float64")
         xs = pdf[value_col].to_numpy(dtype="float64")
-        if state.exists:
-            last_t, bucket, vals = state.get
-            vals = list(vals)
+        if st is not None:
+            last_t, bucket, vals = st[0], st[1], list(st[2])
             keep = ts > last_t
             ts, xs = ts[keep], xs[keep]
         else:
             bucket, vals = None, []
         if len(ts) == 0:
-            if state.exists and state_ttl_ms > 0:
-                state.setTimeoutDuration(state_ttl_ms)
-            return
+            return None, None
         buckets = (np.floor(ts / sec) * sec).astype(np.int64)
-        starts = np.concatenate(([0], np.flatnonzero(buckets[1:] != buckets[:-1]) + 1))
-        ends = np.concatenate((starts[1:], [len(xs)]))
         out = []
-        for s, e in zip(starts, ends):
+        for s, e in zip(*bucket_runs(buckets)):
             b = int(buckets[s])
             if bucket is not None and b != bucket:
-                out.append(_close(key[0], bucket, vals))
+                out.append(_close(key, bucket, vals))
                 vals = []
             bucket = b
             vals.extend(xs[s:e].tolist())
-        state.update((float(ts[-1]), bucket, vals))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=_COLS)
+        return (float(ts[-1]), bucket, vals), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return points_stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=QUANTILE_BUCKET,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        points_stream,
+        key_col,
+        _step,
+        QUANTILE_BUCKET,
+        _STATE_SCHEMA,
+        state_ttl_ms,
+        lambda key, st: _close(key, st[1], list(st[2])),
     )

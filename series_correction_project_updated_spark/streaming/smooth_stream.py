@@ -1,37 +1,32 @@
-"""Custom STATEFUL streaming operator #4: live EWM smoothing + anomaly
-scores.
+"""Live EWM smoothing + anomaly scores.
 
-``applyInPandasWithState`` analog of ``operators.smooth.ewma_smooth``:
-per series the state is just three doubles — (last_t, ewm mean, ewm
-var) — because the exponential recurrences fold any prefix into their
-carries. Each micro-batch continues the batch operator's blocked scans
-FROM the carried state, so arrivals are processed vectorized per batch
-(no per-row Python), and on a fully delivered in-order stream the
-emitted rows match the batch operator (same recurrences; block
-boundaries differ with micro-batch splits, so equality is to float
-reassociation — ~1e-12 relative, test-pinned — not bit-level).
+Keyed stateful stream (``streaming/stateful``), the analog of
+``operators.smooth.ewma_smooth``: per series the state is just three
+doubles — (last_t, ewm mean, ewm var) — because the exponential
+recurrences fold any prefix into their carries. Each micro-batch
+continues the batch operator's blocked scans FROM the carried state, so
+arrivals are processed vectorized per batch (no per-row Python), and on
+a fully delivered in-order stream the emitted rows match the batch
+operator (same recurrences; block boundaries differ with micro-batch
+splits, so equality is to float reassociation — ~1e-12 relative,
+test-pinned — not bit-level).
 
 Every arrival emits (series_key, t, value, ewma, ewm_std, ewm_z);
 ``ewm_z`` — the one-step-ahead standardized innovation — is the live
-anomaly signal. Out-of-order arrivals (t <= last_t) are skipped, the
-same policy as the gap/jump/funnel streams. Null values are dropped
-(match the batch operator by filtering upstream if null passthrough
-rows are needed). O(1) state per key; one shuffle on the key, exactly
-like the batch shape.
+anomaly signal. Null values are dropped (match the batch operator by
+filtering upstream if null passthrough rows are needed). O(1) state per
+key; one shuffle on the key, exactly like the batch shape.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from typing import Any
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.smooth import _lin_rec_blocked
+from .stateful import stateful_stream
 
 SMOOTH_EVENT = T.StructType(
     [
@@ -66,30 +61,17 @@ def ewma_stream(
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     c = 1.0 - alpha
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(batches), ignore_index=True)
+    def _step(key, pdf, st):
         pdf = pdf.dropna(subset=[value_col]).sort_values(time_col)
         ts = pdf[time_col].to_numpy(dtype="float64")
         xs = pdf[value_col].to_numpy(dtype="float64")
-        if state.exists:
-            last_t, y_prev, v_prev = state.get
+        if st is not None:
+            last_t, y_prev, v_prev = st
             keep = ts > last_t
             ts, xs = ts[keep], xs[keep]
-            fresh = False
-        else:
-            fresh = True
         if len(ts) == 0:
-            if state.exists and state_ttl_ms > 0:
-                state.setTimeoutDuration(state_ttl_ms)
-            return
-        if fresh:
+            return None, None
+        if st is None:
             y0, v0 = xs[0], 0.0
             y_rest = _lin_rec_blocked(alpha * xs[1:], c, y0)
             y = np.concatenate(([y0], y_rest))
@@ -108,12 +90,9 @@ def ewma_stream(
         prev_sd = np.sqrt(prev_v)
         with np.errstate(divide="ignore", invalid="ignore"):
             z = np.where(prev_sd >= 1e-12, diff / prev_sd, np.nan)
-        state.update((float(ts[-1]), float(y[-1]), float(v[-1])))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
-                "series_key": key[0],
+                "series_key": key,
                 "t": ts,
                 "value": xs,
                 "ewma": y,
@@ -121,16 +100,8 @@ def ewma_stream(
                 "ewm_z": z,
             }
         )
+        return (float(ts[-1]), float(y[-1]), float(v[-1])), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return points_stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=SMOOTH_EVENT,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        points_stream, key_col, _step, SMOOTH_EVENT, _STATE_SCHEMA, state_ttl_ms
     )

@@ -1,6 +1,6 @@
 """Streaming time-in-state: live state_agg tier.
 
-TWELFTH custom stateful operator — the live twin of
+Keyed stateful stream (``streaming/stateful``), the live twin of
 ``operators/stateagg.state_rollup``. A segment [t0, t1) only exists
 once the NEXT observation arrives, so the stream emits each segment's
 edge-split pieces at the moment the segment CLOSES; the pieces are
@@ -13,12 +13,10 @@ dependence. Summing emitted rows per (key, bucket, state) downstream
 reproduces the batch tier exactly on a fully delivered ordered stream
 (test-pinned across micro-batch splits).
 
-State per key: (last_t, last_state) — one frontier observation.
-Out-of-order rows (t ≤ last_t) are DROPPED (the frontier rule: a late
-observation would re-write an already-emitted segment; route late data
-through the batch ``refresh_tier`` path like every other tier stream).
-``max_gap_sec`` mirrors batch: an over-long dark segment emits nothing
-but still advances the frontier.
+State per key: (last_t, last_state) — one frontier observation; a late
+observation would re-write an already-emitted segment, so the frontier
+rule is what keeps emitted pieces final. ``max_gap_sec`` mirrors batch:
+an over-long dark segment emits nothing but still advances the frontier.
 
 Per micro-batch the work is one sort + one vectorized piece expansion
 per touched key — segments, never rows, in Python.
@@ -26,16 +24,12 @@ per touched key — segments, never rows, in Python.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schema import TIER_SECONDS
+from .stateful import quantized_t, stateful_stream
 
 STATE_PIECE = T.StructType(
     [
@@ -69,7 +63,7 @@ def state_rollup_stream(
 
     src = points_stream.select(
         points_stream[key_col].cast("string").alias("series_key"),
-        points_stream[time_col].cast("timestamp_ltz").cast("double").alias("t"),
+        quantized_t(time_col).alias("t"),
         points_stream[state_col].cast("string").alias("state"),
     ).where("state IS NOT NULL AND t IS NOT NULL")
 
@@ -85,44 +79,18 @@ def state_rollup_stream(
             b += sec
         return out
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_t, last_state = (None, None)
-        if state.exists:
-            last_t, last_state = state.get
-        pdf = pd.concat(list(batches), ignore_index=True).sort_values(
-            ["t", "state"], kind="mergesort"
-        )
+    def _step(key, pdf, st):
+        last_t, last_state = (None, None) if st is None else st
+        pdf = pdf.sort_values(["t", "state"], kind="mergesort")
         rows: list[tuple] = []
         for t, s in zip(pdf["t"].to_numpy("float64"), pdf["state"]):
             if last_t is not None:
                 if t <= last_t:
-                    continue  # frontier rule: late/dup rows to batch refresh
-                rows.extend(_pieces(key[0], last_t, float(t), last_state))
+                    continue
+                rows.extend(_pieces(key, last_t, float(t), last_state))
             last_t, last_state = float(t), s
-        state.update((last_t, last_state))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["series_key", "bucket_start", "state", "duration_sec"]
-            )
+        return (last_t, last_state), rows
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
-    return src.groupBy("series_key").applyInPandasWithState(
-        _update,
-        outputStructType=STATE_PIECE,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        src, "series_key", _step, STATE_PIECE, _STATE_SCHEMA, state_ttl_ms
     )

@@ -1,13 +1,10 @@
-"""Custom STATEFUL streaming operator #10: live 2D-moment stats tier.
+"""Live 2D-moment stats tier.
 
-``applyInPandasWithState`` analog of ``operators.stats.stats_rollup``
-(time-regression mode): per series the state is ONE OPEN BUCKET's
-moment vector (n, sx, sy, sxx, syy, sxy) with x bucket-relative, the
-same precision contract as the batch tier (epoch² never enters a
-double). Moment sums commute semantically, so — like the top-k and
-histogram streams — out-of-order rows INSIDE the open bucket are
-accepted; only the bucket frontier is monotone (already-closed buckets
-skip to the batch ``refresh_tier`` path).
+Keyed stateful stream (``streaming/stateful``), the analog of
+``operators.stats.stats_rollup`` (time-regression mode): per series the
+state is ONE OPEN BUCKET's moment vector (n, sx, sy, sxx, syy, sxy) with
+x bucket-relative, the same precision contract as the batch tier
+(epoch² never enters a double). Only the bucket frontier is monotone.
 
 Exactness: n is exact; the five float sums match the batch JVM
 aggregate to reassociation (~1e-12 relative, the same law the batch
@@ -21,23 +18,17 @@ uses, and x², y², x·y are IEEE products either way.
 Per batch the update is one vectorized pass: np sums per touched
 bucket segment — Python touches segments, never rows. Closed rows
 feed ``stats_cascade`` / ``stats_eval`` unchanged.
-
-``state_ttl_ms > 0`` flushes the open bucket when a series goes idle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schema import TIER_SECONDS
+from .stateful import bucket_runs, quantized_t, stateful_stream
 
 STATS_BUCKET = T.StructType(
     [
@@ -64,8 +55,6 @@ _STATE_SCHEMA = T.StructType(
     ]
 )
 
-_COLS = [f.name for f in STATS_BUCKET.fields]
-
 
 def stats_stream(
     points_stream: DataFrame,
@@ -80,37 +69,21 @@ def stats_stream(
     close."""
     sec = TIER_SECONDS[tier]
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            if state.exists:
-                row = (key[0], *state.get)
-                state.remove()
-                yield pd.DataFrame([row], columns=_COLS)
-            else:
-                state.remove()
-            return
-        pdf = pd.concat(list(batches), ignore_index=True).dropna(subset=["_y"])
-        open_st = list(state.get) if state.exists else None
+    def _step(key, pdf, st):
+        pdf = pdf.dropna(subset=["_y"])
+        open_st = list(st) if st is not None else None
         if open_st is not None:
             pdf = pdf[pdf["_bucket"] >= open_st[0]]
         if len(pdf) == 0:
-            if open_st is not None and state_ttl_ms > 0:
-                state.setTimeoutDuration(state_ttl_ms)
-            return
+            return None, None
 
         buckets = pdf["_bucket"].to_numpy(dtype=np.int64)
         xs = pdf["_x"].to_numpy(dtype=np.float64)
         ys = pdf["_y"].to_numpy(dtype=np.float64)
         order = np.argsort(buckets, kind="stable")
         buckets, xs, ys = buckets[order], xs[order], ys[order]
-        starts = np.concatenate(([0], np.flatnonzero(buckets[1:] != buckets[:-1]) + 1))
-        ends = np.concatenate((starts[1:], [len(buckets)]))
         out = []
-        for s, e in zip(starts, ends):
+        for s, e in zip(*bucket_runs(buckets)):
             b = int(buckets[s])
             x, y = xs[s:e], ys[s:e]
             seg = (
@@ -125,22 +98,13 @@ def stats_stream(
                 open_st = [b] + [a + d for a, d in zip(open_st[1:], seg)]
                 continue
             if open_st is not None:
-                out.append((key[0], *open_st))
+                out.append((key, *open_st))
             open_st = [b, *seg]
-        state.update(tuple(open_st))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=_COLS)
+        return tuple(open_st), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
     # identical per-point arithmetic to stats_rollup: t quantized by the
     # same cast chain, x bucket-relative in the same JVM expression
-    t = F.col(time_col).cast("timestamp_ltz").cast("double")
+    t = quantized_t(time_col)
     bucket = (F.floor(t / sec) * sec).cast("long")
     pre = points_stream.where(F.col(value_col).cast("double").isNotNull()).select(
         F.col(key_col),
@@ -148,10 +112,12 @@ def stats_stream(
         (t - bucket.cast("double")).alias("_x"),
         F.col(value_col).cast("double").alias("_y"),
     )
-    return pre.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=STATS_BUCKET,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        pre,
+        key_col,
+        _step,
+        STATS_BUCKET,
+        _STATE_SCHEMA,
+        state_ttl_ms,
+        lambda key, st: (key, *st),
     )

@@ -1,14 +1,12 @@
-"""Custom STATEFUL streaming operator #6: live time-weighted-average tier.
+"""Live time-weighted-average tier.
 
-``applyInPandasWithState`` analog of
+Keyed stateful stream (``streaming/stateful``), the analog of
 ``operators.timeweight.time_weighted_rollup``: per series the state is
 the LAST ACCEPTED POINT plus ONE OPEN BUCKET (integral, covered_sec).
-Accepted arrivals are strictly time-increasing (out-of-order rows are
-skipped — the shared stream policy; late data reconciles through the
-batch ``refresh_tier`` path), so every segment between consecutive
-points extends the time frontier, and a bucket CLOSES exactly when the
-frontier moves past its right edge: no future segment can start before
-the frontier, so closed buckets are final.
+Accepted arrivals are strictly time-increasing, so every segment between
+consecutive points extends the time frontier, and a bucket CLOSES
+exactly when the frontier moves past its right edge: no future segment
+can start before the frontier, so closed buckets are final.
 
 Exactness: the batch operator splits each adjacent-point segment at the
 bucket edges it crosses and SUMS piece areas per (key, bucket) in time
@@ -33,26 +31,19 @@ under which the batch and stream paths agree.
 
 Per batch the piece expansion is vectorized (``np.repeat`` over
 buckets-spanned counts); Python touches bucket segments (≤ buckets
-observed per key per batch), never rows.
-
-``state_ttl_ms > 0`` additionally FLUSHES the open bucket when a series
-goes idle (emit-on-timeout), trading the exact close-on-frontier rule
-for bounded emission delay.
+observed per key per batch), never rows. A timeout flush skips a
+zero-covered open bucket, as a frontier close does.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schema import TIER_SECONDS
+from .stateful import bucket_runs, left_fold, quantized_t, stateful_stream
 
 TW_BUCKET = T.StructType(
     [
@@ -73,15 +64,6 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("covered_sec", T.DoubleType()),
     ]
 )
-
-_COLS = [f.name for f in TW_BUCKET.fields]
-
-
-def _fold(seed: float, xs: np.ndarray) -> float:
-    """Strict left fold (ufunc.accumulate — never pairwise), seeded."""
-    if len(xs) == 0:
-        return seed
-    return float(np.cumsum(np.concatenate(([seed], xs)))[-1])
 
 
 def timeweight_stream(
@@ -104,34 +86,19 @@ def timeweight_stream(
     def _close(key, b: int, integral: float, covered: float) -> tuple:
         return (key, b, integral, covered, integral / covered)
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            if state.exists:
-                lt, lv, b, integral, covered = state.get
-                state.remove()
-                if covered > 0:
-                    yield pd.DataFrame(
-                        [_close(key[0], b, integral, covered)], columns=_COLS
-                    )
-            else:
-                state.remove()
-            return
-        pdf = pd.concat(list(batches), ignore_index=True)
+    def _flush(key, st) -> tuple | None:
+        _lt, _lv, b, integral, covered = st
+        return _close(key, b, integral, covered) if covered > 0 else None
+
+    def _step(key, pdf, st):
         pdf = pdf.dropna(subset=[value_col]).sort_values(time_col)
         ts = pdf[time_col].to_numpy(dtype="float64")
         xs = pdf[value_col].to_numpy(dtype="float64")
-        st = list(state.get) if state.exists else None
         if st is not None:
             keep = ts > st[0]
             ts, xs = ts[keep], xs[keep]
         if len(ts) == 0:
-            if st is not None and state_ttl_ms > 0:
-                state.setTimeoutDuration(state_ttl_ms)
-            return
+            return None, None
 
         # segments between consecutive accepted points (carry included)
         if st is not None:
@@ -147,9 +114,7 @@ def timeweight_stream(
         t0, v0, t1, v1, dt = t0[seg_keep], v0[seg_keep], t1[seg_keep], v1[seg_keep], dt[seg_keep]
 
         out = []
-        open_b = st[2] if st is not None else None
-        open_int = st[3] if st is not None else 0.0
-        open_cov = st[4] if st is not None else 0.0
+        open_b, open_int, open_cov = (None, 0.0, 0.0) if st is None else st[2:]
 
         if len(t0) > 0:
             b0 = (np.floor(t0 / sec) * sec).astype(np.int64)
@@ -174,20 +139,16 @@ def timeweight_stream(
 
             # bucket segments in piece (= time) order; fold each with the
             # carry so float association matches the batch hash-agg fold
-            if len(edge) > 0:
-                starts = np.concatenate(
-                    ([0], np.flatnonzero(edge[1:] != edge[:-1]) + 1)
-                )
-                ends = np.concatenate((starts[1:], [len(edge)]))
-                for s, e in zip(starts, ends):
-                    bkt = int(edge[s])
-                    if open_b is not None and bkt != open_b:
-                        if open_cov > 0:
-                            out.append(_close(key[0], open_b, open_int, open_cov))
-                        open_int, open_cov = 0.0, 0.0
-                    open_b = bkt
-                    open_int = _fold(open_int, area[s:e])
-                    open_cov = _fold(open_cov, width[s:e])
+            starts, ends = bucket_runs(edge) if len(edge) > 0 else ((), ())
+            for s, e in zip(starts, ends):
+                bkt = int(edge[s])
+                if open_b is not None and bkt != open_b:
+                    if open_cov > 0:
+                        out.append(_close(key, open_b, open_int, open_cov))
+                    open_int, open_cov = 0.0, 0.0
+                open_b = bkt
+                open_int = left_fold(open_int, area[s:e])
+                open_cov = left_fold(open_cov, width[s:e])
 
         # frontier rule: the open bucket is the one containing the last
         # accepted point (zero-covered when the frontier sits exactly on
@@ -195,32 +156,18 @@ def timeweight_stream(
         frontier_b = int(np.floor(ts[-1] / sec) * sec)
         if open_b is not None and frontier_b != open_b:
             if open_cov > 0:
-                out.append(_close(key[0], open_b, open_int, open_cov))
+                out.append(_close(key, open_b, open_int, open_cov))
             open_b, open_int, open_cov = frontier_b, 0.0, 0.0
         elif open_b is None:
             open_b = frontier_b
+        return (float(ts[-1]), float(xs[-1]), open_b, open_int, open_cov), out
 
-        state.update((float(ts[-1]), float(xs[-1]), open_b, open_int, open_cov))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=_COLS)
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
     # identical JVM quantization to the batch operator's first projection
     quantized = points_stream.select(
         F.col(key_col).alias(key_col),
-        F.col(time_col).cast("timestamp_ltz").cast("double").alias(time_col),
+        quantized_t(time_col).alias(time_col),
         F.col(value_col).cast("double").alias(value_col),
     )
-    return quantized.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=TW_BUCKET,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        quantized, key_col, _step, TW_BUCKET, _STATE_SCHEMA, state_ttl_ms, _flush
     )

@@ -1,16 +1,12 @@
-"""Custom STATEFUL streaming operator #7: live heavy-hitters (top-k)
-tier.
+"""Live heavy-hitters (top-k) tier.
 
-``applyInPandasWithState`` analog of ``operators.topk.topk_rollup``:
-per (key) the state is ONE OPEN BUCKET holding EXACT item counts (the
-batch path's in-bucket counts are exact too — a JVM hash aggregate —
-so the live path stores the same thing and ``err`` is 0/max-dropped at
-close, identical semantics). A bucket CLOSES when a row for a LATER
-bucket arrives; rows for already-closed buckets are skipped (late data
-reconciles through the batch ``refresh_tier``/cascade path). Within the
-open bucket arrival ORDER is irrelevant (counting commutes), so unlike
-the integral/counter streams this one accepts out-of-order rows inside
-the open bucket — only the bucket frontier is monotone.
+Keyed stateful stream (``streaming/stateful``), the analog of
+``operators.topk.topk_rollup``: per (key) the state is ONE OPEN BUCKET
+holding EXACT item counts (the batch path's in-bucket counts are exact
+too — a JVM hash aggregate — so the live path stores the same thing and
+``err`` is 0/max-dropped at close, identical semantics). A bucket CLOSES
+when a row for a LATER bucket arrives; only the bucket frontier is
+monotone.
 
 Exactness: closed buckets are **bit-equal** to ``topk_rollup`` rows
 (test-pinned across micro-batch splits): counts are exact longs, the
@@ -25,21 +21,16 @@ item).size`` — Python touches (bucket, distinct-item) cells, never rows.
 
 ``key_col=None`` (global rankings) routes the whole stream through one
 state key — fine for tests/small streams; shard by a real key at scale.
-``state_ttl_ms > 0`` flushes the open bucket when a key goes idle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schema import TIER_SECONDS
+from .stateful import quantized_t, stateful_stream
 
 _ITEM = T.StructType(
     [
@@ -86,10 +77,8 @@ def topk_stream(
     (key?, bucket_start, items[struct(item, lo, hi)], err, n) rows as
     buckets close."""
     sec = TIER_SECONDS[tier]
-    out_schema = _out_schema(key_col)
-    out_cols = [f.name for f in out_schema.fields]
 
-    def _close(key_vals: tuple, bucket: int, cnts: dict[str, int]) -> tuple:
+    def _close(key, bucket: int, cnts: dict[str, int]) -> tuple:
         # replicate sort_array(struct(hi, lo, item), desc): hi desc,
         # lo desc (== hi here), item code-point desc
         ranked = sorted(
@@ -100,71 +89,41 @@ def topk_stream(
         err = float(max((c for _i, c in dropped), default=0))
         items = [(i, float(c), float(c)) for i, c in kept]
         n = sum(cnts.values())
-        return (*key_vals, bucket, items, err, n)
+        return (*((key,) if key_col else ()), bucket, items, err, n)
 
-    def _update(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        key_vals = key if key_col else ()
-        if state.hasTimedOut:
-            if state.exists:
-                b, its, cs = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    [_close(key_vals, b, dict(zip(its, cs)))], columns=out_cols
-                )
-            else:
-                state.remove()
-            return
-        pdf = pd.concat(list(batches), ignore_index=True)
+    def _step(key, pdf, st):
         pdf = pdf.dropna(subset=["_item"])
-        if state.exists:
-            b_open, its, cs = state.get
-            cnts = dict(zip(its, (int(c) for c in cs)))
+        if st is not None:
+            b_open, cnts = st[0], dict(zip(st[1], (int(c) for c in st[2])))
+            pdf = pdf[pdf["_bucket"] >= b_open]
         else:
             b_open, cnts = None, {}
-        if b_open is not None:
-            pdf = pdf[pdf["_bucket"] >= b_open]
         if len(pdf) == 0:
-            if b_open is not None and state_ttl_ms > 0:
-                state.setTimeoutDuration(state_ttl_ms)
-            return
+            return None, None
 
         cells = pdf.groupby(["_bucket", "_item"], sort=True).size()
         out = []
         for (b, item), c in cells.items():
             b = int(b)
             if b_open is not None and b != b_open:
-                out.append(_close(key_vals, b_open, cnts))
+                out.append(_close(key, b_open, cnts))
                 cnts = {}
             b_open = b
             cnts[item] = cnts.get(item, 0) + int(c)
-        state.update((b_open, list(cnts.keys()), list(cnts.values())))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
+        return (b_open, list(cnts.keys()), list(cnts.values())), out
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
     sel = ([F.col(key_col)] if key_col else [F.lit("_global").alias("_g")]) + [
-        (F.floor(F.col(time_col).cast("timestamp_ltz").cast("double") / sec) * sec)
-        .cast("long")
-        .alias("_bucket"),
+        (F.floor(quantized_t(time_col) / sec) * sec).cast("long").alias("_bucket"),
         F.col(item_col).cast("string").alias("_item"),
     ]
-    grouped = events_stream.select(*sel).groupBy(key_col if key_col else "_g")
-    return grouped.applyInPandasWithState(
-        _update,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return stateful_stream(
+        events_stream.select(*sel),
+        key_col if key_col else "_g",
+        _step,
+        _out_schema(key_col),
+        _STATE_SCHEMA,
+        state_ttl_ms,
+        lambda key, st: _close(key, st[0], dict(zip(st[1], st[2]))),
     )
 
 

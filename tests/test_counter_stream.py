@@ -81,6 +81,50 @@ def test_closed_buckets_bit_equal_batch(spark, tmp_path):
         )
 
 
+def test_closed_buckets_bit_equal_batch_fractional_t(spark, tmp_path):
+    """Fractional timestamps: the stream quantizes t to µs with the batch
+    operator's own cast chain, so first_t/last_t (and everything else)
+    stay bit-equal to counter_rollup on every closed bucket."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pdf = _counter_pdf()
+    pdf["t"] = pdf["t"] + 0.1234567  # 1.7e9 + 13·i + 0.1234567: not µs-exact
+    src = tmp_path / "src_frac"
+    src.mkdir()
+    cut = len(pdf) // 2
+    for i, part in enumerate((pdf.iloc[:cut], pdf.iloc[cut:])):
+        pq.write_table(pa.Table.from_pandas(part), str(src / f"b{i}.parquet"))
+
+    stream = spark.readStream.schema(
+        spark.read.parquet(str(src)).schema
+    ).option("maxFilesPerTrigger", 1).parquet(str(src))
+    q = (
+        counter_stream(stream, "1m")
+        .writeStream.format("memory")
+        .queryName("counter_stream_frac")
+        .outputMode("append")
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+
+    keys = ["series_key", "bucket_start"]
+    got = spark.sql("SELECT * FROM counter_stream_frac").toPandas()
+    got = got.sort_values(keys).reset_index(drop=True)
+    batch = counter_rollup(spark.createDataFrame(pdf), "1m").toPandas()
+    batch = batch.sort_values(keys).reset_index(drop=True)
+    last = batch.groupby("series_key")["bucket_start"].transform("max")
+    closed = batch[batch["bucket_start"] != last].reset_index(drop=True)
+    assert len(got) == len(closed) > 30
+    # the input really is off the µs grid: batch first_t is never a raw t
+    assert not np.isin(closed["first_t"], pdf["t"]).any()
+    for col in got.columns:
+        np.testing.assert_array_equal(
+            got[col].to_numpy(), closed[col].to_numpy(), err_msg=col
+        )
+
+
 def test_out_of_order_rows_skipped(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -180,3 +180,29 @@ def test_roll_mean_std_matches_pandas_api():
             s = pd.Series(v)
             np.testing.assert_array_equal(got_m, s.rolling(window=w).mean().to_numpy())
             np.testing.assert_array_equal(got_s, s.rolling(window=w).std().to_numpy())
+
+
+def test_roll_mean_std_falls_back_on_private_api_drift(monkeypatch):
+    """A pandas release that changes the private ``roll_mean``/``roll_var``
+    signatures raises TypeError; the Series.rolling fallback must give
+    the fast path's output bit for bit."""
+    from series_correction_project_updated_spark.oracle import correction
+
+    rng = np.random.default_rng(3)
+    v = rng.normal(0.0, 1e3, 64)
+    v[[5, 17, 40]] = np.nan
+    v[20:26] = 42.0  # constant run → zero/negative var clamp
+    want = [correction._roll_mean_std(v, w) for w in (2, 5, 7)]
+
+    class _Drifted:
+        @staticmethod
+        def roll_mean(values, start, end, minp):
+            raise TypeError("roll_mean() takes 5 positional arguments")
+
+        roll_var = roll_mean
+
+    monkeypatch.setattr(correction, "_pd_window_aggregations", _Drifted)
+    for (want_m, want_s), w in zip(want, (2, 5, 7)):
+        got_m, got_s = correction._roll_mean_std(v, w)
+        np.testing.assert_array_equal(got_m, want_m)
+        np.testing.assert_array_equal(got_s, want_s)
