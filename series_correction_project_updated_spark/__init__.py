@@ -7,7 +7,7 @@ gaps, outliers, jumps/level-shifts — in sensor time series), re-expressed as:
 
 - declarative DataFrame plans for everything Catalyst can optimize
   (scans, filters, joins, time-bucket aggregations, lag/lead/cumsum windows),
-- one grouped-map Arrow kernel (``applyInPandas``) for the inherently
+- one segmenting Arrow kernel (``mapInPandas``) for the inherently
   sequential per-series logic (CUSUM jump scan, rolling exact median/MAD,
   linspace gap fill + pandas interpolation) — vectorized NumPy inside,
 - a new rollup + downsample + retention layer (1m/1h/1d continuous

@@ -1,52 +1,208 @@
-"""Distributed discontinuity correction — the grouped Arrow kernel.
+"""Distributed discontinuity correction — the segmenting Arrow kernel.
 
 The reference pipeline's per-series logic (CUSUM reset scan, rolling exact
 median/MAD, positional-index step composition — reference
 scripts/processor.py:540-572) is inherently sequential WITHIN a series but
-embarrassingly parallel ACROSS series. So the Spark mapping is one
-``groupBy(series_key).applyInPandas`` whose body is the shared single-node
-oracle (``oracle/correction.py``) — Arrow-vectorized, zero per-row Python.
+embarrassingly parallel ACROSS series. Every kernel entry is one call into
+``_correct_partitions``: one exchange that puts each segment (a series, or a
+(series, time-chunk) on the hot-series path) wholly in one partition, then
+one ``mapInPandas`` that runs the array-native single-node oracle
+(``oracle.process_tv``) once per segment and hands the corrected segments to
+an emitter — points, the finest rollup tier, or rollup plus lineage.
 
 Scale notes (100 TB / 10^12 rows):
-- Shuffle: exactly ONE hash shuffle on ``series_key``; everything downstream
-  (rollups) re-uses that clustering where possible. Off a bucketed point
-  store (sources/bucketstore) even that shuffle disappears —
+- Shuffle: exactly ONE hash shuffle on the segment columns; everything
+  downstream (rollups) re-uses that clustering where possible. Off a
+  bucketed point store (sources/bucketstore) even that shuffle disappears —
   ``assume_clustered=True`` makes the job scan → kernel, zero exchanges.
 - Skew: a hot url can dwarf others. ``correct_series_chunked`` splits long
   series into fixed TIME chunks (default 1 year, mirroring the reference's
   own year-file decomposition) processed independently, then realigns chunk
   boundaries with level shifts (scripts/apply_refined_corrections.py) via
   ``operators/level_shift.py``.
-- Memory: ``correct_series`` concatenates each PARTITION into one pandas
-  frame, so its memory bound is partition size — size ``num_partitions`` so
-  rows_total/num_partitions fits comfortably in an executor's Python worker
-  (the default 4×parallelism gives ~32 MB frames at sf0.1; scale it with
-  input rows). For series too hot for any partition budget, use
-  ``correct_series_chunked``, whose bound is rows-per-(series, time-chunk).
+- Memory: the driver concatenates each PARTITION into one pandas frame, so
+  a task's memory bound is its partition size, rows_total/num_partitions.
+  The default partition count is 2× parallelism; pass ``num_partitions`` so
+  that quotient fits comfortably in an executor's Python worker. A series
+  too hot for one partition goes through ``correct_series_chunked``: its
+  segments are (series, time-chunk), so the hot series hashes over many
+  partitions, and its partition count follows
+  ``spark.sql.shuffle.partitions`` — raise that setting to shrink the bound.
 - Null vs NaN: Spark nulls become NaN inside Arrow (doubles) — the oracle is
   NaN-native, and output NaN maps back to NULL-free doubles or null as-is.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from functools import partial
+from typing import Any, Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..oracle import correction as oracle
 from ..oracle.global_mad import MAD_FLOOR, Z_CONST
-from ..schema import CORRECTED_POINTS
+from ..schema import CORRECTED_POINTS, ROLLUP, ROLLUP_WITH_LINEAGE, TIER_SECONDS
+
+#: one corrected segment: (segment key tuple, t_out, v_out, lineage stats)
+Segment = tuple[tuple, np.ndarray, np.ndarray, list]
+
+#: points emitters flush an Arrow batch once this many rows are buffered
+_POINTS_BATCH_ROWS = 262_144
+
+
+def _correct_partitions(
+    points: DataFrame,
+    segment_cols: tuple[str, ...],
+    config: dict[str, Any] | None,
+    emit: Callable[[Iterator[Segment]], Iterator[pd.DataFrame]],
+    schema: StructType | str,
+    num_partitions: int | None = None,
+    partitioner: str | None = "hash",
+) -> DataFrame:
+    """The one partition loop behind every kernel entry.
+
+    Clusters ``points`` (columns ``t``, ``value`` and ``segment_cols``) so
+    no segment straddles partitions: ``partitioner="hash"`` repartitions on
+    the segment columns, ``"range"`` range-partitions on them, ``None``
+    trusts the input's clustering. The default partition count is 2×
+    parallelism: small enough tasks to smooth group-size skew, large enough
+    to amortize per-task Arrow/Python setup (r6: 64 vs 128 partitions at
+    sf0.1/local[32] measured 3.1s vs 4.8s).
+
+    Per partition: one stable ``pd.factorize`` + ``argsort`` clusters the
+    rows by segment (segments in first-appearance order, rows in arrival
+    order), ``process_tv`` runs once per segment, and ``emit`` turns the
+    stream of ``(key, t_out, v_out, stats)`` into output frames.
+
+    Null keys: a row with a null in any segment column yields no output in
+    every entry — it is dropped here, before the kernel runs.
+    """
+    cfg = {**oracle.DEFAULT_CONFIG, **(config or {})}
+    if num_partitions is None:
+        num_partitions = points.sparkSession.sparkContext.defaultParallelism * 2
+    if partitioner is None:
+        clustered = points
+    elif partitioner == "range":
+        clustered = points.repartitionByRange(num_partitions, *segment_cols)
+    elif partitioner == "hash":
+        clustered = points.repartition(num_partitions, *segment_cols)
+    else:
+        raise ValueError(f"unknown partitioner: {partitioner!r}")
+
+    def _segments(chunks: list[pd.DataFrame]) -> Iterator[Segment]:
+        pdf = pd.concat(chunks, ignore_index=True)
+        chunks.clear()  # hold one copy of the partition, not two
+        keys = [pdf[c].to_numpy() for c in segment_cols]
+        t = pdf["t"].to_numpy(dtype=np.float64)
+        v = pdf["value"].to_numpy(dtype=np.float64)
+        del pdf
+        codes = _segment_codes(keys)
+        order = np.argsort(codes, kind="stable")
+        order = order[int((codes == -1).sum()) :]
+        t, v, codes = t[order], v[order], codes[order]
+        starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]]) if len(codes) else np.array([], dtype=np.int64)
+        ends = np.r_[starts[1:], len(codes)] if len(starts) else starts
+        for s, e in zip(starts, ends):
+            t_out, v_out, stats = oracle.process_tv(t[s:e], v[s:e], cfg)
+            yield tuple(k[order[s]] for k in keys), t_out, v_out, stats
+
+    def _partition(batches):
+        chunks = list(batches)
+        if chunks:
+            yield from emit(_segments(chunks))
+
+    return clustered.mapInPandas(_partition, schema=schema)
+
+
+def _segment_codes(keys: list[np.ndarray]) -> np.ndarray:
+    """Dense codes of the key tuples in first-appearance order; -1 where
+    any key is null (``pd.factorize``'s sentinel)."""
+    codes, _ = pd.factorize(keys[0])
+    for k in keys[1:]:
+        k_codes, k_uniques = pd.factorize(k)
+        valid = (codes != -1) & (k_codes != -1)
+        combined = codes * len(k_uniques) + k_codes
+        codes = np.full(len(combined), -1, dtype=np.intp)
+        codes[valid] = pd.factorize(combined[valid])[0]
+    return codes
+
+
+def _emit_points(segments: Iterator[Segment], key_cols: tuple[str, ...]) -> Iterator[pd.DataFrame]:
+    """Corrected rows in ~256k-row Arrow batches (large batches instead of
+    one per series). Gap-inserted rows carry interpolated values, or NaN
+    for an all-NaN series (the oracle mirrors the reference's gap rows,
+    scripts/discontinuity_utils.py:137-140)."""
+    buf: list[Segment] = []
+    buffered = 0
+    for seg in segments:
+        buf.append(seg)
+        buffered += len(seg[1])
+        if buffered >= _POINTS_BATCH_ROWS:
+            yield _points_frame(buf, key_cols)
+            buf, buffered = [], 0
+    if buf:
+        yield _points_frame(buf, key_cols)
+
+
+def _points_frame(buf: list[Segment], key_cols: tuple[str, ...]) -> pd.DataFrame:
+    lens = [len(t) for _, t, _, _ in buf]
+    frame = {
+        c: np.repeat(np.asarray([key[i] for key, _, _, _ in buf], dtype=object), lens)
+        for i, c in enumerate(key_cols)
+    }
+    frame["t"] = np.concatenate([t for _, t, _, _ in buf])
+    frame["value"] = np.concatenate([v for _, _, v, _ in buf])
+    return pd.DataFrame(frame)
+
+
+def _emit_rollup(segments: Iterable[Segment], sec: int) -> Iterator[pd.DataFrame]:
+    """The partition's tier buckets, aggregated in one vectorized pass."""
+    keys, ts_list, vs_list = [], [], []
+    for (key,), t_out, v_out, _stats in segments:
+        keys.append(key)
+        ts_list.append(t_out)
+        vs_list.append(v_out)
+    yield _bucket_rollup_partition(ts_list, vs_list, keys, sec)
+
+
+def _emit_rollup_lineage(segments: Iterator[Segment], sec: int) -> Iterator[pd.DataFrame]:
+    """Tier buckets plus per-series lineage rows, as one ``row_kind``
+    union frame per partition."""
+    roll_cols = ["bucket_start", "cnt", "vsum", "vmin", "vmax", "vfirst", "vlast"]
+    lin_cols = ["step", "n_detected", "n_rows_in", "n_rows_out", "detail"]
+    out_cols = ["series_key"] + roll_cols + lin_cols + ["row_kind"]
+    segments = list(segments)
+    (agg,) = _emit_rollup(segments, sec)
+    lin_rows = [
+        (key, st, int(d), int(i), int(o), det)
+        for (key,), _t, _v, stats in segments
+        for st, d, i, o, det in stats
+    ]
+    # the absent side's columns get explicit dtypes (nullable Int64 /
+    # float64 / object) so the concat is dtype-stable
+    agg["step"] = None
+    for c in ("n_detected", "n_rows_in", "n_rows_out"):
+        agg[c] = pd.array([None] * len(agg), dtype="Int64")
+    agg["detail"] = None
+    agg["row_kind"] = "rollup"
+    lin = pd.DataFrame(lin_rows, columns=["series_key"] + lin_cols)
+    for c in ("n_detected", "n_rows_in", "n_rows_out"):
+        lin[c] = lin[c].astype("Int64")
+    for c in ("bucket_start", "cnt"):
+        lin[c] = pd.array([None] * len(lin), dtype="Int64")
+    for c in ("vsum", "vmin", "vmax", "vfirst", "vlast"):
+        lin[c] = np.nan
+    lin["row_kind"] = "lineage"
+    yield pd.concat([agg[out_cols], lin[out_cols]], ignore_index=True)
 
 
 def correct_series(
     points: DataFrame,
     config: dict[str, Any] | None = None,
-    key_col: str = "series_key",
-    time_col: str = "t",
-    value_col: str = "value",
     num_partitions: int | None = None,
     assume_clustered: bool = False,
     partitioner: str = "hash",
@@ -57,7 +213,7 @@ def correct_series(
 
     Execution shape: ONE explicit hash shuffle on the series key (explicit
     ``repartition`` rather than groupBy's implicit exchange, for two scale
-    reasons), then ``mapInPandas`` with an in-pandas groupby:
+    reasons), then ``mapInPandas`` segmenting each partition in pandas:
 
     1. AQE's bytes-based partition coalescing is blind to Python cost — on a
        small-bytes/heavy-compute kernel stage it coalesces to ~1 task and
@@ -66,118 +222,56 @@ def correct_series(
        satisfies the clustering requirement, so no second exchange happens.
     2. ``groupBy().applyInPandas`` pays per-GROUP Arrow/pandas setup — ruinous
        for many small series. ``mapInPandas`` streams each partition as one
-       Arrow sequence and the kernel does a plain ``pandas.groupby`` inside
-       (hash partitioning guarantees no series straddles partitions).
+       Arrow sequence and the driver segments it in-process (hash
+       partitioning guarantees no series straddles partitions).
 
-    Default partition count: 2× parallelism — small enough tasks to smooth
-    group-size skew, large enough to amortize per-task Arrow/Python setup
-    (r6: measured 64 vs 128 partitions at sf0.1/local[32]: 3.1s vs 4.8s —
-    per-task fixed cost dominates shuffle-size effects at this input size;
-    extreme per-series skew is ``correct_series_chunked``'s job either way).
+    ``assume_clustered``: the caller guarantees no series straddles input
+    partitions (a bucketed store read via sources/bucketstore — the
+    write-time shuffle already clustered by key), so the kernel's one
+    exchange disappears and the whole job is scan → kernel. The partition
+    count (and so the pandas memory bound) is then the store's bucket
+    count, fixed at write time.
+
+    ``partitioner="range"``: cluster with ``repartitionByRange(key)``
+    instead of a hash exchange. Same whole-series-per-partition guarantee,
+    but partitions come out ORDERED by key, so a caller that needs globally
+    sorted output can follow the kernel with a shuffle-free
+    ``sortWithinPartitions(key, t)`` instead of a global orderBy. That
+    matters because gap-fill EXPANDS the data — the range sampling here
+    reads the small pre-expansion input, where an orderBy after the kernel
+    would sample AND shuffle the multiplied output (measured 9.3s → ~4s on
+    q_gapfill_linear at sf0.1, whose 100k input rows gap-fill to 3.6M
+    output rows).
     """
-    cfg = {**oracle.DEFAULT_CONFIG, **(config or {})}
-    if num_partitions is None:
-        num_partitions = points.sparkSession.sparkContext.defaultParallelism * 2
-
-    def _process_partition(batches):
-        # r6 shape: one factorize + stable argsort clusters the partition by
-        # key (same group order and intra-group row order as the former
-        # pandas ``groupby(sort=False)``), each series runs through the
-        # array-native ``process_tv`` (no per-series frame construction),
-        # and output is yielded in ~256k-row batches (large Arrow batches
-        # instead of one per series, memory still bounded per partition).
-        # Gap-inserted rows carry NaN values; the key column is rebuilt by
-        # ``np.repeat`` (the oracle mirrors the reference's all-NaN gap
-        # rows, scripts/discontinuity_utils.py:137-140).
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        keys = pdf[key_col].to_numpy()
-        t = pdf[time_col].to_numpy(dtype=np.float64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        del pdf, chunks
-        codes, uniques = pd.factorize(keys)  # -1 for null keys (groupby drops them)
-        order = np.argsort(codes, kind="stable")
-        order = order[int((codes == -1).sum()) :]
-        t, v, codes = t[order], v[order], codes[order]
-        starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]]) if len(codes) else np.array([], dtype=np.int64)
-        ends = np.r_[starts[1:], len(codes)] if len(starts) else starts
-        key_arr = np.asarray(uniques, dtype=object)
-        buf_t, buf_v, buf_k, buf_lens, buffered = [], [], [], [], 0
-        for s, e in zip(starts, ends):
-            t_out, v_out, _ = oracle.process_tv(t[s:e], v[s:e], cfg)
-            buf_t.append(t_out)
-            buf_v.append(v_out)
-            buf_k.append(key_arr[codes[s]])
-            buf_lens.append(len(t_out))
-            buffered += len(t_out)
-            if buffered >= 262_144:
-                yield pd.DataFrame(
-                    {
-                        "series_key": np.repeat(np.asarray(buf_k, dtype=object), buf_lens),
-                        "t": np.concatenate(buf_t),
-                        "value": np.concatenate(buf_v),
-                    }
-                )
-                buf_t, buf_v, buf_k, buf_lens, buffered = [], [], [], [], 0
-        if buf_lens:
-            yield pd.DataFrame(
-                {
-                    "series_key": np.repeat(np.asarray(buf_k, dtype=object), buf_lens),
-                    "t": np.concatenate(buf_t),
-                    "value": np.concatenate(buf_v),
-                }
-            )
-
-    # assume_clustered: the caller guarantees no series straddles input
-    # partitions (a bucketed store read via sources/bucketstore — the
-    # write-time shuffle already clustered by key), so the kernel's one
-    # exchange disappears and the whole job is scan → kernel. The partition
-    # count (and so the pandas memory bound) is then the store's bucket
-    # count, fixed at write time.
-    # partitioner="range": cluster with repartitionByRange(key) instead of a
-    # hash exchange. Same whole-series-per-partition guarantee (equal keys
-    # always land in one range partition), but partitions come out ORDERED by
-    # key, so a caller that needs globally sorted output can follow the
-    # kernel with a shuffle-free sortWithinPartitions(key, t) instead of a
-    # global orderBy. That matters because gap-fill EXPANDS the data — the
-    # range sampling here reads the small pre-expansion input, where an
-    # orderBy after the kernel would sample AND shuffle the multiplied
-    # output (measured 9.3s → ~4s on q_gapfill_linear at sf0.1, whose
-    # 100k input rows gap-fill to 3.6M output rows).
-    if assume_clustered:
-        clustered = points
-    elif partitioner == "range":
-        clustered = points.repartitionByRange(num_partitions, key_col)
-    elif partitioner == "hash":
-        clustered = points.repartition(num_partitions, key_col)
-    else:
-        raise ValueError(f"unknown partitioner: {partitioner!r}")
-    return clustered.mapInPandas(_process_partition, schema=CORRECTED_POINTS)
+    return _correct_partitions(
+        points,
+        ("series_key",),
+        config,
+        partial(_emit_points, key_cols=("series_key",)),
+        CORRECTED_POINTS,
+        num_partitions,
+        None if assume_clustered else partitioner,
+    )
 
 
 def correct_and_rollup(
     points: DataFrame,
     tier: str = "1m",
     config: dict[str, Any] | None = None,
-    key_col: str = "series_key",
-    time_col: str = "t",
-    value_col: str = "value",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Correction kernel FUSED with the finest rollup tier — the production
     fast path for the pipeline's first stage.
 
     Equivalent to ``rollup(correct_series(points), tier)`` but with a far
-    better physical plan: each series is already a time-sorted pandas frame
-    inside the kernel, so the bucket aggregation is one vectorized
-    ``groupby`` there — first/last read straight off the sort order, and the
-    job needs NO post-kernel shuffle and no JVM aggregation at all. The
-    staged form pays a second 10^12-row shuffle and, worse, its
-    ``min_by``/``max_by`` aggregates run on ObjectHashAggregate, which
-    sort-falls-back and spills on high-cardinality buckets (measured 2.2×
-    the stage time at 12.8M points).
+    better physical plan: each series is already time-sorted inside the
+    kernel, so the bucket aggregation is one vectorized pass there —
+    first/last read straight off the sort order, and the job needs NO
+    post-kernel shuffle and no JVM aggregation at all. The staged form pays
+    a second 10^12-row shuffle and, worse, its ``min_by``/``max_by``
+    aggregates run on ObjectHashAggregate, which sort-falls-back and spills
+    on high-cardinality buckets (measured 2.2× the stage time at 12.8M
+    points).
 
     Aggregate semantics match ``operators.rollup.rollup`` exactly: cnt/min/
     max skip missing values, an all-missing bucket keeps a null vsum, and
@@ -186,41 +280,67 @@ def correct_and_rollup(
     pandas ``first``). vsum may differ from the staged form in the last ulp
     (pairwise vs sequential float association); tests bound it.
     """
-    from ..schema import ROLLUP, TIER_SECONDS
+    emit = partial(_emit_rollup, sec=TIER_SECONDS[tier])
+    return _correct_partitions(points, ("series_key",), config, emit, ROLLUP, num_partitions)
 
-    sec = TIER_SECONDS[tier]
-    cfg = {**oracle.DEFAULT_CONFIG, **(config or {})}
-    if num_partitions is None:
-        num_partitions = points.sparkSession.sparkContext.defaultParallelism * 2
 
-    def _process_partition(batches):
-        # r6: factorize + array-native process_tv (see correct_series)
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        karr = pdf[key_col].to_numpy()
-        t = pdf[time_col].to_numpy(dtype=np.float64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        del pdf, chunks
-        codes, uniques = pd.factorize(karr)
-        order = np.argsort(codes, kind="stable")
-        order = order[int((codes == -1).sum()) :]
-        t, v, codes = t[order], v[order], codes[order]
-        starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]]) if len(codes) else np.array([], dtype=np.int64)
-        ends = np.r_[starts[1:], len(codes)] if len(starts) else starts
-        key_arr = np.asarray(uniques, dtype=object)
-        ts_list, vs_list, keys = [], [], []
-        for s, e in zip(starts, ends):
-            t_out, v_out, _ = oracle.process_tv(t[s:e], v[s:e], cfg)
-            ts_list.append(t_out)
-            vs_list.append(v_out)
-            keys.append(key_arr[codes[s]])
-        yield _bucket_rollup_partition(ts_list, vs_list, keys, sec)
+def correct_rollup_lineage(
+    points: DataFrame,
+    tier: str = "1m",
+    config: dict[str, Any] | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """``correct_and_rollup`` that ALSO emits per-series lineage rows from
+    the SAME kernel execution — rollup and lineage in one pass over raw
+    points (the pipeline's dominant stage runs once, not twice).
 
-    return points.repartition(num_partitions, key_col).mapInPandas(
-        _process_partition, schema=ROLLUP
+    Lineage rows mirror the reference's correction-log record
+    (scripts/apply_refined_corrections.py:185-194) at series granularity:
+    one ``(step, n_detected, n_rows_in, n_rows_out, detail)`` row per step.
+
+    Output is a union-typed table discriminated by ``row_kind``:
+    ``'rollup'`` rows carry the ROLLUP columns (lineage columns null),
+    ``'lineage'`` rows carry the LINEAGE columns (rollup columns null).
+    Callers split with a filter; written ``partitionBy('row_kind')`` the
+    split is a pruned directory read, not a scan.
+    """
+    emit = partial(_emit_rollup_lineage, sec=TIER_SECONDS[tier])
+    return _correct_partitions(
+        points, ("series_key",), config, emit, ROLLUP_WITH_LINEAGE, num_partitions
     )
+
+
+def correct_series_chunked(
+    points: DataFrame,
+    config: dict[str, Any] | None = None,
+    chunk_sec: float = 365.0 * 86400,
+) -> DataFrame:
+    """Skew-capped variant: split each series into fixed time chunks (default
+    1 year, matching the reference's year-file decomposition), correct each
+    chunk independently in parallel, then realign chunk boundaries with the
+    reference's level-shift rule (tail-5 vs head-5 non-zero averages,
+    chained cumulatively — scripts/apply_refined_corrections.py:167-194).
+
+    Segments become (series_key, chunk), so one hot series spreads over
+    many tasks. The exchange has ``spark.sql.shuffle.partitions``
+    partitions, so a task holds about rows_total/shuffle-partitions rows;
+    raise that setting to shrink it. Trade-off vs ``correct_series``:
+    detection near chunk edges sees less context (exactly like the
+    reference's per-year files).
+    """
+    from .level_shift import apply_boundary_shifts
+
+    chunked = points.withColumn("chunk", (F.col("t") / F.lit(chunk_sec)).cast("long"))
+    key_cols = ("series_key", "chunk")
+    corrected = _correct_partitions(
+        chunked,
+        key_cols,
+        config,
+        partial(_emit_points, key_cols=key_cols),
+        "series_key string, chunk long, t double, value double",
+        int(points.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+    )
+    return apply_boundary_shifts(corrected).select("series_key", "t", "value")
 
 
 def _bucket_rollup_partition(ts_list: list, vs_list: list, keys: list, sec: int) -> pd.DataFrame:
@@ -317,136 +437,6 @@ def _bucket_rollup(out: pd.DataFrame, key, sec: int) -> pd.DataFrame:
     return agg[["series_key", "bucket_start", "cnt", "vsum", "vmin", "vmax", "vfirst", "vlast"]]
 
 
-def correct_rollup_lineage(
-    points: DataFrame,
-    tier: str = "1m",
-    config: dict[str, Any] | None = None,
-    key_col: str = "series_key",
-    time_col: str = "t",
-    value_col: str = "value",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """``correct_and_rollup`` that ALSO emits per-series lineage rows from
-    the SAME kernel execution — rollup and lineage in one pass over raw
-    points, instead of ``lineage_for`` re-running the detectors in a second
-    full pass (the pipeline's dominant stage, previously executed twice).
-
-    Output is a union-typed table discriminated by ``row_kind``:
-    ``'rollup'`` rows carry the ROLLUP columns (lineage columns null),
-    ``'lineage'`` rows carry the LINEAGE columns (rollup columns null).
-    Callers split with a filter; written ``partitionBy('row_kind')`` the
-    split is a pruned directory read, not a scan.
-    """
-    from ..schema import ROLLUP_WITH_LINEAGE, TIER_SECONDS
-
-    sec = TIER_SECONDS[tier]
-    cfg = {**oracle.DEFAULT_CONFIG, **(config or {})}
-    if num_partitions is None:
-        num_partitions = points.sparkSession.sparkContext.defaultParallelism * 2
-
-    roll_cols = ["bucket_start", "cnt", "vsum", "vmin", "vmax", "vfirst", "vlast"]
-    lin_cols = ["step", "n_detected", "n_rows_in", "n_rows_out", "detail"]
-    out_cols = ["series_key"] + roll_cols + lin_cols + ["row_kind"]
-
-    def _process_partition(batches):
-        # r6: factorize + array-native process_tv (see correct_series)
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        karr = pdf[key_col].to_numpy()
-        t = pdf[time_col].to_numpy(dtype=np.float64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        del pdf, chunks
-        codes, uniques = pd.factorize(karr)
-        order = np.argsort(codes, kind="stable")
-        order = order[int((codes == -1).sum()) :]
-        t, v, codes = t[order], v[order], codes[order]
-        starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]]) if len(codes) else np.array([], dtype=np.int64)
-        ends = np.r_[starts[1:], len(codes)] if len(starts) else starts
-        key_arr = np.asarray(uniques, dtype=object)
-        ts_list, vs_list, keys, lin_rows = [], [], [], []
-        for s, e in zip(starts, ends):
-            key = key_arr[codes[s]]
-            t_out, v_out, stats = oracle.process_tv(t[s:e], v[s:e], cfg)
-            ts_list.append(t_out)
-            vs_list.append(v_out)
-            keys.append(key)
-            lin_rows.extend(
-                (key, st, int(d), int(i), int(o), det) for st, d, i, o, det in stats
-            )
-        agg = _bucket_rollup_partition(ts_list, vs_list, keys, sec)
-        # the absent side's columns get explicit dtypes (nullable Int64 /
-        # float64 / object) so the concat is dtype-stable
-        agg["step"] = None
-        for c in ("n_detected", "n_rows_in", "n_rows_out"):
-            agg[c] = pd.array([None] * len(agg), dtype="Int64")
-        agg["detail"] = None
-        agg["row_kind"] = "rollup"
-        lin = pd.DataFrame(lin_rows, columns=["series_key"] + lin_cols)
-        for c in ("n_detected", "n_rows_in", "n_rows_out"):
-            lin[c] = lin[c].astype("Int64")
-        for c in ("bucket_start", "cnt"):
-            lin[c] = pd.array([None] * len(lin), dtype="Int64")
-        for c in ("vsum", "vmin", "vmax", "vfirst", "vlast"):
-            lin[c] = np.nan
-        lin["row_kind"] = "lineage"
-        yield pd.concat([agg[out_cols], lin[out_cols]], ignore_index=True)
-
-    return points.repartition(num_partitions, key_col).mapInPandas(
-        _process_partition, schema=ROLLUP_WITH_LINEAGE
-    )
-
-
-def correct_series_chunked(
-    points: DataFrame,
-    config: dict[str, Any] | None = None,
-    chunk_sec: float = 365.0 * 86400,
-    key_col: str = "series_key",
-    time_col: str = "t",
-    value_col: str = "value",
-) -> DataFrame:
-    """Skew-capped variant: split each series into fixed time chunks (default
-    1 year, matching the reference's year-file decomposition), correct each
-    chunk independently in parallel, then realign chunk boundaries with the
-    reference's level-shift rule (tail-5 vs head-5 non-zero averages,
-    chained cumulatively — scripts/apply_refined_corrections.py:167-194).
-
-    Group key becomes (series_key, chunk), so one hot series spreads over
-    many tasks. Trade-off vs ``correct_series``: detection near chunk edges
-    sees less context (exactly like the reference's per-year files).
-    """
-    from .level_shift import apply_boundary_shifts
-
-    chunked = points.withColumn("chunk", (F.col(time_col) / F.lit(chunk_sec)).cast("long"))
-
-    cfg = {**oracle.DEFAULT_CONFIG, **(config or {})}
-
-    def _kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        chunk = pdf["chunk"].iloc[0]
-        frame = pdf[[time_col, value_col]].rename(columns={time_col: "t", value_col: "value"})
-        out = oracle.process_series(frame, "t", "value", cfg)
-        out.insert(0, "series_key", key)
-        out.insert(1, "chunk", chunk)
-        return out[["series_key", "chunk", "t", "value"]]
-
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("series_key", T.StringType()),
-            T.StructField("chunk", T.LongType()),
-            T.StructField("t", T.DoubleType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    corrected = chunked.groupBy(key_col, "chunk").applyInPandas(_kernel, schema=schema)
-    return apply_boundary_shifts(
-        corrected, key_col=key_col, chunk_col="chunk", time_col="t", value_col="value"
-    ).select("series_key", "t", "value")
-
-
 def detect_gaps_native(
     points: DataFrame,
     threshold_factor: float = 3.0,
@@ -512,28 +502,3 @@ def global_mad_correct_native(
         )
         .drop("gmedian", "gmad")
     )
-
-
-def lineage_for(points: DataFrame, config: dict[str, Any] | None = None) -> DataFrame:
-    """Per-series lineage rows: what each correction step detected/changed.
-
-    Mirrors the reference's correction-log record
-    (scripts/apply_refined_corrections.py:185-194) at series granularity.
-    Standalone lineage-only job; the PIPELINE does not use this — it gets
-    the identical rows for free from ``correct_rollup_lineage``'s single
-    kernel pass (same ``process_series_with_stats`` underneath).
-    """
-    from ..schema import LINEAGE
-
-    cfg = {**oracle.DEFAULT_CONFIG, **(config or {})}
-
-    def _kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["series_key"].iloc[0]
-        frame = pdf[["t", "value"]]
-        _out, stats = oracle.process_series_with_stats(frame, "t", "value", cfg)
-        return pd.DataFrame(
-            [(key, s, int(d), int(i), int(o), det) for s, d, i, o, det in stats],
-            columns=["series_key", "step", "n_detected", "n_rows_in", "n_rows_out", "detail"],
-        )
-
-    return points.groupBy("series_key").applyInPandas(_kernel, schema=LINEAGE)

@@ -171,7 +171,6 @@ def recorrect_series(
     points: DataFrame,
     late: DataFrame,
     old_corrected: DataFrame,
-    key_col: str = "series_key",
     config: dict | None = None,
 ) -> DataFrame:
     """Re-run the correction kernel ONLY for series touched by ``late``.
@@ -185,9 +184,7 @@ def recorrect_series(
     """
     from .correct import correct_series
 
-    touched = late.select(F.col(key_col).alias(key_col)).distinct()
-    to_redo = points.join(F.broadcast(touched), key_col, "left_semi")
-    kept = old_corrected.join(F.broadcast(touched), key_col, "left_anti")
-    return kept.unionByName(
-        correct_series(to_redo, key_col=key_col, config=config)
-    )
+    touched = late.select("series_key").distinct()
+    to_redo = points.join(F.broadcast(touched), "series_key", "left_semi")
+    kept = old_corrected.join(F.broadcast(touched), "series_key", "left_anti")
+    return kept.unionByName(correct_series(to_redo, config=config))

@@ -3,7 +3,8 @@
 Pure pandas/NumPy, no Spark. This module is the one source of truth for the
 discontinuity-correction semantics: the Spark kernel in
 ``operators/correct.py`` executes these exact functions per series inside
-``applyInPandas``, and the parity tests assert Spark output == oracle output
+``mapInPandas`` (via ``process_tv``, the array-native form of the frame
+pipeline), and the parity tests assert Spark output == oracle output
 bit-for-bit.
 
 Semantics match the reference repo's observed behavior (citations are

@@ -2,6 +2,7 @@
 pipeline, level-shift chaining, and the streaming rollup."""
 
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -284,8 +285,8 @@ def test_fused_rollup_lineage_matches_staged(spark):
     from series_correction_project_updated_spark.operators.correct import (
         correct_and_rollup,
         correct_rollup_lineage,
-        lineage_for,
     )
+    from series_correction_project_updated_spark.oracle import correction as oracle
     from series_correction_project_updated_spark.sources.synth import (
         generate_pages,
         pages_to_series,
@@ -315,9 +316,17 @@ def test_fused_rollup_lineage_matches_staged(spark):
         .sort_values(roll_cols[:2])
         .reset_index(drop=True)
     )
+    # lineage reference: the frame pipeline per series, in pandas
+    lin_rows = []
+    for key, grp in points.toPandas().groupby("series_key"):
+        _out, stats = oracle.process_series_with_stats(grp[["t", "value"]], "t", "value")
+        lin_rows.extend((key, *row) for row in stats)
     want_lin = (
-        lineage_for(points).toPandas().sort_values(["series_key", "step"]).reset_index(drop=True)
+        pd.DataFrame(lin_rows, columns=lin_cols)
+        .sort_values(["series_key", "step"])
+        .reset_index(drop=True)
     )
+    assert len(want_lin) == 3 * 8
 
     pd.testing.assert_frame_equal(got_roll, want_roll, check_dtype=False)
     pd.testing.assert_frame_equal(got_lin, want_lin, check_dtype=False)
@@ -338,9 +347,10 @@ def test_pipeline_rejects_non_nested_tiers(spark, tmp_path):
 
 
 def test_hot_series_memory_bound_via_chunking(spark):
-    """Pins the memory-bound story documented in operators/correct.py: a
-    series too hot for one task is processed as (series, time-chunk) groups
-    — many bounded pandas frames instead of one giant one — and realigned."""
+    """Pins the hot-series story documented in operators/correct.py: a
+    series too hot for one task is processed as (series, time-chunk)
+    segments hashed over many partitions — a task holds its partition, not
+    the whole series — and realigned."""
     from series_correction_project_updated_spark.operators.correct import (
         correct_series_chunked,
     )
@@ -360,7 +370,21 @@ def test_hot_series_memory_bound_via_chunking(spark):
     n_groups = chunked.select("series_key", "chunk").distinct().count()
     assert n_groups > 20  # the hot series spreads over many kernel groups
 
-    out = correct_series_chunked(points, chunk_sec=86400.0).toPandas()
+    result = correct_series_chunked(points, chunk_sec=86400.0)
+    # the operator itself splits the hot series: every kernel MapInPandas is
+    # fed by an exchange hashing on (series_key, chunk), and no per-group
+    # frame path is planned
+    plan = result._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    kernels = [i for i, line in enumerate(lines) if "MapInPandas" in line]
+    assert kernels, plan
+    for i in kernels:
+        assert re.search(
+            r"Exchange hashpartitioning\(series_key#\d+, chunk#\d+L?, \d+\)", lines[i + 1]
+        ), plan
+    assert "FlatMapGroupsInPandas" not in plan
+
+    out = result.toPandas()
     # nothing corrected away, no rows lost, values untouched
     assert len(out) == n
     assert (out["value"] == 10.0).all()

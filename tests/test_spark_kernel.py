@@ -367,3 +367,40 @@ def test_outlier_method_variants_match_oracle(spark, series_pdf, method):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
     if method == "remove":
         assert want["value"].isna().any(), "remove mode should leave NaNs"
+
+
+@pytest.mark.parametrize(
+    "entry, n_out",
+    [
+        ("correct_series", 40),
+        ("correct_and_rollup", 40),
+        ("correct_rollup_lineage", 43),
+        ("correct_series_chunked", 40),
+    ],
+)
+def test_null_key_rows_yield_no_output(spark, entry, n_out):
+    """One null-key policy for every kernel entry: rows with a null
+    series_key are dropped, and the keyed series' output is unchanged."""
+    from series_correction_project_updated_spark.operators import correct
+
+    run = {
+        "correct_series": correct.correct_series,
+        "correct_and_rollup": lambda p: correct.correct_and_rollup(p, "1m"),
+        "correct_rollup_lineage": lambda p: correct.correct_rollup_lineage(p, "1m"),
+        "correct_series_chunked": lambda p: correct.correct_series_chunked(p, chunk_sec=86400.0),
+    }[entry]
+    t = [float(i * 3600) for i in range(40)]  # 40 hourly rows over two day-chunks
+    v = [1.0 + 0.01 * (i % 7) for i in range(40)]
+    keyed = pd.DataFrame({"series_key": "a", "t": t, "value": v})
+    null_keyed = keyed.assign(series_key=None)
+    schema = "series_key string, t double, value double"
+    got = run(spark.createDataFrame(pd.concat([null_keyed, keyed]), schema)).toPandas()
+    want = run(spark.createDataFrame(keyed, schema)).toPandas()
+    assert got["series_key"].notna().all()
+    assert len(got) == n_out
+    order = [c for c in ("row_kind", "series_key", "t", "bucket_start", "step") if c in got]
+    pd.testing.assert_frame_equal(
+        got.sort_values(order).reset_index(drop=True),
+        want.sort_values(order).reset_index(drop=True),
+        check_exact=True,
+    )
