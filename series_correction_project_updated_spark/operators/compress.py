@@ -6,6 +6,11 @@ buckets are near-regular, so most deltas-of-deltas are 0 ⇒ ~1 bit/ts) and
 one chosen aggregate column (Gorilla XOR). Grouped Arrow UDF: the executor
 sees whole chunks as numpy arrays, the driver never touches data.
 
+Memory: the encoder reads each partition through ``operators/_keyed`` —
+frames of whole (series, chunk) groups cut from the JVM-sorted Arrow
+batch stream — so a task holds about one Arrow batch plus its largest
+chunk, not its partition.
+
 Chunking: ``chunk_buckets`` buckets per payload — default 16384 (~11 days of
 1m buckets, ~2 years of 1h). Chunks need to be thousands of points for the
 vectorized encoder to amortize; sub-100-point chunks are dominated by NumPy
@@ -22,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions import compress as codec
 from ..schema import COMPRESSED, TIER_SECONDS
+from ._keyed import map_keyed
 
 
 def compress_rollup(
@@ -33,64 +39,54 @@ def compress_rollup(
 ) -> DataFrame:
     """rollup tier rows → (series_key, tier, chunk_start, codec, n_points, payload).
 
-    Execution shape: one explicit hash repartition on ``series_key`` then
-    ``mapInPandas`` with an in-pandas groupby — the same pattern (and for
-    the same reason) as the correction kernel: ``groupBy().applyInPandas``
-    pays per-GROUP Arrow/pandas setup, ruinous when chunks are small
-    relative to group count (measured ~2.4× on 16k × 267-bucket chunks).
-    Hash partitioning guarantees no (series, chunk) straddles partitions.
+    Execution shape: ``map_keyed`` on (series_key, chunk_start) — one
+    explicit hash repartition, a JVM sort by (series_key, chunk_start,
+    bucket_start), then ``mapInPandas`` over frames of whole chunks — the
+    same pattern (and for the same reason) as the correction kernel:
+    ``groupBy().applyInPandas`` pays per-GROUP Arrow/pandas setup, ruinous
+    when chunks are small relative to group count (measured ~2.4× on 16k ×
+    267-bucket chunks). Every chunk encodes independently, so payloads are
+    the same bytes at any partition count.
     """
     sec = TIER_SECONDS[tier]
     chunk_span = sec * chunk_buckets
-    if num_partitions is None:
-        # floor of 32 keeps per-partition pandas frames bounded even at low
-        # parallelism (each partition is concatenated into one frame)
-        num_partitions = max(tier_df.sparkSession.sparkContext.defaultParallelism * 2, 32)
 
     with_chunk = tier_df.withColumn(
         "chunk_start", (F.floor(F.col("bucket_start") / chunk_span) * chunk_span).cast("long")
     ).select("series_key", "chunk_start", "bucket_start", value_col)
 
-    def _encode_partition(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if len(pdf) == 0:
-            return
-        pdf = pdf.sort_values(["series_key", "chunk_start", "bucket_start"])
-        # batch-encode every (series, chunk) group in ONE flat pass
-        # (codec.encode_chunks): the former per-group pandas groupby loop
-        # paid ~20 small-numpy-call overheads per chunk — measured 2.5×
-        # per thread on the sf0.1 1m-tier distribution (1,500 × ~234-pt
-        # chunks, 530k → 1.32M pts/s), ~2.6× at 60-point chunks. Group
-        # boundaries come from the sorted key columns directly.
-        keys = pdf["series_key"].to_numpy()
-        cstarts = pdf["chunk_start"].to_numpy("int64")
-        ts_all = pdf["bucket_start"].to_numpy("int64")
-        vals_all = pdf[value_col].to_numpy("float64")
-        change = np.flatnonzero((keys[1:] != keys[:-1]) | (cstarts[1:] != cstarts[:-1])) + 1
-        offsets = np.concatenate([[0], change, [len(pdf)]]).astype(np.int64)
-        payloads = codec.encode_chunks(ts_all, vals_all, offsets)
-        g0 = offsets[:-1]  # first row of each group (ts sorted within)
-        g1 = offsets[1:] - 1  # last row — exact [t_min, t_max] bounds
-        yield pd.DataFrame(
-            {
-                "series_key": keys[g0],
-                "tier": tier,
-                "chunk_start": cstarts[g0],
-                # v2: 64-bit dod escape class (payload magic GOR2); v1
-                # payloads stay readable via decode_chunk's legacy branch
-                "codec": "gorilla-dod-xor-v2",
-                "n_points": (offsets[1:] - g0).astype(np.int64),
-                "t_min": ts_all[g0],
-                "t_max": ts_all[g1],
-                "payload": payloads,
-            }
-        )[["series_key", "tier", "chunk_start", "codec", "n_points", "t_min", "t_max", "payload"]]
+    def _encode(frames):
+        for pdf, offsets in frames:
+            # batch-encode every (series, chunk) group in ONE flat pass
+            # (codec.encode_chunks): the former per-group pandas groupby loop
+            # paid ~20 small-numpy-call overheads per chunk — measured 2.5×
+            # per thread on the sf0.1 1m-tier distribution (1,500 × ~234-pt
+            # chunks, 530k → 1.32M pts/s), ~2.6× at 60-point chunks.
+            keys = pdf["series_key"].to_numpy()
+            cstarts = pdf["chunk_start"].to_numpy("int64")
+            ts_all = pdf["bucket_start"].to_numpy("int64")
+            vals_all = pdf[value_col].to_numpy("float64")
+            payloads = codec.encode_chunks(ts_all, vals_all, offsets)
+            g0 = offsets[:-1]  # first row of each group (ts sorted within)
+            g1 = offsets[1:] - 1  # last row — exact [t_min, t_max] bounds
+            yield pd.DataFrame(
+                {
+                    "series_key": keys[g0],
+                    "tier": tier,
+                    "chunk_start": cstarts[g0],
+                    # v2: 64-bit dod escape class (payload magic GOR2); v1
+                    # payloads stay readable via decode_chunk's legacy branch
+                    "codec": "gorilla-dod-xor-v2",
+                    "n_points": (offsets[1:] - g0).astype(np.int64),
+                    "t_min": ts_all[g0],
+                    "t_max": ts_all[g1],
+                    "payload": payloads,
+                }
+            )[["series_key", "tier", "chunk_start", "codec", "n_points", "t_min", "t_max", "payload"]]
 
-    return with_chunk.repartition(num_partitions, "series_key").mapInPandas(
-        _encode_partition, schema=COMPRESSED
+    return map_keyed(
+        with_chunk, ("series_key", "chunk_start"), ("bucket_start",), _encode, COMPRESSED,
+        num_partitions,
     )
 
 

@@ -5,10 +5,11 @@ median/MAD, positional-index step composition — reference
 scripts/processor.py:540-572) is inherently sequential WITHIN a series but
 embarrassingly parallel ACROSS series. Every kernel entry is one call into
 ``_correct_partitions``: one exchange that puts each segment (a series, or a
-(series, time-chunk) on the hot-series path) wholly in one partition, then
-one ``mapInPandas`` that runs the array-native single-node oracle
-(``oracle.process_tv``) once per segment and hands the corrected segments to
-an emitter — points, the finest rollup tier, or rollup plus lineage.
+(series, time-chunk) on the hot-series path) wholly in one partition, a
+sort by segment within each partition, then one ``mapInPandas`` that runs
+the array-native single-node oracle (``oracle.process_tv``) once per
+segment and hands the corrected segments to an emitter — points, the
+finest rollup tier, or rollup plus lineage.
 
 Scale notes (100 TB / 10^12 rows):
 - Shuffle: exactly ONE hash shuffle on the segment columns; everything
@@ -20,22 +21,21 @@ Scale notes (100 TB / 10^12 rows):
   own year-file decomposition) processed independently, then realigns chunk
   boundaries with level shifts (scripts/apply_refined_corrections.py) via
   ``operators/level_shift.py``.
-- Memory: the driver concatenates each PARTITION into one pandas frame, so
-  a task's memory bound is its partition size, rows_total/num_partitions.
-  The default partition count is 2× parallelism; pass ``num_partitions`` so
-  that quotient fits comfortably in an executor's Python worker. A series
-  too hot for one partition goes through ``correct_series_chunked``: its
-  segments are (series, time-chunk), so the hot series hashes over many
-  partitions, and its partition count follows
-  ``spark.sql.shuffle.partitions`` — raise that setting to shrink the bound.
+- Memory: the kernel reads each partition through ``operators/_keyed``: a
+  JVM sort on the segment columns (it spills), then frames that each hold
+  only complete segments, cut from the Arrow batch stream. A task holds
+  about one Arrow batch plus its largest segment, not its partition. A
+  series too large for one Python worker goes through
+  ``correct_series_chunked``, whose segments are (series, time-chunk).
 - Null vs NaN: Spark nulls become NaN inside Arrow (doubles) — the oracle is
   NaN-native, and output NaN maps back to NULL-free doubles or null as-is.
 """
 
 from __future__ import annotations
 
-from functools import partial
-from typing import Any, Callable, Iterable, Iterator
+from functools import partial, reduce
+from operator import and_
+from typing import Any, Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -46,6 +46,7 @@ from pyspark.sql.types import StructType
 from ..oracle import correction as oracle
 from ..oracle.global_mad import MAD_FLOOR, Z_CONST
 from ..schema import CORRECTED_POINTS, ROLLUP, ROLLUP_WITH_LINEAGE, TIER_SECONDS
+from ._keyed import KeyedFrame, map_keyed
 
 #: one corrected segment: (segment key tuple, t_out, v_out, lineage stats)
 Segment = tuple[tuple, np.ndarray, np.ndarray, list]
@@ -65,139 +66,106 @@ def _correct_partitions(
 ) -> DataFrame:
     """The one partition loop behind every kernel entry.
 
-    Clusters ``points`` (columns ``t``, ``value`` and ``segment_cols``) so
-    no segment straddles partitions: ``partitioner="hash"`` repartitions on
-    the segment columns, ``"range"`` range-partitions on them, ``None``
-    trusts the input's clustering. The default partition count is 2×
-    parallelism: small enough tasks to smooth group-size skew, large enough
-    to amortize per-task Arrow/Python setup (r6: 64 vs 128 partitions at
-    sf0.1/local[32] measured 3.1s vs 4.8s).
-
-    Per partition: one stable ``pd.factorize`` + ``argsort`` clusters the
-    rows by segment (segments in first-appearance order, rows in arrival
-    order), ``process_tv`` runs once per segment, and ``emit`` turns the
-    stream of ``(key, t_out, v_out, stats)`` into output frames.
+    Clusters ``points`` (columns ``t``, ``value`` and ``segment_cols``) on
+    the segment columns through ``map_keyed`` (``partitioner`` as there),
+    runs ``process_tv`` once per segment of each series-complete frame, and
+    ``emit`` turns the stream of ``(key, t_out, v_out, stats)`` into output
+    frames. The JVM sort is on the segment columns only: rows of one
+    segment keep their arrival order, which is what ``process_tv``'s own
+    pandas-permutation time sort has always seen.
 
     Null keys: a row with a null in any segment column yields no output in
-    every entry — it is dropped here, before the kernel runs.
+    every entry — it is dropped in the JVM, before the exchange.
     """
     cfg = {**oracle.DEFAULT_CONFIG, **(config or {})}
-    if num_partitions is None:
-        num_partitions = points.sparkSession.sparkContext.defaultParallelism * 2
-    if partitioner is None:
-        clustered = points
-    elif partitioner == "range":
-        clustered = points.repartitionByRange(num_partitions, *segment_cols)
-    elif partitioner == "hash":
-        clustered = points.repartition(num_partitions, *segment_cols)
-    else:
-        raise ValueError(f"unknown partitioner: {partitioner!r}")
+    keyed = points.where(reduce(and_, [F.col(c).isNotNull() for c in segment_cols]))
 
-    def _segments(chunks: list[pd.DataFrame]) -> Iterator[Segment]:
-        pdf = pd.concat(chunks, ignore_index=True)
-        chunks.clear()  # hold one copy of the partition, not two
-        keys = [pdf[c].to_numpy() for c in segment_cols]
-        t = pdf["t"].to_numpy(dtype=np.float64)
-        v = pdf["value"].to_numpy(dtype=np.float64)
-        del pdf
-        codes = _segment_codes(keys)
-        order = np.argsort(codes, kind="stable")
-        order = order[int((codes == -1).sum()) :]
-        t, v, codes = t[order], v[order], codes[order]
-        starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]]) if len(codes) else np.array([], dtype=np.int64)
-        ends = np.r_[starts[1:], len(codes)] if len(starts) else starts
-        for s, e in zip(starts, ends):
-            t_out, v_out, stats = oracle.process_tv(t[s:e], v[s:e], cfg)
-            yield tuple(k[order[s]] for k in keys), t_out, v_out, stats
+    def _segments(frames: Iterator[KeyedFrame]) -> Iterator[Segment]:
+        for pdf, offsets in frames:
+            keys = [pdf[c].to_numpy() for c in segment_cols]
+            t = pdf["t"].to_numpy(dtype=np.float64)
+            v = pdf["value"].to_numpy(dtype=np.float64)
+            for s, e in zip(offsets[:-1], offsets[1:]):
+                t_out, v_out, stats = oracle.process_tv(t[s:e], v[s:e], cfg)
+                yield tuple(k[s] for k in keys), t_out, v_out, stats
 
-    def _partition(batches):
-        chunks = list(batches)
-        if chunks:
-            yield from emit(_segments(chunks))
-
-    return clustered.mapInPandas(_partition, schema=schema)
+    return map_keyed(
+        keyed, segment_cols, (), lambda frames: emit(_segments(frames)), schema, num_partitions,
+        partitioner,
+    )
 
 
-def _segment_codes(keys: list[np.ndarray]) -> np.ndarray:
-    """Dense codes of the key tuples in first-appearance order; -1 where
-    any key is null (``pd.factorize``'s sentinel)."""
-    codes, _ = pd.factorize(keys[0])
-    for k in keys[1:]:
-        k_codes, k_uniques = pd.factorize(k)
-        valid = (codes != -1) & (k_codes != -1)
-        combined = codes * len(k_uniques) + k_codes
-        codes = np.full(len(combined), -1, dtype=np.intp)
-        codes[valid] = pd.factorize(combined[valid])[0]
-    return codes
-
-
-def _emit_points(segments: Iterator[Segment], key_cols: tuple[str, ...]) -> Iterator[pd.DataFrame]:
-    """Corrected rows in ~256k-row Arrow batches (large batches instead of
-    one per series). Gap-inserted rows carry interpolated values, or NaN
-    for an all-NaN series (the oracle mirrors the reference's gap rows,
-    scripts/discontinuity_utils.py:137-140)."""
+def _batched(segments: Iterator[Segment]) -> Iterator[list[Segment]]:
+    """Corrected segments grouped until ~256k output rows are buffered
+    (large Arrow batches instead of one per series)."""
     buf: list[Segment] = []
     buffered = 0
     for seg in segments:
         buf.append(seg)
         buffered += len(seg[1])
         if buffered >= _POINTS_BATCH_ROWS:
-            yield _points_frame(buf, key_cols)
+            yield buf
             buf, buffered = [], 0
     if buf:
-        yield _points_frame(buf, key_cols)
+        yield buf
 
 
-def _points_frame(buf: list[Segment], key_cols: tuple[str, ...]) -> pd.DataFrame:
-    lens = [len(t) for _, t, _, _ in buf]
-    frame = {
-        c: np.repeat(np.asarray([key[i] for key, _, _, _ in buf], dtype=object), lens)
-        for i, c in enumerate(key_cols)
-    }
-    frame["t"] = np.concatenate([t for _, t, _, _ in buf])
-    frame["value"] = np.concatenate([v for _, _, v, _ in buf])
-    return pd.DataFrame(frame)
+def _emit_points(segments: Iterator[Segment], key_cols: tuple[str, ...]) -> Iterator[pd.DataFrame]:
+    """Corrected rows. Gap-inserted rows carry interpolated values, or NaN
+    for an all-NaN series (the oracle mirrors the reference's gap rows,
+    scripts/discontinuity_utils.py:137-140)."""
+    for buf in _batched(segments):
+        lens = [len(t) for _, t, _, _ in buf]
+        frame = {
+            c: np.repeat(np.asarray([key[i] for key, _, _, _ in buf], dtype=object), lens)
+            for i, c in enumerate(key_cols)
+        }
+        frame["t"] = np.concatenate([t for _, t, _, _ in buf])
+        frame["value"] = np.concatenate([v for _, _, v, _ in buf])
+        yield pd.DataFrame(frame)
 
 
-def _emit_rollup(segments: Iterable[Segment], sec: int) -> Iterator[pd.DataFrame]:
-    """The partition's tier buckets, aggregated in one vectorized pass."""
-    keys, ts_list, vs_list = [], [], []
-    for (key,), t_out, v_out, _stats in segments:
-        keys.append(key)
-        ts_list.append(t_out)
-        vs_list.append(v_out)
-    yield _bucket_rollup_partition(ts_list, vs_list, keys, sec)
+def _rollup_frame(buf: list[Segment], sec: int) -> pd.DataFrame:
+    """The buffered segments' tier buckets, aggregated in one vectorized pass."""
+    return _bucket_rollup_partition(
+        [t for _, t, _, _ in buf], [v for _, _, v, _ in buf], [key for (key,), _, _, _ in buf], sec
+    )
+
+
+def _emit_rollup(segments: Iterator[Segment], sec: int) -> Iterator[pd.DataFrame]:
+    for buf in _batched(segments):
+        yield _rollup_frame(buf, sec)
 
 
 def _emit_rollup_lineage(segments: Iterator[Segment], sec: int) -> Iterator[pd.DataFrame]:
     """Tier buckets plus per-series lineage rows, as one ``row_kind``
-    union frame per partition."""
+    union frame per buffer of segments."""
     roll_cols = ["bucket_start", "cnt", "vsum", "vmin", "vmax", "vfirst", "vlast"]
     lin_cols = ["step", "n_detected", "n_rows_in", "n_rows_out", "detail"]
     out_cols = ["series_key"] + roll_cols + lin_cols + ["row_kind"]
-    segments = list(segments)
-    (agg,) = _emit_rollup(segments, sec)
-    lin_rows = [
-        (key, st, int(d), int(i), int(o), det)
-        for (key,), _t, _v, stats in segments
-        for st, d, i, o, det in stats
-    ]
-    # the absent side's columns get explicit dtypes (nullable Int64 /
-    # float64 / object) so the concat is dtype-stable
-    agg["step"] = None
-    for c in ("n_detected", "n_rows_in", "n_rows_out"):
-        agg[c] = pd.array([None] * len(agg), dtype="Int64")
-    agg["detail"] = None
-    agg["row_kind"] = "rollup"
-    lin = pd.DataFrame(lin_rows, columns=["series_key"] + lin_cols)
-    for c in ("n_detected", "n_rows_in", "n_rows_out"):
-        lin[c] = lin[c].astype("Int64")
-    for c in ("bucket_start", "cnt"):
-        lin[c] = pd.array([None] * len(lin), dtype="Int64")
-    for c in ("vsum", "vmin", "vmax", "vfirst", "vlast"):
-        lin[c] = np.nan
-    lin["row_kind"] = "lineage"
-    yield pd.concat([agg[out_cols], lin[out_cols]], ignore_index=True)
+    for buf in _batched(segments):
+        agg = _rollup_frame(buf, sec)
+        lin_rows = [
+            (key, st, int(d), int(i), int(o), det)
+            for (key,), _t, _v, stats in buf
+            for st, d, i, o, det in stats
+        ]
+        # the absent side's columns get explicit dtypes (nullable Int64 /
+        # float64 / object) so the concat is dtype-stable
+        agg["step"] = None
+        for c in ("n_detected", "n_rows_in", "n_rows_out"):
+            agg[c] = pd.array([None] * len(agg), dtype="Int64")
+        agg["detail"] = None
+        agg["row_kind"] = "rollup"
+        lin = pd.DataFrame(lin_rows, columns=["series_key"] + lin_cols)
+        for c in ("n_detected", "n_rows_in", "n_rows_out"):
+            lin[c] = lin[c].astype("Int64")
+        for c in ("bucket_start", "cnt"):
+            lin[c] = pd.array([None] * len(lin), dtype="Int64")
+        for c in ("vsum", "vmin", "vmax", "vfirst", "vlast"):
+            lin[c] = np.nan
+        lin["row_kind"] = "lineage"
+        yield pd.concat([agg[out_cols], lin[out_cols]], ignore_index=True)
 
 
 def correct_series(
@@ -213,7 +181,8 @@ def correct_series(
 
     Execution shape: ONE explicit hash shuffle on the series key (explicit
     ``repartition`` rather than groupBy's implicit exchange, for two scale
-    reasons), then ``mapInPandas`` segmenting each partition in pandas:
+    reasons), a JVM sort by key within each partition, then
+    ``mapInPandas`` over series-complete frames:
 
     1. AQE's bytes-based partition coalescing is blind to Python cost — on a
        small-bytes/heavy-compute kernel stage it coalesces to ~1 task and
@@ -222,15 +191,14 @@ def correct_series(
        satisfies the clustering requirement, so no second exchange happens.
     2. ``groupBy().applyInPandas`` pays per-GROUP Arrow/pandas setup — ruinous
        for many small series. ``mapInPandas`` streams each partition as one
-       Arrow sequence and the driver segments it in-process (hash
-       partitioning guarantees no series straddles partitions).
+       Arrow sequence, cut into frames of whole series at key boundaries
+       (hash partitioning guarantees no series straddles partitions).
 
     ``assume_clustered``: the caller guarantees no series straddles input
     partitions (a bucketed store read via sources/bucketstore — the
     write-time shuffle already clustered by key), so the kernel's one
-    exchange disappears and the whole job is scan → kernel. The partition
-    count (and so the pandas memory bound) is then the store's bucket
-    count, fixed at write time.
+    exchange disappears and the whole job is scan → sort → kernel. The
+    partition count is then the store's bucket count, fixed at write time.
 
     ``partitioner="range"``: cluster with ``repartitionByRange(key)``
     instead of a hash exchange. Same whole-series-per-partition guarantee,
@@ -322,9 +290,8 @@ def correct_series_chunked(
     chained cumulatively — scripts/apply_refined_corrections.py:167-194).
 
     Segments become (series_key, chunk), so one hot series spreads over
-    many tasks. The exchange has ``spark.sql.shuffle.partitions``
-    partitions, so a task holds about rows_total/shuffle-partitions rows;
-    raise that setting to shrink it. Trade-off vs ``correct_series``:
+    many tasks (``spark.sql.shuffle.partitions`` of them) and a Python
+    worker holds one chunk of it at a time. Trade-off vs ``correct_series``:
     detection near chunk edges sees less context (exactly like the
     reference's per-year files).
     """
@@ -332,19 +299,25 @@ def correct_series_chunked(
 
     chunked = points.withColumn("chunk", (F.col("t") / F.lit(chunk_sec)).cast("long"))
     key_cols = ("series_key", "chunk")
+    n = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     corrected = _correct_partitions(
         chunked,
         key_cols,
         config,
         partial(_emit_points, key_cols=key_cols),
-        "series_key string, chunk long, t double, value double",
-        int(points.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+        "series_key string not null, chunk long not null, t double, value double",
+        n,
     )
-    return apply_boundary_shifts(corrected).select("series_key", "t", "value")
+    # both branches of the realignment (the boundary aggregates and the
+    # join back) read this one exchange, so Spark reuses it and the kernel
+    # runs once; the keys are declared NOT NULL so no inferred null filter
+    # lands on one branch only and breaks the reuse
+    realigned = apply_boundary_shifts(corrected.repartition(n, *key_cols))
+    return realigned.select("series_key", "t", "value")
 
 
 def _bucket_rollup_partition(ts_list: list, vs_list: list, keys: list, sec: int) -> pd.DataFrame:
-    """Tier aggregation of a whole partition's corrected series in ONE
+    """Tier aggregation of a buffer of corrected series in ONE
     vectorized pass (r4): each series frame is time-sorted by the kernel,
     so its tier buckets are CONTIGUOUS RUNS — run boundaries are the union
     of series starts and bucket changes, found with one ``diff``, and

@@ -46,11 +46,12 @@ def portable_hash60(col: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def portable_hash60_np(strings) -> np.ndarray:
+def portable_hash60_np(strings):
     """``portable_hash60`` as a vectorized Python function: int64 array of
     ``int(md5(utf8(s)).hexdigest()[:15], 16)`` — bit-identical to the JVM
     ``conv(substr(md5(w),1,15),16,10)`` expression (parity-pinned in
-    tests/test_portable_hash_py.py).
+    tests/test_portable_hash_py.py). None/NaN elements hash to null, as
+    ``md5(NULL)`` does: the result is then a nullable ``Int64`` array.
 
     Why it exists (r6): the JVM expression chain md5→hex-string→substr→
     conv(decimal-string)→cast is allocation-heavy and degrades hard under
@@ -65,14 +66,19 @@ def portable_hash60_np(strings) -> np.ndarray:
     arr = np.asarray(strings, dtype=object)
     if len(arr) == 0:
         return np.empty(0, dtype=np.int64)
-    codes, uniques = pd.factorize(arr)
+    codes, uniques = pd.factorize(arr)  # None/NaN → code -1
     md5 = hashlib.md5
     uh = np.fromiter(
         (int(md5(u.encode("utf-8")).hexdigest()[:15], 16) for u in uniques),
         dtype=np.int64,
         count=len(uniques),
     )
-    return uh[codes]
+    null = codes < 0
+    if not null.any():
+        return uh[codes]
+    vals = np.zeros(len(arr), dtype=np.int64)
+    vals[~null] = uh[codes[~null]]
+    return pd.arrays.IntegerArray(vals, null)
 
 
 @F.pandas_udf(T.LongType())
@@ -356,23 +362,29 @@ def _simhash_fold(hash_arrays: pd.Series) -> pd.Series:
     return pd.Series(simhash_fold_np(hash_arrays))
 
 
-@F.pandas_udf(T.LongType())
-def _simhash_fold_portable(word_arrays: pd.Series) -> pd.Series:
-    """Portable-mode fold taking token STRINGS: one batch-wide factorize
-    dedups tokens C-side, hashlib.md5 runs once per DISTINCT token
-    (bit-identical to the JVM conv(substr(md5)) expression —
-    tests/test_portable_hash_py.py), then the standard flat vote fold.
-    Replaces the allocation-heavy JVM md5→conv chain (r6), with no
-    per-token Python loop."""
+def simhash_fold_words_np(word_arrays) -> np.ndarray:
+    """Portable-mode fold over per-row token STRING arrays: the rows'
+    tokens are concatenated, hashed in ONE ``portable_hash60_np`` call (one
+    batch-wide factorize, hashlib.md5 once per DISTINCT token), then
+    folded back per row by length."""
     lens = np.fromiter(
         (len(a) for a in word_arrays), dtype=np.int64, count=len(word_arrays)
     )
     if lens.sum() == 0:
-        return pd.Series(np.zeros(len(word_arrays), dtype=np.int64))
+        return np.zeros(len(word_arrays), dtype=np.int64)
     flat_words = np.concatenate(
         [np.asarray(a, dtype=object) for a in word_arrays if len(a)]
     )
-    return pd.Series(_simhash_fold_flat(portable_hash60_np(flat_words), lens))
+    return _simhash_fold_flat(portable_hash60_np(flat_words), lens)
+
+
+@F.pandas_udf(T.LongType())
+def _simhash_fold_portable(word_arrays: pd.Series) -> pd.Series:
+    """Arrow-batch wrapper over ``simhash_fold_words_np`` — bit-identical
+    to the JVM conv(substr(md5)) expression per token
+    (tests/test_portable_hash_py.py). Replaces the allocation-heavy JVM
+    md5→conv chain (r6), with no per-token Python loop."""
+    return pd.Series(simhash_fold_words_np(word_arrays))
 
 
 # A third shape was measured and rejected: explode token hashes → 64 per-bit

@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ._keyed import map_keyed
+
 __all__ = ["content_drift", "drift_summary", "redrift_urls"]
 
 DRIFT_SCHEMA = T.StructType(
@@ -94,9 +96,10 @@ def content_drift(
     ``assume_clustered=True``: the caller guarantees no url straddles
     input partitions (a url-bucketed page store read via
     ``sources/bucketstore``) — the window shuffle disappears and the
-    whole job is scan → one ``mapInPandas`` (the correction kernel's
-    exchange-free law). Needed because an ArrowEvalPython projection
-    does NOT propagate the bucketed scan's output partitioning, so the
+    whole job is scan → sort within partitions → one ``mapInPandas``
+    over url-complete frames (the correction kernel's exchange-free
+    law). Needed because an ArrowEvalPython projection does NOT
+    propagate the bucketed scan's output partitioning, so the
     default window path re-shuffles even over a bucketed store
     (measured; a pure-JVM window over the same table plans 0
     exchanges). This path returns ``t`` as double epoch seconds (a
@@ -109,8 +112,8 @@ def content_drift(
         _simhash_fold,
         _simhash_fold_portable,
         _token_hashes,
-        portable_hash60_np,
         simhash_fold_np,
+        simhash_fold_words_np,
     )
 
     if assume_clustered:
@@ -127,54 +130,42 @@ def content_drift(
             F.xxhash64(F.coalesce(F.col(text_col), F.lit(""))).alias("exact_hash"),
             tok_col.alias("_tokh"),
         )
+        fold = simhash_fold_words_np if portable else simhash_fold_np
 
-        def _process_partition(batches):
-            chunks = list(batches)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            arrays = (
-                [portable_hash60_np(ws) for ws in pdf["_tokh"]]
-                if portable
-                else pdf["_tokh"]
-            )
-            pdf["simhash"] = simhash_fold_np(arrays)
-            pdf = pdf.drop(columns=["_tokh"]).sort_values(
-                ["url", "t", "exact_hash"], kind="mergesort"
-            )
-            # shift() on int64 promotes to float64, which corrupts
-            # xxhash64 values past 2^53 — shift on NULLABLE Int64 instead
-            g = pdf.astype({"exact_hash": "Int64", "simhash": "Int64"}).groupby(
-                "url", sort=False
-            )
-            prev_e = g["exact_hash"].shift(1)
-            prev_s = g["simhash"].shift(1)
-            has_prev = prev_e.notna().to_numpy()
-            ham = np.zeros(len(pdf), dtype=np.int64)
-            if has_prev.any():
-                ham[has_prev] = _popcount64(
-                    pdf["simhash"].to_numpy()[has_prev]
-                    ^ prev_s.to_numpy(dtype="int64", na_value=0)[has_prev]
+        def _classify(frames):
+            for pdf, offsets in frames:
+                simhash = fold(pdf["_tokh"])
+                exact = pdf["exact_hash"].to_numpy(dtype=np.int64)
+                # each row's previous crawl is the row before it, except
+                # at a url's first row (the frame is sorted by url, t)
+                has_prev = np.ones(len(pdf), dtype=bool)
+                has_prev[offsets[:-1]] = False
+                ham = _popcount64(simhash ^ np.roll(simhash, 1))
+                change = np.where(
+                    ~has_prev,
+                    "first",
+                    np.where(
+                        exact == np.roll(exact, 1),
+                        "unchanged",
+                        np.where(ham <= thr, "cosmetic", "rewrite"),
+                    ),
                 )
-            change = np.where(
-                ~has_prev,
-                "first",
-                np.where(
-                    pdf["exact_hash"].to_numpy()
-                    == prev_e.to_numpy(dtype="int64", na_value=0),
-                    "unchanged",
-                    np.where(ham <= thr, "cosmetic", "rewrite"),
-                ),
-            )
-            out = pdf[["url", "t", "exact_hash", "simhash"]].copy()
-            out["hamming"] = pd.array(
-                np.where(has_prev, ham, 0), dtype="Int32"
-            )
-            out.loc[~has_prev, "hamming"] = pd.NA
-            out["change"] = change
-            yield out
+                yield pd.DataFrame(
+                    {
+                        "url": pdf["url"],
+                        "t": pdf["t"],
+                        "exact_hash": exact,
+                        "simhash": simhash,
+                        "hamming": pd.arrays.IntegerArray(
+                            np.where(has_prev, ham, 0).astype(np.int32), ~has_prev
+                        ),
+                        "change": change,
+                    }
+                )
 
-        return pre.mapInPandas(_process_partition, schema=DRIFT_SCHEMA)
+        return map_keyed(
+            pre, ("url",), ("t", "exact_hash"), _classify, DRIFT_SCHEMA, partitioner=None
+        )
 
     fold = (
         _simhash_fold_portable(_filtered_words(text_col))

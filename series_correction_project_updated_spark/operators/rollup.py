@@ -288,10 +288,10 @@ def lttb_downsample(
     series — the perceptual line-chart reduction that complements M4 (M4
     is error-free for min/max/first/last rendering; LTTB preserves visual
     SHAPE at a fixed point budget). Sequential per series → same execution
-    shape as the correction kernel: one explicit hash repartition on the
-    key, ``mapInPandas`` streaming whole partitions, numpy per series
-    (vectorized candidate areas per bucket). Series shorter than ``n_out``
-    pass through unchanged; ``n_out < 3`` is rejected (the algorithm needs
+    shape as the correction kernel: ``map_keyed`` on the key (one hash
+    repartition, a JVM sort by (key, t), series-complete frames), numpy
+    per series (vectorized candidate areas per bucket). Series shorter
+    than ``n_out`` pass through unchanged; ``n_out < 3`` is rejected (the algorithm needs
     both anchors plus at least one interior bucket — silently returning
     everything would blow a caller's render budget, r4 self-review #9).
     """
@@ -299,11 +299,10 @@ def lttb_downsample(
     import pandas as pd
     import pyspark.sql.types as T
 
+    from ._keyed import map_keyed
+
     if n_out < 3:
         raise ValueError(f"n_out must be >= 3 (got {n_out})")
-
-    if num_partitions is None:
-        num_partitions = points.sparkSession.sparkContext.defaultParallelism * 2
 
     out_schema = T.StructType(
         [
@@ -314,27 +313,26 @@ def lttb_downsample(
     )
     cols = [key_col, time_col, value_col]
 
-    def _run(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values([key_col, time_col])
-        keys_l, t_l, v_l = [], [], []
-        for key, grp in pdf.groupby(key_col, sort=False):
-            t = grp[time_col].to_numpy(dtype=np.float64)
-            v = grp[value_col].to_numpy(dtype=np.float64)
-            idx = _lttb_indices(t, v, n_out)
-            keys_l.append(np.repeat(key, len(idx)))
-            t_l.append(t[idx])
-            v_l.append(v[idx])
-        yield pd.DataFrame(
-            {
-                key_col: np.concatenate(keys_l),
-                time_col: np.concatenate(t_l),
-                value_col: np.concatenate(v_l),
-            }
-        )[cols]
+    def _run(frames):
+        for pdf, offsets in frames:
+            keys = pdf[key_col].to_numpy()
+            t_all = pdf[time_col].to_numpy(dtype=np.float64)
+            v_all = pdf[value_col].to_numpy(dtype=np.float64)
+            keys_l, t_l, v_l = [], [], []
+            for s, e in zip(offsets[:-1], offsets[1:]):
+                t, v = t_all[s:e], v_all[s:e]
+                idx = _lttb_indices(t, v, n_out)
+                keys_l.append(np.repeat(keys[s], len(idx)))
+                t_l.append(t[idx])
+                v_l.append(v[idx])
+            yield pd.DataFrame(
+                {
+                    key_col: np.concatenate(keys_l),
+                    time_col: np.concatenate(t_l),
+                    value_col: np.concatenate(v_l),
+                }
+            )[cols]
 
-    return points.select(*cols).repartition(num_partitions, key_col).mapInPandas(
-        _run, schema=out_schema
-    )
+    # null keys yield no rows (the pandas groupby this replaced dropped them)
+    keyed = points.select(*cols).where(F.col(key_col).isNotNull())
+    return map_keyed(keyed, (key_col,), (time_col,), _run, out_schema, num_partitions)

@@ -17,21 +17,26 @@ relative (test-pinned).
 score (how surprising is this point given the smoothed past), null
 until the variance warms up.
 
-Execution shape: the kernel's standard one-hash-repartition +
-``mapInPandas`` streaming whole partitions; per series one numpy block
-scan (no per-row Python). Null values pass through with null outputs
-and do not perturb the smoother state. Not SQL-expressible (infinite
-exponential memory), so pandas is the test oracle; the 50-entry driver
-registry is full.
+Execution shape: the kernel's standard one-hash-repartition, a JVM sort
+by (key, t) and ``mapInPandas`` over series-complete frames
+(``operators/_keyed``, so a task holds one Arrow batch plus its largest
+series); per series one numpy block scan (no per-row Python). Null
+values pass through with null outputs and do not perturb the smoother
+state. Not SQL-expressible (infinite exponential memory), so pandas is
+the test oracle; the 50-entry driver registry is full.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ._keyed import map_keyed
 
 
 def _lin_rec_blocked(z: np.ndarray, c: float, s0: float) -> np.ndarray:
@@ -144,6 +149,55 @@ def holt_level_trend(x: np.ndarray, alpha: float, beta: float):
     )
 
 
+def _ewm_series(x: np.ndarray, alpha: float) -> tuple[np.ndarray, ...]:
+    """(ewma, ewm_std, ewm_z) of one series' non-null values."""
+    y, v = ewm_mean_var(x, alpha)
+    sd = np.sqrt(v)
+    z = np.full(len(x), np.nan)
+    if len(x) > 1:
+        prev_sd = sd[:-1]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            z[1:] = np.where(prev_sd >= 1e-12, (x[1:] - y[:-1]) / prev_sd, np.nan)
+    return y, sd, z
+
+
+def _holt_series(x: np.ndarray, alpha: float, beta: float) -> tuple[np.ndarray, ...]:
+    """(level, trend, yhat) of one series' non-null values."""
+    level, trend = holt_level_trend(x, alpha, beta)
+    fc = np.full(len(x), np.nan)
+    fc[1:] = level[:-1] + trend[:-1]
+    return level, trend, fc
+
+
+def _per_series(vals: np.ndarray, offsets: np.ndarray, fn) -> np.ndarray:
+    """``fn`` over each series' non-null values; the (3, n) result is NaN
+    at null values, which leave the smoother state untouched."""
+    out = np.full((3, len(vals)), np.nan)
+    for s, e in zip(offsets[:-1], offsets[1:]):
+        ok = ~np.isnan(vals[s:e])
+        if ok.any():
+            out[:, np.flatnonzero(ok) + s] = fn(vals[s:e][ok])
+    return out
+
+
+def _smooth(points, key_col, time_col, value_col, num_partitions, fields, frame_fn, tagged=False):
+    """The shared shape of the smoothers: ``map_keyed`` on the key, sorted
+    by time, ``frame_fn(pdf, values, offsets)`` per series-complete frame.
+    Output: ([op,] key, t, value, *fields)."""
+    cols = [key_col, time_col, value_col]
+    schema = T.StructType(
+        ([T.StructField("op", T.StringType())] if tagged else [])
+        + [points.schema[c] for c in cols]
+        + [T.StructField(f, T.DoubleType()) for f in fields]
+    )
+
+    def _run(frames):
+        for pdf, offsets in frames:
+            yield frame_fn(pdf[cols], pdf[value_col].to_numpy(dtype=np.float64), offsets)
+
+    return map_keyed(points.select(*cols), (key_col,), (time_col,), _run, schema, num_partitions)
+
+
 def holt_smooth(
     points: DataFrame,
     alpha: float,
@@ -162,52 +216,13 @@ def holt_smooth(
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     if not 0.0 <= beta <= 1.0:
         raise ValueError(f"beta must be in [0, 1], got {beta}")
-    if num_partitions is None:
-        num_partitions = points.sparkSession.sparkContext.defaultParallelism * 2
 
-    cols = [key_col, time_col, value_col]
-    out_schema = T.StructType(
-        [points.schema[c] for c in cols]
-        + [
-            T.StructField("level", T.DoubleType()),
-            T.StructField("trend", T.DoubleType()),
-            T.StructField("yhat", T.DoubleType()),
-        ]
-    )
+    def _frame(base, vals, offsets):
+        lv, tr, yh = _per_series(vals, offsets, partial(_holt_series, alpha=alpha, beta=beta))
+        return base.assign(level=lv, trend=tr, yhat=yh)
 
-    def _run(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values([key_col, time_col])
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        lv = np.full(len(pdf), np.nan)
-        tr = np.full(len(pdf), np.nan)
-        yh = np.full(len(pdf), np.nan)
-        keys = pdf[key_col].to_numpy()
-        bounds = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-        for s, e in zip(
-            np.concatenate(([0], bounds)), np.concatenate((bounds, [len(pdf)]))
-        ):
-            x = vals[s:e]
-            ok = ~np.isnan(x)
-            xi = x[ok]
-            if len(xi) == 0:
-                continue
-            level, trend = holt_level_trend(xi, alpha, beta)
-            fc = np.full(len(xi), np.nan)
-            fc[1:] = level[:-1] + trend[:-1]
-            idx = np.flatnonzero(ok) + s
-            lv[idx] = level
-            tr[idx] = trend
-            yh[idx] = fc
-        pdf = pdf.assign(level=lv, trend=tr, yhat=yh)
-        yield pdf[cols + ["level", "trend", "yhat"]]
-
-    return (
-        points.select(*cols)
-        .repartition(num_partitions, key_col)
-        .mapInPandas(_run, schema=out_schema)
+    return _smooth(
+        points, key_col, time_col, value_col, num_partitions, ("level", "trend", "yhat"), _frame
     )
 
 
@@ -227,59 +242,13 @@ def ewma_smooth(
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
-    if num_partitions is None:
-        num_partitions = points.sparkSession.sparkContext.defaultParallelism * 2
 
-    cols = [key_col, time_col, value_col]
-    out_schema = T.StructType(
-        [points.schema[c] for c in cols]
-        + [
-            T.StructField("ewma", T.DoubleType()),
-            T.StructField("ewm_std", T.DoubleType()),
-            T.StructField("ewm_z", T.DoubleType()),
-        ]
-    )
+    def _frame(base, vals, offsets):
+        ew, sd, zs = _per_series(vals, offsets, partial(_ewm_series, alpha=alpha))
+        return base.assign(ewma=ew, ewm_std=sd, ewm_z=zs)
 
-    def _run(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values([key_col, time_col])
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        ew = np.full(len(pdf), np.nan)
-        st = np.full(len(pdf), np.nan)
-        zs = np.full(len(pdf), np.nan)
-        start = 0
-        keys = pdf[key_col].to_numpy()
-        bounds = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-        for s, e in zip(
-            np.concatenate(([0], bounds)), np.concatenate((bounds, [len(pdf)]))
-        ):
-            x = vals[s:e]
-            ok = ~np.isnan(x)
-            xi = x[ok]
-            if len(xi) == 0:
-                continue
-            y, v = ewm_mean_var(xi, alpha)
-            sd = np.sqrt(v)
-            z = np.full(len(xi), np.nan)
-            if len(xi) > 1:
-                prev_sd = sd[:-1]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    z[1:] = np.where(
-                        prev_sd >= 1e-12, (xi[1:] - y[:-1]) / prev_sd, np.nan
-                    )
-            idx = np.flatnonzero(ok) + s
-            ew[idx] = y
-            st[idx] = sd
-            zs[idx] = z
-        pdf = pdf.assign(ewma=ew, ewm_std=st, ewm_z=zs)
-        yield pdf[cols + ["ewma", "ewm_std", "ewm_z"]]
-
-    return (
-        points.select(*cols)
-        .repartition(num_partitions, key_col)
-        .mapInPandas(_run, schema=out_schema)
+    return _smooth(
+        points, key_col, time_col, value_col, num_partitions, ("ewma", "ewm_std", "ewm_z"), _frame
     )
 
 
@@ -300,82 +269,29 @@ def ewma_holt_smooth(
 
     Output: (op, key, t, value, m1, m2, m3) where op='ewm' carries
     (ewma, ewm_std, ewm_z) and op='holt' carries (level, trend, yhat) in
-    m1..m3. Per-series math is the SAME code paths (``ewm_mean_var``,
-    ``holt_level_trend``) as the standalone operators.
+    m1..m3. Per-series math is the SAME functions (``_ewm_series``,
+    ``_holt_series``) as the standalone operators.
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     if not 0.0 <= beta <= 1.0:
         raise ValueError(f"beta must be in [0, 1], got {beta}")
-    if num_partitions is None:
-        num_partitions = points.sparkSession.sparkContext.defaultParallelism * 2
+    out_cols = ["op", key_col, time_col, value_col, "m1", "m2", "m3"]
 
-    cols = [key_col, time_col, value_col]
-    out_schema = T.StructType(
-        [T.StructField("op", T.StringType())]
-        + [points.schema[c] for c in cols]
-        + [
-            T.StructField("m1", T.DoubleType()),
-            T.StructField("m2", T.DoubleType()),
-            T.StructField("m3", T.DoubleType()),
-        ]
-    )
-
-    def _run(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values([key_col, time_col])
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        n = len(pdf)
-        ew = np.full(n, np.nan)
-        st = np.full(n, np.nan)
-        zs = np.full(n, np.nan)
-        lv = np.full(n, np.nan)
-        tr = np.full(n, np.nan)
-        yh = np.full(n, np.nan)
-        keys = pdf[key_col].to_numpy()
-        bounds = np.flatnonzero(keys[1:] != keys[:-1]) + 1
-        for s, e in zip(
-            np.concatenate(([0], bounds)), np.concatenate((bounds, [n]))
-        ):
-            x = vals[s:e]
-            ok = ~np.isnan(x)
-            xi = x[ok]
-            if len(xi) == 0:
-                continue
-            idx = np.flatnonzero(ok) + s
-            y, v = ewm_mean_var(xi, alpha)
-            sd = np.sqrt(v)
-            z = np.full(len(xi), np.nan)
-            if len(xi) > 1:
-                prev_sd = sd[:-1]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    z[1:] = np.where(
-                        prev_sd >= 1e-12, (xi[1:] - y[:-1]) / prev_sd, np.nan
-                    )
-            ew[idx] = y
-            st[idx] = sd
-            zs[idx] = z
-            level, trend = holt_level_trend(xi, alpha, beta)
-            fc = np.full(len(xi), np.nan)
-            fc[1:] = level[:-1] + trend[:-1]
-            lv[idx] = level
-            tr[idx] = trend
-            yh[idx] = fc
-        base = pdf[cols]
-        yield pd.concat(
+    def _frame(base, vals, offsets):
+        ew, sd, zs = _per_series(vals, offsets, partial(_ewm_series, alpha=alpha))
+        lv, tr, yh = _per_series(vals, offsets, partial(_holt_series, alpha=alpha, beta=beta))
+        return pd.concat(
             [
-                base.assign(op="ewm", m1=ew, m2=st, m3=zs),
+                base.assign(op="ewm", m1=ew, m2=sd, m3=zs),
                 base.assign(op="holt", m1=lv, m2=tr, m3=yh),
             ],
             ignore_index=True,
-        )[["op"] + cols + ["m1", "m2", "m3"]]
+        )[out_cols]
 
-    return (
-        points.select(*cols)
-        .repartition(num_partitions, key_col)
-        .mapInPandas(_run, schema=out_schema)
+    return _smooth(
+        points, key_col, time_col, value_col, num_partitions, ("m1", "m2", "m3"), _frame,
+        tagged=True,
     )
 
 

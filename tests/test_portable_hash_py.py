@@ -77,3 +77,14 @@ def test_filtered_words_feeds_fold_like_token_hashes(spark):
     hashes = docs.select(_token_hashes("text", portable=True).alias("h")).collect()
     for wrow, hrow in zip(words, hashes):
         assert portable_hash60_np(wrow["w"]).tolist() == hrow["h"]
+
+
+def test_python_hash_maps_null_to_null(spark):
+    """None/NaN elements hash to null, as the JVM expression does."""
+    strings = ["a", None, "hello", float("nan"), "a"]
+    got = portable_hash60_np(strings)
+    assert got.isna().tolist() == [False, True, False, True, False]
+    df = spark.createDataFrame(pd.DataFrame({"s": ["a", None, "hello", None, "a"]}))
+    want = [r["h"] for r in df.select(portable_hash60(F.col("s")).alias("h")).collect()]
+    assert [None if pd.isna(h) else int(h) for h in got] == want
+    assert portable_hash60_np([None]).isna().all()
