@@ -1049,19 +1049,3 @@ def decode_chunks(payloads) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     vals_b = (G ^ np.repeat(corr, ns_b)).view(np.float64)
     val_out[np.repeat(ob, ns_b) + _intra(ns_b)] = vals_b
     return ts_out, val_out, offsets
-
-
-def decode_chunk_scalar(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
-    """Field-at-a-time reference decoder (any magic) — the property-test
-    cross-check for the vectorized hot path."""
-    magic = payload[:4]
-    if magic not in (MAGIC, MAGIC_V1):
-        raise ValueError(f"not a Gorilla chunk (magic {magic!r})")
-    n, tlen = struct.unpack("<IQ", payload[4:16])
-    if n == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    ts = _decode_timestamps_scalar(
-        _BitReader(payload[16 : 16 + tlen]), n, legacy_v1=magic == MAGIC_V1
-    )
-    vals = _decode_values_scalar(_BitReader(payload[16 + tlen :]), n)
-    return ts, vals

@@ -1,15 +1,20 @@
 """The keyed partition iterator behind every per-series ``mapInPandas``.
 
-Spark side (``map_keyed``): cluster the input so no key straddles
-partitions, sort each partition by key in the JVM (a sort that spills),
-then one ``mapInPandas``. Python side (``keyed_frames``): walk the sorted
-Arrow batches and yield frames that hold only complete keys, carrying the
-rows of a batch's last key over to the next batch. A task therefore holds
-about one Arrow batch plus its largest key, not its whole partition.
+Spark side (``map_keyed``): drop rows with a null in any key column, cluster
+the input so no key straddles partitions, sort each partition by key in the
+JVM (a sort that spills), then one ``mapInPandas``. The null-key drop is a
+JVM filter before the exchange and is the one null-key policy of every
+keyed operator: a null key names no series, so its rows yield no output.
+Python side (``keyed_frames``): walk the sorted Arrow batches and yield
+frames that hold only complete keys, carrying the rows of a batch's last
+key over to the next batch. A task therefore holds about one Arrow batch
+plus its largest key, not its whole partition.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
 from typing import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
@@ -33,7 +38,8 @@ def map_keyed(
     partitioner: str | None = "hash",
 ) -> DataFrame:
     """``df.mapInPandas`` over series-complete frames sorted by
-    ``(*keys, *order)``.
+    ``(*keys, *order)``. Rows with a null in any key column yield no
+    output.
 
     ``partitioner="hash"`` repartitions on ``keys``, ``"range"``
     range-partitions on them, ``None`` trusts the input's clustering (a
@@ -46,12 +52,13 @@ def map_keyed(
     """
     if partitioner is not None and num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
+    keyed = df.where(reduce(and_, [F.col(c).isNotNull() for c in keys]))
     if partitioner is None:
-        clustered = df
+        clustered = keyed
     elif partitioner == "range":
-        clustered = df.repartitionByRange(num_partitions, *keys)
+        clustered = keyed.repartitionByRange(num_partitions, *keys)
     elif partitioner == "hash":
-        clustered = df.repartition(num_partitions, *keys)
+        clustered = keyed.repartition(num_partitions, *keys)
     else:
         raise ValueError(f"unknown partitioner: {partitioner!r}")
     sorted_df = clustered.sortWithinPartitions(*keys, *(F.col(c).asc_nulls_last() for c in order))
@@ -64,7 +71,8 @@ def keyed_frames(batches: Iterable[pd.DataFrame], keys: Sequence[str]) -> Iterat
     Each yielded frame is a batch's rows up to its last key start, led by
     the rows carried over from earlier batches; the rows of the last key
     wait for the next batch that starts a new key. Keys compare with
-    ``!=`` on the key columns, so a run of null (``None``) keys is one key.
+    ``!=`` on the key columns (``map_keyed`` never passes a null key; here
+    a run of ``None`` keys would be one key).
     """
     pending: list[pd.DataFrame] = []  # rows of the one key not yet complete
     carried = 0

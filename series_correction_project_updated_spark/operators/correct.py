@@ -29,12 +29,13 @@ Scale notes (100 TB / 10^12 rows):
   ``correct_series_chunked``, whose segments are (series, time-chunk).
 - Null vs NaN: Spark nulls become NaN inside Arrow (doubles) — the oracle is
   NaN-native, and output NaN maps back to NULL-free doubles or null as-is.
+- Null keys: a row with a null series key (or chunk) yields no output in
+  any entry; ``map_keyed`` drops it in the JVM before the exchange.
 """
 
 from __future__ import annotations
 
-from functools import partial, reduce
-from operator import and_
+from functools import partial
 from typing import Any, Callable, Iterator
 
 import numpy as np
@@ -75,10 +76,9 @@ def _correct_partitions(
     pandas-permutation time sort has always seen.
 
     Null keys: a row with a null in any segment column yields no output in
-    every entry — it is dropped in the JVM, before the exchange.
+    every entry — ``map_keyed`` drops it in the JVM, before the exchange.
     """
     cfg = {**oracle.DEFAULT_CONFIG, **(config or {})}
-    keyed = points.where(reduce(and_, [F.col(c).isNotNull() for c in segment_cols]))
 
     def _segments(frames: Iterator[KeyedFrame]) -> Iterator[Segment]:
         for pdf, offsets in frames:
@@ -90,7 +90,7 @@ def _correct_partitions(
                 yield tuple(k[s] for k in keys), t_out, v_out, stats
 
     return map_keyed(
-        keyed, segment_cols, (), lambda frames: emit(_segments(frames)), schema, num_partitions,
+        points, segment_cols, (), lambda frames: emit(_segments(frames)), schema, num_partitions,
         partitioner,
     )
 

@@ -333,6 +333,6 @@ def lttb_downsample(
                 }
             )[cols]
 
-    # null keys yield no rows (the pandas groupby this replaced dropped them)
-    keyed = points.select(*cols).where(F.col(key_col).isNotNull())
-    return map_keyed(keyed, (key_col,), (time_col,), _run, out_schema, num_partitions)
+    return map_keyed(
+        points.select(*cols), (key_col,), (time_col,), _run, out_schema, num_partitions
+    )

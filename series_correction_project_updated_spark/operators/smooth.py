@@ -22,8 +22,10 @@ by (key, t) and ``mapInPandas`` over series-complete frames
 (``operators/_keyed``, so a task holds one Arrow batch plus its largest
 series); per series one numpy block scan (no per-row Python). Null
 values pass through with null outputs and do not perturb the smoother
-state. Not SQL-expressible (infinite exponential memory), so pandas is
-the test oracle; the 50-entry driver registry is full.
+state; rows with a null key yield no output (``map_keyed`` drops them
+in the JVM, as for every keyed operator). Not SQL-expressible (infinite
+exponential memory), so pandas is the test oracle; the 50-entry driver
+registry is full.
 """
 
 from __future__ import annotations

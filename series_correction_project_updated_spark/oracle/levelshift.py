@@ -58,19 +58,3 @@ def chain_level_shifts(
         shifts[y] = delta
         prev_shift = delta
     return shifts
-
-
-def apply_chained_shifts(df: pd.DataFrame, year_col: str, value_col: str) -> pd.DataFrame:
-    """Apply chained boundary shifts to a long frame (single series).
-
-    head/tail averages use the first/last 5 rows per year in time order —
-    reference scripts/apply_refined_corrections.py:175-180 (.iloc[:5]/.iloc[-5:]).
-    The frame must already be time-sorted within each year.
-    """
-    years = sorted(df[year_col].unique().tolist())
-    head = {y: non_zero_average(df.loc[df[year_col] == y, value_col].iloc[:5]) for y in years}
-    tail = {y: non_zero_average(df.loc[df[year_col] == y, value_col].iloc[-5:]) for y in years}
-    shifts = chain_level_shifts(years, head, tail)
-    out = df.copy()
-    out[value_col] = out[value_col] + out[year_col].map(shifts).astype(float)
-    return out

@@ -1,10 +1,13 @@
 """The flagship end-to-end job: pages → series → correct → rollup tiers →
-compress, with lineage + metrics side tables and per-partition resume.
+compress, with lineage and metrics side tables.
 
 Distributed replacement for the reference's ``batch_process`` driver loop
 (scripts/batch_correction.py:461-516): config on the driver, data never on
-the driver. One shuffle for the correction (hash by series), cascade rollups
-reuse the clustering, sinks are partition-overwrite idempotent.
+the driver. The correction kernel runs once (one hash shuffle by series)
+and each output directory is written once; coarser tiers cascade from the
+tier below them. Every count in the returned summary is an
+``Observation`` on the write that produces it, so no job runs only to
+count.
 """
 
 from __future__ import annotations
@@ -15,11 +18,12 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.compress import bytes_per_point, compress_rollup
-from ..operators.correct import correct_and_rollup, correct_rollup_lineage
+from ..operators.compress import compress_rollup
+from ..operators.correct import correct_rollup_lineage
 from ..operators.rollup import cascade
 from ..schema import LINEAGE, ROLLUP, TIER_SECONDS
 from ..sources.synth import pages_to_series
@@ -28,20 +32,30 @@ from ..sources.synth import pages_to_series
 @dataclass
 class PipelineConfig:
     """Mirrors the reference's merged config (processor.py:468-481) plus
-    engine knobs."""
+    engine knobs. The finest tier's ``vsum`` is the one compressed."""
 
     correction: dict[str, Any] = field(default_factory=dict)
     tiers: tuple[str, ...] = ("1m", "1h", "1d")
-    compress_tier: str = "1m"
-    compress_value_col: str = "vsum"
     n_buckets: int = 32
-    emit_lineage: bool = True
     # NOTE deliberately NO retention knob here: retention must not filter a
     # tier before a COARSER tier cascades from it (coarser tiers keep longer
     # horizons), so expiry is a separate maintenance job over the written
     # tier stores — jobs/run_retention.py + operators/retention.py — exactly
     # how production continuous-aggregate policies run (background job, not
     # build-time filter).
+
+
+def _write(df: DataFrame, path: str, **metrics: Column) -> dict[str, Any]:
+    """Overwrite ``path`` with ``df`` as parquet; return ``metrics``
+    (aggregates over the written rows) as observed by that same write."""
+    obs = Observation()
+    df.observe(obs, *(m.alias(k) for k, m in metrics.items())).write.mode("overwrite").parquet(path)
+    return obs.get
+
+
+def _step_sum(step: str, col: Column) -> Column:
+    """Sum of ``col`` over the lineage rows of one kernel step."""
+    return F.coalesce(F.sum(F.when(F.col("step") == step, col)), F.lit(0))
 
 
 def run_pipeline(
@@ -67,82 +81,73 @@ def run_pipeline(
                 f"multiple of the previous; got {cfg.tiers} ({secs}s)"
             )
 
-    points = pages_to_series(pages)
+    # the kernel drops rows with a null series key; count them on its input
+    dropped = Observation()
+    points = pages_to_series(pages).observe(
+        dropped, F.count(F.when(F.col("series_key").isNull(), 1)).alias("rows")
+    )
 
-    # Finest tier comes out of the kernel FUSED: one shuffle, no post-kernel
-    # JVM aggregation, no persist of the raw corrected points. With lineage
-    # enabled, lineage rows come out of the SAME kernel execution
-    # (correct_rollup_lineage) — the expensive raw-point pass runs exactly
-    # once, and the row_kind partitioning makes the rollup/lineage split a
-    # pruned directory read. Coarser tiers cascade from the sink (each read
-    # is ~60× smaller than raw).
-    tier_counts: dict[str, int] = {}
-    tiers: dict[str, DataFrame] = {}
+    # The finest tier and the lineage rows come out of ONE kernel execution
+    # (correct_rollup_lineage), held in memory (spilling to disk) while its
+    # two row_kind sides are written; coarser tiers cascade from the written
+    # tier below them, each read ~60x smaller than the raw points.
     finest = cfg.tiers[0]
     fine_path = os.path.join(out_dir, f"rollup_{finest}")
-    corrected_rows = None
-    if cfg.emit_lineage:
-        fused = correct_rollup_lineage(points, finest, cfg.correction, num_partitions=cfg.n_buckets)
-        fused_path = os.path.join(out_dir, f"fused_{finest}")
-        fused.write.mode("overwrite").partitionBy("row_kind").parquet(fused_path)
-        fused_sink = spark.read.parquet(fused_path)
-        lineage = fused_sink.where(F.col("row_kind") == "lineage").select(
-            *[f.name for f in LINEAGE.fields]
+    fused = correct_rollup_lineage(points, finest, cfg.correction, num_partitions=cfg.n_buckets)
+    fused.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        lin = _write(
+            fused.where(F.col("row_kind") == "lineage").select(*LINEAGE.fieldNames()),
+            os.path.join(out_dir, "lineage"),
+            # rows INCLUDING null-valued ones (e.g. an all-NaN series that
+            # interpolation cannot fill): the kernel's post-gap row count
+            corrected_rows=_step_sum("gaps", F.col("n_rows_out")),
+            gaps_filled=_step_sum("gaps", F.col("n_rows_out") - F.col("n_rows_in")),
+            outliers_replaced=_step_sum("outliers", F.col("n_detected")),
+            jumps_corrected=_step_sum("jumps", F.col("n_detected")),
         )
-        lineage.write.mode("overwrite").parquet(os.path.join(out_dir, "lineage"))
-        lower = fused_sink.where(F.col("row_kind") == "rollup").select(
-            *[f.name for f in ROLLUP.fields]
+        # corrected_points counts non-null VALUES (the sum of the tier's cnt),
+        # not rows: an all-NaN series' rows are excluded
+        fine = _write(
+            fused.where(F.col("row_kind") == "rollup").select(*ROLLUP.fieldNames()),
+            fine_path,
+            rows=F.count("*"),
+            cnt=F.sum("cnt"),
         )
-        lower.write.mode("overwrite").parquet(fine_path)
-        # Row count INCLUDING null-valued rows (e.g. all-NaN series that
-        # interpolation cannot fill): the kernel's post-gap row count.
-        corrected_rows = int(
-            spark.read.parquet(os.path.join(out_dir, "lineage"))
-            .where(F.col("step") == "gaps")
-            .agg(F.sum("n_rows_out"))
-            .collect()[0][0]
-            or 0
-        )
-    else:
-        r_fine = correct_and_rollup(points, finest, cfg.correction, num_partitions=cfg.n_buckets)
-        r_fine.write.mode("overwrite").parquet(fine_path)
+    finally:
+        fused.unpersist()
+
+    tier_counts = {finest: fine["rows"]}
     lower = spark.read.parquet(fine_path)
-    tiers[finest] = lower
-    tier_counts[finest] = lower.count()
-    # NOTE: counts non-null corrected VALUES (sum of tier cnt), not rows —
-    # rows of an all-NaN series are excluded; see corrected_rows for rows.
-    n_corrected = int(lower.agg(F.sum("cnt")).collect()[0][0] or 0)
     for name in cfg.tiers[1:]:
         path = os.path.join(out_dir, f"rollup_{name}")
-        cascade(lower, name).write.mode("overwrite").parquet(path)
+        tier_counts[name] = _write(cascade(lower, name), path, rows=F.count("*"))["rows"]
         lower = spark.read.parquet(path)
-        tiers[name] = lower
-        tier_counts[name] = lower.count()
 
-    comp = compress_rollup(tiers[cfg.compress_tier], cfg.compress_tier, cfg.compress_value_col)
-    comp_path = os.path.join(out_dir, f"compressed_{cfg.compress_tier}")
-    comp.write.mode("overwrite").parquet(comp_path)
-    bpp = bytes_per_point(spark.read.parquet(comp_path)).collect()
-    bytes_point = float(bpp[0]["bytes_per_point"]) if bpp else None
+    comp = _write(
+        compress_rollup(spark.read.parquet(fine_path), finest, "vsum"),
+        os.path.join(out_dir, f"compressed_{finest}"),
+        bytes_per_point=F.sum(F.length("payload")) / F.sum("n_points"),
+    )
+    n_corrected = int(fine["cnt"] or 0)
 
     wall = time.time() - t_start
-    metrics_rows = [
-        (job_id, "all", "Processed", int(n_corrected), float(wall)),
-    ]
     spark.createDataFrame(
-        metrics_rows, "job_id string, partition_key string, status string, records long, wall_sec double"
+        [(job_id, "all", "Processed", n_corrected, float(wall))],
+        "job_id string, partition_key string, status string, records long, wall_sec double",
     ).write.mode("append").parquet(os.path.join(out_dir, "metrics"))
 
     total_rolled = sum(tier_counts.values())
     return {
         "job_id": job_id,
         "corrected_points": n_corrected,
-        "corrected_rows": corrected_rows,
         "tier_counts": tier_counts,
         "rolled_points_total": total_rolled,
         "rolled_points_per_sec": total_rolled / wall if wall > 0 else None,
-        "compressed_bytes_per_point": bytes_point,
+        "compressed_bytes_per_point": comp["bytes_per_point"],
         "wall_sec": wall,
+        **lin,  # corrected_rows and the kernel's domain counters
+        "null_key_rows_dropped": dropped.get["rows"],
     }
 
 

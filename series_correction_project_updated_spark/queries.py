@@ -21,8 +21,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -117,17 +115,6 @@ def q03_top_orders(spark, sf_dir):
         .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
     )
     return rev.orderBy(F.desc("revenue"), "o_orderkey").limit(10)
-
-
-SQL_Q03 = """
-SELECT o_orderkey, o_orderdate,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY o_orderkey, o_orderdate
-ORDER BY revenue DESC, o_orderkey LIMIT 10
-"""
 
 
 def q05_nation_revenue(spark, sf_dir):
@@ -315,17 +302,6 @@ def _rollup_spark(spark, sf_dir, sec: int):
     )
 
 
-def _rollup_sql(sec: int) -> str:
-    return f"""
-WITH pts AS (SELECT user_id, epoch_ms(ts)/1000.0 AS t, value FROM events)
-SELECT user_id, CAST(floor(t/{sec})*{sec} AS BIGINT) AS bucket_start,
-       count(value) AS cnt, round(sum(value), 4) AS vsum,
-       min(value) AS vmin, max(value) AS vmax,
-       arg_min(value, t) AS vfirst, arg_max(value, t) AS vlast
-FROM pts GROUP BY user_id, bucket_start
-"""
-
-
 def q_retention_1h(spark, sf_dir):
     """Retention policy applied to the 1h tier (operators.retention — the
     third leg of the rollup/downsample/RETENTION engine): keep the last 15
@@ -388,27 +364,6 @@ def q_asof_join(spark, sf_dir):
     return _presort(sel, "user_id").orderBy("user_id", "t", "value")
 
 
-SQL_ASOF_JOIN = """
-WITH pts AS (SELECT user_id, epoch_ms(ts)/1000.0 AS t, value FROM events),
-tier AS (
-  SELECT * FROM (
-    SELECT user_id, CAST(floor(t/3600)*3600 AS DOUBLE) AS t,
-           round(sum(value), 4) AS hsum, count(value) AS hcnt
-    FROM pts GROUP BY 1, 2
-  ) WHERE CAST(t/3600 AS BIGINT) % 2 = 0
-),
-j AS (
-  SELECT p.user_id, p.t, p.value, r.t AS rt, r.hsum, r.hcnt
-  FROM pts p ASOF LEFT JOIN tier r ON p.user_id = r.user_id AND p.t >= r.t
-)
-SELECT user_id, round(t, 6) AS t, value,
-       CASE WHEN rt IS NOT NULL AND t - rt <= 5400 THEN hsum END AS hsum_asof,
-       CASE WHEN rt IS NOT NULL AND t - rt <= 5400 THEN hcnt END AS hcnt_asof,
-       CASE WHEN rt IS NOT NULL AND t - rt <= 5400 THEN rt END AS t_asof
-FROM j ORDER BY user_id, t, value
-"""
-
-
 def _asof_fixture(spark, sf_dir):
     """Shared left/right for the as-of queries: all event points vs a
     sparse EVEN-hour rollup (sparseness exercises no-match and
@@ -458,52 +413,6 @@ def q_asof_fwd_near(spark, sf_dir):
     return _presort(outs[0].unionByName(outs[1]), "user_id").orderBy(
         "dir", "user_id", "t", "value"
     )
-
-
-SQL_ASOF_FWD_NEAR = """
-WITH pts AS (SELECT user_id, epoch_ms(ts)/1000.0 AS t, value FROM events),
-tier AS (
-  SELECT * FROM (
-    SELECT user_id, CAST(floor(t/3600)*3600 AS DOUBLE) AS t,
-           round(sum(value), 4) AS hsum, count(value) AS hcnt
-    FROM pts GROUP BY 1, 2
-  ) WHERE CAST(t/3600 AS BIGINT) % 2 = 0
-),
-fwd AS (
-  SELECT p.user_id, p.t, p.value,
-         (SELECT min(r.t) FROM tier r
-          WHERE r.user_id = p.user_id AND r.t >= p.t) AS rt
-  FROM pts p
-),
-f AS (
-  SELECT 'forward' AS dir, j.user_id, round(j.t, 6) AS t, j.value,
-         CASE WHEN j.rt IS NOT NULL AND j.rt - j.t <= 5400 THEN tr.hsum END AS hsum_asof,
-         CASE WHEN j.rt IS NOT NULL AND j.rt - j.t <= 5400 THEN tr.hcnt END AS hcnt_asof,
-         CASE WHEN j.rt IS NOT NULL AND j.rt - j.t <= 5400 THEN j.rt END AS t_asof
-  FROM fwd j LEFT JOIN tier tr ON tr.user_id = j.user_id AND tr.t = j.rt
-),
-cand AS (
-  SELECT p.user_id, p.t, p.value,
-         (SELECT max(r.t) FROM tier r
-          WHERE r.user_id = p.user_id AND r.t <= p.t AND p.t - r.t <= 5400) AS bt,
-         (SELECT min(r.t) FROM tier r
-          WHERE r.user_id = p.user_id AND r.t >= p.t AND r.t - p.t <= 5400) AS ft
-  FROM pts p
-),
-nj AS (
-  SELECT user_id, t, value,
-         CASE WHEN bt IS NOT NULL AND (ft IS NULL OR t - bt <= ft - t) THEN bt
-              ELSE ft END AS rt
-  FROM cand
-),
-n AS (
-  SELECT 'nearest' AS dir, j.user_id, round(j.t, 6) AS t, j.value,
-         tr.hsum AS hsum_asof, tr.hcnt AS hcnt_asof, j.rt AS t_asof
-  FROM nj j LEFT JOIN tier tr ON tr.user_id = j.user_id AND tr.t = j.rt
-)
-SELECT * FROM (SELECT * FROM f UNION ALL SELECT * FROM n)
-ORDER BY dir, user_id, t, value
-"""
 
 
 def q_interval_join(spark, sf_dir):
@@ -617,14 +526,6 @@ ORDER BY user_id, bucket_start, t
 def q_rollup_1m(spark, sf_dir):
     """1-minute continuous aggregate tier (new rollup layer, SURVEY.md §7)."""
     return _rollup_spark(spark, sf_dir, 60)
-
-
-def q_rollup_1h(spark, sf_dir):
-    return _rollup_spark(spark, sf_dir, 3600)
-
-
-def q_rollup_1d(spark, sf_dir):
-    return _rollup_spark(spark, sf_dir, 86400)
 
 
 _TIERS = ((60, "1m"), (3600, "1h"), (86400, "1d"))
@@ -1796,30 +1697,6 @@ def q_correct_series(spark, sf_dir):
     return correct_series(pts)
 
 
-def q_minhash_pairs(spark, sf_dir):
-    """MinHash near-dup candidates (LSH banding). Hash-function-specific ⇒
-    rows-only check; determinism asserted in tests."""
-    from .operators.dedup import minhash_candidate_pairs
-
-    docs = load(spark, sf_dir, "documents")
-    return minhash_candidate_pairs(docs, text_col="text", id_col="doc_id").orderBy(
-        "doc_a", "doc_b"
-    )
-
-
-def q_simhash_buckets(spark, sf_dir):
-    """SimHash 64-bit signatures + bucket sizes (rows-only)."""
-    from .operators.dedup import simhash_signatures
-
-    docs = load(spark, sf_dir, "documents")
-    sig = simhash_signatures(docs, text_col="text", id_col="doc_id")
-    return (
-        sig.groupBy("band")
-        .agg(F.count("*").alias("n_docs"), F.count_distinct("simhash").alias("n_distinct"))
-        .orderBy("band")
-    )
-
-
 def q_correct_chunked(spark, sf_dir):
     """Skew-capped chunked correction + boundary level-shift realign
     (operators.correct.correct_series_chunked — the hot-series path).
@@ -1957,7 +1834,7 @@ def q_simhash_portable(spark, sf_dir):
     against a DuckDB oracle that recomputes the per-bit signed votes in pure
     SQL. Value-checks the vote fold, the >0 threshold, the little-endian bit
     packing and the top-16-bit banding; only the token-hash primitive differs
-    from q_simhash_buckets' xxhash64 path."""
+    from the non-portable (xxhash64) path of ``simhash_signatures``."""
     from .operators.dedup import simhash_signatures
 
     docs = load(spark, sf_dir, "documents")
@@ -2416,36 +2293,6 @@ def q_ivf_recall(spark, sf_dir):
     # _presort: the rank window + HOF cosine probe segment sits under the
     # final sort — the sampling pass re-ran it (r6)
     return _presort(sel, "query_id").orderBy("query_id", "rank")
-
-
-def q_lsh_recall(spark, sf_dir):
-    """Multi-table LSH quality value-check: 16 independent 2-plane tables
-    (OR-amplification) drive per-pair miss probability low enough that the
-    deterministic seeded index recovers the exact true top-3 on this
-    dataset; the oracle is DuckDB brute force (SQL_KNN). A recall
-    regression in bucketing/rerank breaks the hash match."""
-    from .operators.similarity import lsh_topk
-
-    emb = load(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < 5)
-    return (
-        lsh_topk(emb, queries_df, dim=64, k=3, n_planes=2, n_tables=16)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-        .orderBy("query_id", "rank")
-    )
-
-
-def q_lsh_topk(spark, sf_dir):
-    """Random-hyperplane LSH approximate top-k (similarity.lsh_topk):
-    bucket equi-join + exact cosine re-rank inside the bucket. Rows-only
-    (bucketing is hash-specific); recall vs brute force asserted in pytest."""
-    from .operators.similarity import lsh_topk
-
-    emb = load(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < 5)
-    return lsh_topk(emb, queries_df, dim=64, k=3, n_planes=4).select(
-        "query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine")
-    )
 
 
 def _langid_sql() -> str:
@@ -3875,24 +3722,25 @@ ORDER BY method, query_id, rank
 #: Consolidations (all still covered, see docs/COVERAGE.md):
 #:   * q_rollup_1m/1h/1d → one q_rollup_tiers union (identical per-tier
 #:     semantics + hashes);
-#:   * q_ivf_topk/q_lsh_topk (rows-only) retired in favor of
-#:     q_ivf_recall/q_lsh_recall, which run the SAME operators and
-#:     hash-check them against DuckDB brute force (strictly stronger);
+#:   * q_ivf_topk/q_lsh_topk (rows-only) retired in favor of the
+#:     IVF/LSH recall checks, which run the SAME operators and hash-check
+#:     them against DuckDB brute force (strictly stronger);
 #:   * rows-only q_minhash_pairs/q_simhash_buckets retired in favor of
 #:     their hash-checked *_portable variants (same pipeline, portable hash
 #:     primitive); the xxhash-flavored paths remain pytest-covered.
+#:   Retired query functions with no other caller are deleted.
 #: Entries that fell off the r3 artifact (q_dedup_resolve,
 #: q_excel_roundtrip) are ordered early defensively.
 #:   * q03_top_orders retired for q_interval_join (late r4): its join
 #:     class (J3 broadcast star) stays covered by q05/q14/q_supplier_
-#:     revenue and its top-k shape by q_top5_per_type; the function and
-#:     SQL remain defined above and plan-audited in docs/PLANS.md.
+#:     revenue and its top-k shape by q_top5_per_type; the function
+#:     remains defined above and plan-audited in docs/PLANS.md.
 #: r5 consolidations (all components still hash-covered, docs/COVERAGE.md):
 #:   * q01_pricing_summary + q14_promo_revenue → q_pricing_promo;
 #:   * q05_nation_revenue + q_supplier_revenue → q_star_revenue;
 #:   * q_rollup_tiers + q_rollup_cascade_1h → q_rollup_all (tier column);
 #:   * q_asof_join + q_asof_fwd_near → q_asof_dirs (dir column);
-#:   * q_knn_cosine + q_ivf_recall + q_lsh_recall → q_ann_methods.
+#:   * q_knn_cosine + q_ivf_recall + LSH recall → q_ann_methods.
 #: The freed slots driver-check the round-4 hygiene/sampling/drift/
 #: analytics/streaming/smooth/refresh layers (r4 verdict asks #1-#3, #5, #7).
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {

@@ -2,26 +2,15 @@
 
 The reference infers schemas per file (scripts/batch_correction.py:369-397);
 at 10^12 rows schema-on-read is a liability, so every table here is explicit.
-Shapes follow BASELINE.json ``input_hint`` (pages) and FIXTURES.md §6
-(series/rollup/compressed), plus lineage/metrics mirroring the reference's
-correction-log and batch-summary records
-(scripts/apply_refined_corrections.py:185-194; scripts/batch_correction.py:629-639).
+Shapes follow FIXTURES.md §6 (series/rollup/compressed), plus lineage
+mirroring the reference's correction-log record
+(scripts/apply_refined_corrections.py:185-194).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-#: Primary engine input: Common-Crawl-style pages (BASELINE.json input_hint).
-PAGES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
 
 #: Long-format series points: one numeric signal per (url) over crawl time.
 SERIES_POINTS = T.StructType(
@@ -101,15 +90,5 @@ ROLLUP_WITH_LINEAGE = T.StructType(
     ]
 )
 
-#: Metrics: per-partition/job processing summary (reference batch summary analog).
-METRICS = T.StructType(
-    [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("records", T.LongType(), False),
-        T.StructField("wall_sec", T.DoubleType(), True),
-    ]
-)
 
 TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}

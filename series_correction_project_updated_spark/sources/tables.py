@@ -3,8 +3,6 @@
 - S4: year-to-year differences CSV (wide, ``Year_Pair`` + ``Sensor N``
   columns) → melted long outliers frame
   (apply_refined_corrections.py:39-77: melt + |diff| ≥ 0.1 filter).
-- S6: river-mile map CSV → broadcastable dim table + group-collect
-  (batch_correction.py:427-437).
 - K2/K4: sanitized CSV sink (correction-log analog) routed through the
   formula-escape sanitizer, mirroring the reference's CI-enforced rule that
   every human-facing export is escaped.
@@ -32,12 +30,6 @@ def load_yty_diff_csv(spark: SparkSession, path: str, min_abs_diff: float = 0.1)
         ids=["Year_Pair"], values=sensor_cols, variableColumnName="Sensor", valueColumnName="Difference"
     )
     return long.where(F.abs(F.col("Difference").cast("double")) >= min_abs_diff)
-
-
-def load_river_mile_map(spark: SparkSession, path: str) -> DataFrame:
-    """River-mile CSV → (RIVER_MILE, sensors array) dim, broadcast-sized."""
-    dim = spark.read.csv(path, header=True, inferSchema=True)
-    return dim.groupBy("RIVER_MILE").agg(F.sort_array(F.collect_list("SENSOR_ID")).alias("sensors"))
 
 
 def write_csv_safely(df: DataFrame, path: str, mode: str = "overwrite") -> None:

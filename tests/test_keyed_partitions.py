@@ -1,5 +1,5 @@
 """Per-series ``mapInPandas`` operators: Arrow batch size must not change
-their output, and each site's null-key behaviour is pinned.
+their output, and every site drops null-key rows.
 
 The keyed operators (correction kernel entries, ``compress_rollup``, the
 three smoothers, ``lttb_downsample`` and the clustered ``content_drift``)
@@ -134,7 +134,7 @@ def test_outputs_invariant_to_arrow_batch_size(spark, points, pages):
         pd.testing.assert_frame_equal(small[name], default[name], check_exact=True, obj=name)
 
 
-# --- null keys: each site's behaviour, pinned -------------------------------
+# --- null keys: every site drops the rows ----------------------------------
 
 
 def _with_null_keys(spark, key_col="series_key"):
@@ -163,16 +163,17 @@ def test_kernel_drops_null_key_rows(spark, entry):
 
 
 @pytest.mark.parametrize("op", ["ewma_smooth", "holt_smooth", "ewma_holt_smooth"])
-def test_smoothers_treat_null_keys_as_one_series(spark, op):
+def test_smoothers_drop_null_key_rows(spark, op):
+    """Null-key rows are not one shared series: they yield no output."""
     from series_correction_project_updated_spark.operators import smooth
 
     fn = getattr(smooth, op)
     args = (0.5,) if op == "ewma_smooth" else (0.5, 0.2)
-    out = _sorted(fn(_with_null_keys(spark), *args).toPandas())
-    nulls = out[out["series_key"].isna()].drop(columns="series_key").reset_index(drop=True)
-    keyed = out[out["series_key"] == "a"].drop(columns="series_key").reset_index(drop=True)
-    assert len(nulls) == len(keyed) > 0
-    pd.testing.assert_frame_equal(nulls, keyed, check_exact=True)
+    pts = _with_null_keys(spark)
+    out = _sorted(fn(pts, *args).toPandas())
+    keyed = _sorted(fn(pts.where("series_key IS NOT NULL"), *args).toPandas())
+    assert len(out) > 0 and set(out["series_key"]) == {"a"}
+    pd.testing.assert_frame_equal(out, keyed, check_exact=True)
 
 
 def test_lttb_drops_null_key_rows(spark):
@@ -183,6 +184,8 @@ def test_lttb_drops_null_key_rows(spark):
 
 
 def test_compress_rejects_null_series_key(spark):
+    """Null-key tier rows are rejected by dropping them, not by a JVM
+    NullPointerException: the payloads are those of the keyed rows."""
     from series_correction_project_updated_spark.operators.compress import compress_rollup
 
     tier = spark.createDataFrame(
@@ -191,12 +194,17 @@ def test_compress_rejects_null_series_key(spark):
         ),
         "series_key string, bucket_start long, vsum double",
     )
-    with pytest.raises(Exception):
-        compress_rollup(tier, "1m", num_partitions=2).collect()
+    out = compress_rollup(tier, "1m", num_partitions=2).toPandas()
+    keyed = compress_rollup(tier.where("series_key IS NOT NULL"), "1m", num_partitions=2).toPandas()
+    assert out["series_key"].tolist() == ["a"]
+    assert out["n_points"].tolist() == [1]
+    pd.testing.assert_frame_equal(out, keyed, check_exact=True)
 
 
 @pytest.mark.parametrize("portable", [False, True])
 def test_clustered_drift_rejects_null_url(spark, portable):
+    """Null-url pages are rejected by dropping them, not by a JVM
+    NullPointerException."""
     from series_correction_project_updated_spark.operators.drift import content_drift
 
     pages = spark.createDataFrame(
@@ -209,10 +217,14 @@ def test_clustered_drift_rejects_null_url(spark, portable):
         ),
         "url string, warc_ts timestamp, text string",
     )
-    with pytest.raises(Exception):
-        content_drift(
-            pages.repartition(2, "url"), portable=portable, assume_clustered=True
-        ).collect()
+
+    def drift(df):
+        out = content_drift(df.repartition(2, "url"), portable=portable, assume_clustered=True)
+        return _sorted(out.toPandas())
+
+    out = drift(pages)
+    assert out["url"].tolist() == ["u", "u"]
+    pd.testing.assert_frame_equal(out, drift(pages.where("url IS NOT NULL")), check_exact=True)
 
 
 # --- the batch regrouping generator, without Spark ---------------------------

@@ -215,14 +215,71 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
     from series_correction_project_updated_spark.sources.synth import generate_pages
 
     pages = generate_pages(spark, n_urls=10, samples_per_url=60)
-    summary = run_pipeline(spark, pages, str(tmp_path / "out"))
+    out = tmp_path / "out"
+    summary = run_pipeline(spark, pages, str(out))
+    # each output is written once: no staging directory is left behind
+    assert sorted(os.listdir(out)) == [
+        "compressed_1m", "lineage", "metrics", "rollup_1d", "rollup_1h", "rollup_1m"
+    ]
     assert summary["corrected_points"] > 0
     assert set(summary["tier_counts"]) == {"1m", "1h", "1d"}
-    assert summary["compressed_bytes_per_point"] is not None
-    lineage = spark.read.parquet(str(tmp_path / "out" / "lineage"))
+    for tier, n in summary["tier_counts"].items():
+        assert n == spark.read.parquet(str(out / f"rollup_{tier}")).count(), tier
+    fine = spark.read.parquet(str(out / "rollup_1m"))
+    assert summary["corrected_points"] == fine.agg(F.sum("cnt")).collect()[0][0]
+    comp = spark.read.parquet(str(out / "compressed_1m"))
+    payload, n_points = comp.agg(F.sum(F.length("payload")), F.sum("n_points")).collect()[0]
+    assert summary["compressed_bytes_per_point"] == payload / n_points
+    lineage = spark.read.parquet(str(out / "lineage"))
     assert lineage.where(F.col("step") == "gaps").count() == 10
-    metrics = spark.read.parquet(str(tmp_path / "out" / "metrics"))
+    assert summary["corrected_rows"] == (
+        lineage.where(F.col("step") == "gaps").agg(F.sum("n_rows_out")).collect()[0][0]
+    )
+    metrics = spark.read.parquet(str(out / "metrics"))
     assert metrics.count() == 1
+
+
+def test_run_pipeline_compresses_the_finest_tier(spark, tmp_path):
+    from series_correction_project_updated_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+    from series_correction_project_updated_spark.sources.synth import generate_pages
+
+    pages = generate_pages(spark, n_urls=4, samples_per_url=60)
+    out = tmp_path / "out"
+    summary = run_pipeline(spark, pages, str(out), PipelineConfig(tiers=("1h", "1d")))
+    assert sorted(os.listdir(out)) == [
+        "compressed_1h", "lineage", "metrics", "rollup_1d", "rollup_1h"
+    ]
+    comp = spark.read.parquet(str(out / "compressed_1h"))
+    assert comp.select("tier").distinct().collect()[0][0] == "1h"
+    assert comp.agg(F.sum("n_points")).collect()[0][0] == summary["tier_counts"]["1h"]
+
+
+def test_run_pipeline_domain_counters(spark, tmp_path):
+    """One series with a planted 5-sample gap, a spike and a level step,
+    plus one page with a null url."""
+    from series_correction_project_updated_spark.plans.pipeline import run_pipeline
+
+    t = [60.0 * i for i in range(20)] + [60.0 * i + 300.0 for i in range(20, 40)]
+    v = [1.0] * 25 + [5.0] * 15
+    v[10] = 50.0
+    pdf = pd.DataFrame(
+        {
+            "url": ["a"] * 40 + [None],
+            "warc_ts": pd.to_datetime(t + [120.0], unit="s"),
+            "signal": v + [7.0],
+        }
+    )
+    pages = spark.createDataFrame(pdf, "url string, warc_ts timestamp, signal double")
+    summary = run_pipeline(spark, pages, str(tmp_path / "out"))
+    assert summary["null_key_rows_dropped"] == 1
+    assert summary["gaps_filled"] == 5
+    assert summary["outliers_replaced"] == 1
+    assert summary["jumps_corrected"] == 1
+    assert summary["corrected_rows"] == summary["corrected_points"] == 45
+    assert summary["tier_counts"] == {"1m": 45, "1h": 1, "1d": 1}
 
 
 # --- chunked correction + boundary alignment -----------------------------------
