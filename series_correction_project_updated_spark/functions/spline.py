@@ -29,7 +29,8 @@ def cubic_spline_eval(x: np.ndarray, y: np.ndarray, xq: np.ndarray) -> np.ndarra
     """Evaluate the not-a-knot cubic spline through ``(x, y)`` at ``xq``.
 
     Requires strictly increasing ``x`` with at least 4 points (scipy's
-    ``interp1d(kind='cubic')`` has the same minimum). Query points outside
+    ``interp1d(kind='cubic')`` has the same minimum). Every knot evaluates
+    to its ``y`` exactly. Query points outside
     ``[x[0], x[-1]]`` evaluate to ``NaN``, matching pandas' scipy wrapper
     (``bounds_error=False`` with the default NaN fill).
     """
@@ -103,6 +104,10 @@ def cubic_spline_eval(x: np.ndarray, y: np.ndarray, xq: np.ndarray) -> np.ndarra
     c2 = (3.0 * sl - 2.0 * si - si1) / hi
     c3 = (si + si1 - 2.0 * sl) / (hi * hi)
     out = y[idx] + dx * (si + dx * (c2 + dx * c3))
+    # the last knot sits at the END of the last interval (dx = h[-1], not
+    # 0), where the cubic's round-off would miss y[-1]; every other knot
+    # starts its interval and evaluates to y[i] exactly
+    out[xq == x[-1]] = y[-1]
     out[(xq < x[0]) | (xq > x[-1])] = np.nan
     return out
 

@@ -11,11 +11,20 @@ frames of whole (series, chunk) groups cut from the JVM-sorted Arrow
 batch stream — so a task holds about one Arrow batch plus its largest
 chunk, not its partition.
 
-Chunking: ``chunk_buckets`` buckets per payload — default 16384 (~11 days of
-1m buckets, ~2 years of 1h). Chunks need to be thousands of points for the
-vectorized encoder to amortize; sub-100-point chunks are dominated by NumPy
-setup. At 10^12 raw rows the tier tables are ~60-86400× smaller; compression
-output is the retention artifact.
+One encoder: ``chunk_frame`` turns flat (series, chunk)-sorted arrays plus
+group offsets into ``COMPRESSED`` rows. ``compress_rollup`` calls it on a
+written tier; the build pipeline's kernel pass (``operators/correct``,
+``correct_rollup_lineage``'s ``chunk`` rows) calls it on the finest tier it
+has just rolled up, so the build never re-reads or re-shuffles that tier
+to encode it. The kernel pass cuts chunks with ``chunk_starts``, the numpy
+twin of ``compress_rollup``'s Spark expression; payloads are the same
+bytes either way.
+
+Chunking: ``chunk_buckets`` buckets per payload — default ``CHUNK_BUCKETS``
+= 16384 (~11 days of 1m buckets, ~2 years of 1h). Chunks need to be
+thousands of points for the vectorized encoder to amortize; sub-100-point
+chunks are dominated by NumPy setup. At 10^12 raw rows the tier tables are
+~60-86400× smaller; compression output is the retention artifact.
 """
 
 from __future__ import annotations
@@ -30,11 +39,60 @@ from ..schema import COMPRESSED, TIER_SECONDS
 from ._keyed import map_keyed
 
 
+#: default tier buckets per Gorilla chunk
+CHUNK_BUCKETS = 16384
+
+
+def chunk_starts(bucket_start: np.ndarray, tier: str) -> np.ndarray:
+    """Each bucket's chunk start at the default chunk size:
+    ``floor(bucket_start / span) * span`` with ``span = tier seconds ×
+    CHUNK_BUCKETS`` — the same cut as the Spark expression in
+    ``compress_rollup`` and ``refresh_compressed``."""
+    span = TIER_SECONDS[tier] * CHUNK_BUCKETS
+    return np.floor(np.asarray(bucket_start, dtype=np.int64) / span).astype(np.int64) * span
+
+
+def chunk_frame(
+    keys: np.ndarray,
+    cstarts: np.ndarray,
+    ts: np.ndarray,
+    vals: np.ndarray,
+    offsets: np.ndarray,
+    tier: str,
+) -> pd.DataFrame:
+    """Flat rows sorted by (series, chunk, bucket_start) → one ``COMPRESSED``
+    frame, one row per group ``[offsets[i], offsets[i+1])``.
+
+    Every group is encoded in ONE flat pass (``codec.encode_chunks``): the
+    former per-group pandas groupby loop paid ~20 small-numpy-call
+    overheads per chunk — measured 2.5× per thread on the sf0.1 1m-tier
+    distribution (1,500 × ~234-pt chunks, 530k → 1.32M pts/s), ~2.6× at
+    60-point chunks."""
+    ts = np.asarray(ts, dtype=np.int64)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    g0 = offsets[:-1]  # first row of each group (ts sorted within)
+    g1 = offsets[1:] - 1  # last row — exact [t_min, t_max] bounds
+    return pd.DataFrame(
+        {
+            "series_key": np.asarray(keys, dtype=object)[g0],
+            "tier": tier,
+            "chunk_start": np.asarray(cstarts, dtype=np.int64)[g0],
+            # v2: 64-bit dod escape class (payload magic GOR2); v1
+            # payloads stay readable via decode_chunk's legacy branch
+            "codec": "gorilla-dod-xor-v2",
+            "n_points": offsets[1:] - g0,
+            "t_min": ts[g0],
+            "t_max": ts[g1],
+            "payload": codec.encode_chunks(ts, vals, offsets),
+        }
+    )[COMPRESSED.fieldNames()]
+
+
 def compress_rollup(
     tier_df: DataFrame,
     tier: str,
     value_col: str = "vsum",
-    chunk_buckets: int = 16384,
+    chunk_buckets: int = CHUNK_BUCKETS,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """rollup tier rows → (series_key, tier, chunk_start, codec, n_points, payload).
@@ -57,32 +115,14 @@ def compress_rollup(
 
     def _encode(frames):
         for pdf, offsets in frames:
-            # batch-encode every (series, chunk) group in ONE flat pass
-            # (codec.encode_chunks): the former per-group pandas groupby loop
-            # paid ~20 small-numpy-call overheads per chunk — measured 2.5×
-            # per thread on the sf0.1 1m-tier distribution (1,500 × ~234-pt
-            # chunks, 530k → 1.32M pts/s), ~2.6× at 60-point chunks.
-            keys = pdf["series_key"].to_numpy()
-            cstarts = pdf["chunk_start"].to_numpy("int64")
-            ts_all = pdf["bucket_start"].to_numpy("int64")
-            vals_all = pdf[value_col].to_numpy("float64")
-            payloads = codec.encode_chunks(ts_all, vals_all, offsets)
-            g0 = offsets[:-1]  # first row of each group (ts sorted within)
-            g1 = offsets[1:] - 1  # last row — exact [t_min, t_max] bounds
-            yield pd.DataFrame(
-                {
-                    "series_key": keys[g0],
-                    "tier": tier,
-                    "chunk_start": cstarts[g0],
-                    # v2: 64-bit dod escape class (payload magic GOR2); v1
-                    # payloads stay readable via decode_chunk's legacy branch
-                    "codec": "gorilla-dod-xor-v2",
-                    "n_points": (offsets[1:] - g0).astype(np.int64),
-                    "t_min": ts_all[g0],
-                    "t_max": ts_all[g1],
-                    "payload": payloads,
-                }
-            )[["series_key", "tier", "chunk_start", "codec", "n_points", "t_min", "t_max", "payload"]]
+            yield chunk_frame(
+                pdf["series_key"].to_numpy(),
+                pdf["chunk_start"].to_numpy("int64"),
+                pdf["bucket_start"].to_numpy("int64"),
+                pdf[value_col].to_numpy("float64"),
+                offsets,
+                tier,
+            )
 
     return map_keyed(
         with_chunk, ("series_key", "chunk_start"), ("bucket_start",), _encode, COMPRESSED,
@@ -187,7 +227,7 @@ def refresh_compressed(
     invalidation: DataFrame,
     tier: str,
     value_col: str = "vsum",
-    chunk_buckets: int = 16384,
+    chunk_buckets: int = CHUNK_BUCKETS,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Propagate a tier refresh (operators/refresh.py) into the compressed

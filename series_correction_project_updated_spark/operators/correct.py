@@ -9,7 +9,7 @@ embarrassingly parallel ACROSS series. Every kernel entry is one call into
 sort by segment within each partition, then one ``mapInPandas`` that runs
 the array-native single-node oracle (``oracle.process_tv``) once per
 segment and hands the corrected segments to an emitter — points, the
-finest rollup tier, or rollup plus lineage.
+finest rollup tier, or rollup plus lineage plus the tier's Gorilla chunks.
 
 Scale notes (100 TB / 10^12 rows):
 - Shuffle: exactly ONE hash shuffle on the segment columns; everything
@@ -42,12 +42,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DoubleType, LongType, StructType
 
 from ..oracle import correction as oracle
 from ..oracle.global_mad import MAD_FLOOR, Z_CONST
 from ..schema import CORRECTED_POINTS, ROLLUP, ROLLUP_WITH_LINEAGE, TIER_SECONDS
 from ._keyed import KeyedFrame, map_keyed
+from .compress import chunk_frame, chunk_starts
 
 #: one corrected segment: (segment key tuple, t_out, v_out, lineage stats)
 Segment = tuple[tuple, np.ndarray, np.ndarray, list]
@@ -137,35 +138,58 @@ def _emit_rollup(segments: Iterator[Segment], sec: int) -> Iterator[pd.DataFrame
         yield _rollup_frame(buf, sec)
 
 
-def _emit_rollup_lineage(segments: Iterator[Segment], sec: int) -> Iterator[pd.DataFrame]:
-    """Tier buckets plus per-series lineage rows, as one ``row_kind``
-    union frame per buffer of segments."""
-    roll_cols = ["bucket_start", "cnt", "vsum", "vmin", "vmax", "vfirst", "vlast"]
-    lin_cols = ["step", "n_detected", "n_rows_in", "n_rows_out", "detail"]
-    out_cols = ["series_key"] + roll_cols + lin_cols + ["row_kind"]
+def _widened(side: pd.DataFrame, kind: str) -> pd.DataFrame:
+    """One ``row_kind``'s frame over every ``ROLLUP_WITH_LINEAGE`` column:
+    the other sides' columns are typed nulls (nullable Int64 / float64 /
+    object), so the three sides concatenate dtype-stably."""
+    n = len(side)
+    for f in ROLLUP_WITH_LINEAGE.fields:
+        if f.name not in side:
+            if isinstance(f.dataType, LongType):
+                side[f.name] = pd.array([None] * n, dtype="Int64")
+            elif isinstance(f.dataType, DoubleType):
+                side[f.name] = np.full(n, np.nan)
+            else:
+                side[f.name] = np.full(n, None, dtype=object)
+    side["row_kind"] = kind
+    return side[ROLLUP_WITH_LINEAGE.fieldNames()]
+
+
+def _emit_rollup_lineage(segments: Iterator[Segment], tier: str) -> Iterator[pd.DataFrame]:
+    """Tier buckets, per-series lineage rows and the tier's Gorilla chunks,
+    as one ``row_kind`` union frame per buffer of segments.
+
+    A segment is never split across buffers, so every (series, chunk) run
+    of a buffer's buckets is complete. ``vsum`` is encoded as it reads back
+    from the written tier: Spark stores NaN from pandas as null, and null
+    reads back as the canonical ``np.nan``."""
+    lin_cols = ["series_key", "step", "n_detected", "n_rows_in", "n_rows_out", "detail"]
     for buf in _batched(segments):
-        agg = _rollup_frame(buf, sec)
-        lin_rows = [
-            (key, st, int(d), int(i), int(o), det)
-            for (key,), _t, _v, stats in buf
-            for st, d, i, o, det in stats
-        ]
-        # the absent side's columns get explicit dtypes (nullable Int64 /
-        # float64 / object) so the concat is dtype-stable
-        agg["step"] = None
-        for c in ("n_detected", "n_rows_in", "n_rows_out"):
-            agg[c] = pd.array([None] * len(agg), dtype="Int64")
-        agg["detail"] = None
-        agg["row_kind"] = "rollup"
-        lin = pd.DataFrame(lin_rows, columns=["series_key"] + lin_cols)
+        agg = _rollup_frame(buf, TIER_SECONDS[tier])
+        lin = pd.DataFrame(
+            [
+                (key, st, int(d), int(i), int(o), det)
+                for (key,), _t, _v, stats in buf
+                for st, d, i, o, det in stats
+            ],
+            columns=lin_cols,
+        )
         for c in ("n_detected", "n_rows_in", "n_rows_out"):
             lin[c] = lin[c].astype("Int64")
-        for c in ("bucket_start", "cnt"):
-            lin[c] = pd.array([None] * len(lin), dtype="Int64")
-        for c in ("vsum", "vmin", "vmax", "vfirst", "vlast"):
-            lin[c] = np.nan
-        lin["row_kind"] = "lineage"
-        yield pd.concat([agg[out_cols], lin[out_cols]], ignore_index=True)
+        keys = agg["series_key"].to_numpy()
+        ts = agg["bucket_start"].to_numpy()
+        cstarts = chunk_starts(ts, tier)
+        change = np.ones(len(agg), dtype=bool)
+        change[1:] = (keys[1:] != keys[:-1]) | (cstarts[1:] != cstarts[:-1])
+        vsum = agg["vsum"].to_numpy()
+        chunks = chunk_frame(
+            keys, cstarts, ts, np.where(np.isnan(vsum), np.nan, vsum),
+            np.append(np.flatnonzero(change), len(agg)), tier,
+        )
+        yield pd.concat(
+            [_widened(agg, "rollup"), _widened(lin, "lineage"), _widened(chunks, "chunk")],
+            ignore_index=True,
+        )
 
 
 def correct_series(
@@ -266,13 +290,17 @@ def correct_rollup_lineage(
     (scripts/apply_refined_corrections.py:185-194) at series granularity:
     one ``(step, n_detected, n_rows_in, n_rows_out, detail)`` row per step.
 
+    The same pass also Gorilla-encodes the tier it has just rolled up
+    (``operators.compress.chunk_frame``, default ``CHUNK_BUCKETS``), so the
+    build pipeline needs no second shuffle of the tier to compress it.
+
     Output is a union-typed table discriminated by ``row_kind``:
-    ``'rollup'`` rows carry the ROLLUP columns (lineage columns null),
-    ``'lineage'`` rows carry the LINEAGE columns (rollup columns null).
-    Callers split with a filter; written ``partitionBy('row_kind')`` the
-    split is a pruned directory read, not a scan.
+    ``'rollup'`` rows carry the ROLLUP columns, ``'lineage'`` rows the
+    LINEAGE columns and ``'chunk'`` rows the COMPRESSED columns, payload
+    bytes equal to ``compress_rollup`` of the rollup rows; every other
+    column of a row is null. Callers split with a filter.
     """
-    emit = partial(_emit_rollup_lineage, sec=TIER_SECONDS[tier])
+    emit = partial(_emit_rollup_lineage, tier=tier)
     return _correct_partitions(
         points, ("series_key",), config, emit, ROLLUP_WITH_LINEAGE, num_partitions
     )

@@ -1,13 +1,16 @@
-"""The flagship end-to-end job: pages → series → correct → rollup tiers →
-compress, with lineage and metrics side tables.
+"""The flagship end-to-end job: pages → series → correct (with the finest
+rollup tier, lineage and its Gorilla chunks in one kernel pass) → coarser
+rollup tiers, with a metrics side table.
 
 Distributed replacement for the reference's ``batch_process`` driver loop
 (scripts/batch_correction.py:461-516): config on the driver, data never on
 the driver. The correction kernel runs once (one hash shuffle by series)
-and each output directory is written once; coarser tiers cascade from the
-tier below them. Every count in the returned summary is an
-``Observation`` on the write that produces it, so no job runs only to
-count.
+and is the job's only Python stage: its output holds the finest tier, the
+lineage rows and the finest tier's compressed chunks, and each output
+directory is written once. Coarser tiers cascade in the JVM from the tier
+below them, and the metrics row is a JVM-side one-row plan. Every count in
+the returned summary is an ``Observation`` on the write that produces it,
+so no job runs only to count.
 """
 
 from __future__ import annotations
@@ -21,11 +24,11 @@ from typing import Any
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..operators.compress import compress_rollup
 from ..operators.correct import correct_rollup_lineage
 from ..operators.rollup import cascade
-from ..schema import LINEAGE, ROLLUP, TIER_SECONDS
+from ..schema import COMPRESSED, LINEAGE, ROLLUP, TIER_SECONDS
 from ..sources.synth import pages_to_series
 
 
@@ -87,17 +90,22 @@ def run_pipeline(
         dropped, F.count(F.when(F.col("series_key").isNull(), 1)).alias("rows")
     )
 
-    # The finest tier and the lineage rows come out of ONE kernel execution
-    # (correct_rollup_lineage), held in memory (spilling to disk) while its
-    # two row_kind sides are written; coarser tiers cascade from the written
-    # tier below them, each read ~60x smaller than the raw points.
+    # The finest tier, the lineage rows and the finest tier's Gorilla chunks
+    # come out of ONE kernel execution (correct_rollup_lineage), held in
+    # memory (spilling to disk) while its three row_kind sides are written;
+    # coarser tiers cascade from the written tier below them, each read
+    # ~60x smaller than the raw points.
     finest = cfg.tiers[0]
     fine_path = os.path.join(out_dir, f"rollup_{finest}")
     fused = correct_rollup_lineage(points, finest, cfg.correction, num_partitions=cfg.n_buckets)
     fused.persist(StorageLevel.MEMORY_AND_DISK)
+
+    def side(kind: str, schema: StructType) -> DataFrame:
+        return fused.where(F.col("row_kind") == kind).select(*schema.fieldNames())
+
     try:
         lin = _write(
-            fused.where(F.col("row_kind") == "lineage").select(*LINEAGE.fieldNames()),
+            side("lineage", LINEAGE),
             os.path.join(out_dir, "lineage"),
             # rows INCLUDING null-valued ones (e.g. an all-NaN series that
             # interpolation cannot fill): the kernel's post-gap row count
@@ -108,33 +116,39 @@ def run_pipeline(
         )
         # corrected_points counts non-null VALUES (the sum of the tier's cnt),
         # not rows: an all-NaN series' rows are excluded
-        fine = _write(
-            fused.where(F.col("row_kind") == "rollup").select(*ROLLUP.fieldNames()),
-            fine_path,
-            rows=F.count("*"),
-            cnt=F.sum("cnt"),
+        fine = _write(side("rollup", ROLLUP), fine_path, rows=F.count("*"), cnt=F.sum("cnt"))
+        comp = _write(
+            side("chunk", COMPRESSED),
+            os.path.join(out_dir, f"compressed_{finest}"),
+            bytes_per_point=F.sum(F.length("payload")) / F.sum("n_points"),
         )
     finally:
         fused.unpersist()
 
     tier_counts = {finest: fine["rows"]}
-    lower = spark.read.parquet(fine_path)
+    lower = spark.read.schema(ROLLUP).parquet(fine_path)
     for name in cfg.tiers[1:]:
         path = os.path.join(out_dir, f"rollup_{name}")
         tier_counts[name] = _write(cascade(lower, name), path, rows=F.count("*"))["rows"]
-        lower = spark.read.parquet(path)
-
-    comp = _write(
-        compress_rollup(spark.read.parquet(fine_path), finest, "vsum"),
-        os.path.join(out_dir, f"compressed_{finest}"),
-        bytes_per_point=F.sum(F.length("payload")) / F.sum("n_points"),
-    )
+        lower = spark.read.schema(ROLLUP).parquet(path)
     n_corrected = int(fine["cnt"] or 0)
 
+    # Every series yields rollup rows, so an empty finest tier means an
+    # empty kernel output. AQE then folds the cached scan out of every
+    # write plan, and the kernel-input observation with it: count the
+    # null-key rows directly, a job only on such an input.
+    if tier_counts[finest]:
+        n_dropped = dropped.get["rows"]
+    else:
+        n_dropped = pages_to_series(pages).where(F.col("series_key").isNull()).count()
+
     wall = time.time() - t_start
-    spark.createDataFrame(
-        [(job_id, "all", "Processed", n_corrected, float(wall))],
-        "job_id string, partition_key string, status string, records long, wall_sec double",
+    spark.range(1, numPartitions=1).select(
+        F.lit(job_id).alias("job_id"),
+        F.lit("all").alias("partition_key"),
+        F.lit("Processed").alias("status"),
+        F.lit(n_corrected).cast("long").alias("records"),
+        F.lit(float(wall)).alias("wall_sec"),
     ).write.mode("append").parquet(os.path.join(out_dir, "metrics"))
 
     total_rolled = sum(tier_counts.values())
@@ -147,7 +161,7 @@ def run_pipeline(
         "compressed_bytes_per_point": comp["bytes_per_point"],
         "wall_sec": wall,
         **lin,  # corrected_rows and the kernel's domain counters
-        "null_key_rows_dropped": dropped.get["rows"],
+        "null_key_rows_dropped": n_dropped,
     }
 
 

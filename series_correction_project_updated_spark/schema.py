@@ -69,8 +69,9 @@ LINEAGE = T.StructType(
 )
 
 #: Union-typed single-pass output of ``correct_rollup_lineage``: ``row_kind``
-#: discriminates ROLLUP rows from LINEAGE rows (the other side's columns are
-#: null). Everything except the key and discriminator is nullable by design.
+#: discriminates ROLLUP rows ('rollup'), LINEAGE rows ('lineage') and
+#: COMPRESSED rows ('chunk'); a row's columns of the other two sides are
+#: null. Everything except the key and discriminator is nullable by design.
 ROLLUP_WITH_LINEAGE = T.StructType(
     [
         T.StructField("series_key", T.StringType(), False),
@@ -86,6 +87,13 @@ ROLLUP_WITH_LINEAGE = T.StructType(
         T.StructField("n_rows_in", T.LongType(), True),
         T.StructField("n_rows_out", T.LongType(), True),
         T.StructField("detail", T.StringType(), True),
+        T.StructField("tier", T.StringType(), True),
+        T.StructField("chunk_start", T.LongType(), True),
+        T.StructField("codec", T.StringType(), True),
+        T.StructField("n_points", T.LongType(), True),
+        T.StructField("t_min", T.LongType(), True),
+        T.StructField("t_max", T.LongType(), True),
+        T.StructField("payload", T.BinaryType(), True),
         T.StructField("row_kind", T.StringType(), False),
     ]
 )

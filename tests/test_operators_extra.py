@@ -211,6 +211,7 @@ def test_checkpoint_resume_skips_completed(spark, tmp_path):
 
 
 def test_run_pipeline_end_to_end(spark, tmp_path):
+    from series_correction_project_updated_spark.operators.compress import compress_rollup
     from series_correction_project_updated_spark.plans.pipeline import run_pipeline
     from series_correction_project_updated_spark.sources.synth import generate_pages
 
@@ -230,6 +231,12 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
     comp = spark.read.parquet(str(out / "compressed_1m"))
     payload, n_points = comp.agg(F.sum(F.length("payload")), F.sum("n_points")).collect()[0]
     assert summary["compressed_bytes_per_point"] == payload / n_points
+    # the serve law: the written chunks are compress_rollup of the written tier
+    by = ["series_key", "chunk_start"]
+    pd.testing.assert_frame_equal(
+        comp.toPandas().sort_values(by).reset_index(drop=True),
+        compress_rollup(fine, "1m").toPandas().sort_values(by).reset_index(drop=True),
+    )
     lineage = spark.read.parquet(str(out / "lineage"))
     assert lineage.where(F.col("step") == "gaps").count() == 10
     assert summary["corrected_rows"] == (
@@ -237,6 +244,37 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
     )
     metrics = spark.read.parquet(str(out / "metrics"))
     assert metrics.count() == 1
+
+
+@pytest.mark.parametrize("source", ["local", "parquet"])
+def test_run_pipeline_on_empty_input(spark, tmp_path, source):
+    """An empty pages input writes every output empty, with its schema, and
+    returns zero counts (an empty kernel output must not lose the
+    kernel-input observation)."""
+    from series_correction_project_updated_spark.plans.pipeline import run_pipeline
+    from series_correction_project_updated_spark.schema import COMPRESSED, LINEAGE, ROLLUP
+
+    pages = spark.createDataFrame([], "url string, warc_ts timestamp, signal double")
+    if source == "parquet":
+        pages.write.parquet(str(tmp_path / "pages"))
+        pages = spark.read.parquet(str(tmp_path / "pages"))
+    out = tmp_path / "out"
+    summary = run_pipeline(spark, pages, str(out))
+    assert summary["tier_counts"] == {"1m": 0, "1h": 0, "1d": 0}
+    for key in (
+        "corrected_points", "corrected_rows", "gaps_filled", "outliers_replaced",
+        "jumps_corrected", "null_key_rows_dropped", "rolled_points_total",
+    ):
+        assert summary[key] == 0, key
+    schemas = {
+        "lineage": LINEAGE, "compressed_1m": COMPRESSED,
+        **{f"rollup_{t}": ROLLUP for t in ("1m", "1h", "1d")},
+    }
+    for name, schema in schemas.items():
+        df = spark.read.parquet(str(out / name))
+        assert df.schema.simpleString() == schema.simpleString(), name
+        assert df.count() == 0, name
+    assert spark.read.parquet(str(out / "metrics")).count() == 1
 
 
 def test_run_pipeline_compresses_the_finest_tier(spark, tmp_path):
@@ -339,21 +377,36 @@ def test_streaming_rollup_matches_batch(spark, tmp_path):
 
 
 def test_fused_rollup_lineage_matches_staged(spark):
+    from series_correction_project_updated_spark.operators.compress import compress_rollup
     from series_correction_project_updated_spark.operators.correct import (
         correct_and_rollup,
         correct_rollup_lineage,
     )
     from series_correction_project_updated_spark.oracle import correction as oracle
+    from series_correction_project_updated_spark.schema import COMPRESSED
     from series_correction_project_updated_spark.sources.synth import (
         generate_pages,
         pages_to_series,
     )
 
-    points = pages_to_series(generate_pages(spark, n_urls=8, samples_per_url=120))
+    # besides the generated pages: a series over 16,384 one-minute buckets
+    # (two chunks), an all-NaN series (null vsum) and a single-bucket series
+    n_long = 17_000
+    extra = pd.DataFrame(
+        {
+            "series_key": ["long"] * n_long + ["nan"] * 10 + ["single"],
+            "t": [60.0 * i for i in range(n_long)] + [60.0 * i for i in range(10)] + [90.0],
+            "value": [1.0 + 0.01 * (i % 7) for i in range(n_long)] + [np.nan] * 10 + [3.0],
+        }
+    )
+    points = pages_to_series(generate_pages(spark, n_urls=8, samples_per_url=120)).unionByName(
+        spark.createDataFrame(extra, "series_key string, t double, value double")
+    )
     fused = correct_rollup_lineage(points, "1m", num_partitions=8).toPandas()
 
     roll_cols = ["series_key", "bucket_start", "cnt", "vsum", "vmin", "vmax", "vfirst", "vlast"]
     lin_cols = ["series_key", "step", "n_detected", "n_rows_in", "n_rows_out", "detail"]
+    chunk_cols = COMPRESSED.fieldNames()
     got_roll = (
         fused[fused.row_kind == "rollup"][roll_cols]
         .astype({"bucket_start": "int64", "cnt": "int64"})
@@ -366,11 +419,18 @@ def test_fused_rollup_lineage_matches_staged(spark):
         .sort_values(["series_key", "step"])
         .reset_index(drop=True)
     )
+    got_chunks = (
+        fused[fused.row_kind == "chunk"][chunk_cols]
+        .astype({c: "int64" for c in ("chunk_start", "n_points", "t_min", "t_max")})
+        .sort_values(["series_key", "chunk_start"])
+        .reset_index(drop=True)
+    )
 
-    want_roll = (
-        correct_and_rollup(points, "1m", num_partitions=8)
-        .toPandas()
-        .sort_values(roll_cols[:2])
+    staged = correct_and_rollup(points, "1m", num_partitions=8)
+    want_roll = staged.toPandas().sort_values(roll_cols[:2]).reset_index(drop=True)
+    # the serve law: the kernel's chunks are compress_rollup of its tier
+    want_chunks = (
+        compress_rollup(staged, "1m").toPandas().sort_values(["series_key", "chunk_start"])
         .reset_index(drop=True)
     )
     # lineage reference: the frame pipeline per series, in pandas
@@ -383,10 +443,16 @@ def test_fused_rollup_lineage_matches_staged(spark):
         .sort_values(["series_key", "step"])
         .reset_index(drop=True)
     )
-    assert len(want_lin) == 3 * 8
+    assert len(want_lin) == 3 * 11
 
     pd.testing.assert_frame_equal(got_roll, want_roll, check_dtype=False)
     pd.testing.assert_frame_equal(got_lin, want_lin, check_dtype=False)
+    pd.testing.assert_frame_equal(got_chunks, want_chunks, check_dtype=False)
+    per_key = got_chunks.groupby("series_key")["n_points"].agg(["size", "sum"])
+    assert per_key.loc["long", "size"] == 2 and per_key.loc["long", "sum"] == n_long
+    assert per_key.loc["single", "size"] == 1 and per_key.loc["single", "sum"] == 1
+    assert got_roll.loc[got_roll.series_key == "nan", "vsum"].isna().all()
+    assert per_key.loc["nan", "sum"] == 10
 
 
 def test_pipeline_rejects_non_nested_tiers(spark, tmp_path):

@@ -374,7 +374,7 @@ def test_outlier_method_variants_match_oracle(spark, series_pdf, method):
     [
         ("correct_series", 40),
         ("correct_and_rollup", 40),
-        ("correct_rollup_lineage", 43),
+        ("correct_rollup_lineage", 44),  # 40 buckets, 3 lineage rows, 1 chunk
         ("correct_series_chunked", 40),
     ],
 )

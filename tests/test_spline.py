@@ -74,6 +74,16 @@ def test_random_spacing_property():
     inner()
 
 
+def test_last_knot_is_exact():
+    """Regression: the last knot was evaluated as the END of the last
+    interval's cubic (dx = h[-1]) and missed y[-1] by 2.2e-8 on this
+    ill-conditioned spacing (a Hypothesis find of the property above)."""
+    steps, seed = [1.0, 0.01171875, 0.5, 75.0], 27493
+    x = np.concatenate([[0.0], np.cumsum(steps)])
+    y = np.random.default_rng(seed).normal(size=len(x)) * 100
+    np.testing.assert_array_equal(cubic_spline_eval(x, y, x), y)
+
+
 def test_knot_passthrough_and_oob_nan():
     rng = np.random.default_rng(11)
     x = np.sort(rng.uniform(-5, 5, 9))
