@@ -12,18 +12,21 @@ New code (the reference repo has no compression layer); used by the rollup
 retention tiers to store points as `binary`. Encode/decode are exact
 (bit-roundtrip) for any float64 incl. NaN; timestamps are int64 seconds.
 
+Payload: ``MAGIC`` + ``<IQ`` (n points, timestamp-section bytes) + the
+timestamp section + the value section, each section zero-padded to a byte
+boundary.
+
 Encoding is NumPy-vectorized: per-element variable-length codes are computed
 columnar (bit_length/clz/ctz via shift cascades, delta-of-delta buckets via
-masks), then scattered into one bit plane with ≤64 vectorized passes and
-``np.packbits``. Decoding is BLOCK-vectorized (r3 verdict #2): the whole
-payload unpacks to a bit plane once, per-position class/length tables are
-computed columnar, a minimal scalar chain walk recovers only the field START
-positions (each field's position depends on every previous field's length —
-the one irreducibly sequential part of a prefix-coded stream), and then all
-payload bits are gathered, sign-extended, and prefix-summed (cumsum for
-timestamps, ``bitwise_xor.accumulate`` for values) in vectorized passes.
-Legacy GOR1 payloads and the property-test reference use the original
-field-at-a-time scalar decoder (``_decode_*_scalar``).
+masks), then scattered into one bit plane with ``np.packbits``
+(``encode_chunk`` per chunk; ``encode_chunks`` for many chunks at once,
+byte-identical). The one decoder, ``decode_chunks``, decodes a batch of
+payloads: dod field starts come from a columnar class table by pointer
+doubling, XOR fields from a run-collapsing walk, and payload bits are
+gathered, sign-extended and prefix-summed in vectorized passes. It rejects a
+payload whose sections do not end where their decoded fields end. The
+field-at-a-time scalar decoder (``_BitReader``, ``_decode_*_scalar``) is
+the reference the tests check ``decode_chunks`` against.
 """
 
 from __future__ import annotations
@@ -32,13 +35,10 @@ import struct
 
 import numpy as np
 
-# Format v2: the r2 overflow fix split the old '1111'+32b dod class into
-# '11110'+32b / '11111'+64b — an incompatible bitstream change, so the magic
-# was bumped (GOR1 payloads would otherwise silently mis-decode: the old
-# 32-bit class's MSB would be consumed as the new class bit). GOR1 payloads
-# remain decodable via a legacy branch in ``decode_timestamps``.
+# Format magic. The dod classes end in '11110'+32b / '11111'+64b (a 64-bit
+# escape). The earlier GOR1 stream had a single '1111'+32b top class and is
+# not readable here: ``decode_chunks`` rejects its magic.
 MAGIC = b"GOR2"
-MAGIC_V1 = b"GOR1"
 
 _U64 = np.uint64
 _ONE = np.uint64(1)
@@ -73,10 +73,9 @@ def _unzigzag(v: int) -> int:
 def _pack_codes(codes_list, lens_list) -> bytes:
     """Scatter variable-length MSB-first codes into one bit plane.
 
-    codes_list/lens_list: parallel lists of uint64 arrays (each code ≤64
-    bits); streams are concatenated element-interleaved in list order per
-    index? No — they are concatenated ARRAY BY ARRAY (each (codes, lens)
-    pair is one contiguous segment of the stream).
+    codes_list/lens_list: parallel lists of uint64 code arrays and their bit
+    lengths (each code ≤64 bits). Each (codes, lens) pair is one contiguous
+    segment of the stream, in list order; zero-length codes emit nothing.
     """
     codes = np.concatenate([np.asarray(c, dtype=np.uint64) for c in codes_list])
     lens = np.concatenate([np.asarray(l, dtype=np.int64) for l in lens_list])
@@ -186,16 +185,16 @@ def _encode_timestamps_codes(ts: np.ndarray) -> tuple[list, list]:
     return [head_codes, first, inter_codes], [head_lens, np.array([64]), inter_lens]
 
 
-def _decode_timestamps_scalar(r: _BitReader, n: int, legacy_v1: bool = False) -> np.ndarray:
+def _decode_timestamps_scalar(r: _BitReader, n: int) -> np.ndarray:
     # int64 wraparound on the running delta is part of the format (the
     # 64-bit escape class round-trips extreme dods through two's
     # complement; vec==scalar property tests pin it) — silence the
     # scalar-add overflow warning rather than mask real errors elsewhere
     with np.errstate(over="ignore"):
-        return _decode_timestamps_scalar_inner(r, n, legacy_v1)
+        return _decode_timestamps_scalar_inner(r, n)
 
 
-def _decode_timestamps_scalar_inner(r: _BitReader, n: int, legacy_v1: bool) -> np.ndarray:
+def _decode_timestamps_scalar_inner(r: _BitReader, n: int) -> np.ndarray:
     out = np.empty(n, dtype=np.int64)
     first = r.read(64)
     if first >= 1 << 63:
@@ -219,8 +218,6 @@ def _decode_timestamps_scalar_inner(r: _BitReader, n: int, legacy_v1: bool) -> n
                 bits, dod = 9, r.read(9)
             elif r.read(1) == 0:
                 bits, dod = 12, r.read(12)
-            elif legacy_v1:
-                bits, dod = 32, r.read(32)  # GOR1: '1111'+32b, no class bit
             elif r.read(1) == 0:
                 bits, dod = 32, r.read(32)
             else:
@@ -351,7 +348,7 @@ def _decode_values_scalar(r: _BitReader, n: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized block decode (GOR2 hot path)
+# Block decode helpers (``decode_chunks``)
 # ---------------------------------------------------------------------------
 
 
@@ -373,12 +370,15 @@ def _gather_fields(buf: np.ndarray, pos: np.ndarray, length: np.ndarray) -> np.n
 
 
 def _padded_buf(data: bytes) -> np.ndarray:
-    return np.concatenate([np.frombuffer(data, dtype=np.uint8), np.zeros(16, np.uint8)])
+    """``data`` plus 24 zero bytes: a chunk's 16 bytes of head and first
+    delta are gathered before its section length is checked, so a
+    truncated last section still reads inside the buffer."""
+    return np.concatenate([np.frombuffer(data, dtype=np.uint8), np.zeros(24, np.uint8)])
 
 
 def _bits_val(bits: np.ndarray, pos: int, width: int) -> int:
     """Scalar ≤64-bit read from the unpacked bit plane (cold path: only
-    window/class headers, a handful per run)."""
+    window headers, a handful per run)."""
     v = 0
     for j in range(width):
         v = (v << 1) | int(bits[pos + j])
@@ -407,40 +407,29 @@ def _zero_run(bits: np.ndarray, pos: int, cap: int) -> int:
     return cap
 
 
-def _stride_run(bits: np.ndarray, pos: int, stride: int, cap: int, ones: int, term: bool) -> int:
-    """Count consecutive fixed-``stride`` fields starting at ``pos`` whose
-    header is ``ones`` 1-bits (followed by a 0-bit iff ``term``) — e.g.
-    '10'+payload reuse fields (ones=1, term=True) or a dod class. The
-    first field is known-valid; candidates are checked in vectorized
-    growing blocks (start positions are arithmetic while the run holds).
-    Candidates past the padded bit plane can't exist (padding bits are 0,
-    so they'd fail the ones-check anyway) — clamp to stay indexable."""
-    probe = ones + (1 if term else 0)
-    cap = min(cap, (len(bits) - probe - pos) // stride + 1)
-    # scalar peek at candidates 2..5: short runs exit numpy-free. Gap-y
-    # rollup tiers emit many length-1..3 class runs (each missing bucket
-    # is a ±gap dod pair), where one vectorized block check (~26µs:
-    # arange+ones+flatnonzero) costs more than the whole run decodes for —
-    # four ~1µs scalar probes before vectorizing is the break-even.
+def _stride_run(bits: np.ndarray, pos: int, stride: int, cap: int) -> int:
+    """Count consecutive fixed-``stride`` '10'+payload window-reuse fields
+    starting at ``pos``. The first field is known-valid; candidates are
+    checked in vectorized growing blocks (start positions are arithmetic
+    while the run holds). Candidates past the padded bit plane can't exist
+    (padding bits are 0, so they'd fail the '1' check anyway) — clamp to
+    stay indexable."""
+    cap = min(cap, (len(bits) - 2 - pos) // stride + 1)
+    # scalar peek at candidates 2..5: short runs exit numpy-free; one
+    # vectorized block check (~26µs: arange+flatnonzero) costs more than a
+    # length-1..3 run decodes for — four ~1µs scalar probes are the
+    # break-even.
     count = 1
     while count < min(cap, 5):
         q = pos + stride * count
-        good = all(bits[q + j] for j in range(ones))
-        if good and term and bits[q + ones]:
-            good = False
-        if not good:
+        if not bits[q] or bits[q + 1]:
             return count
         count += 1
     block = 64
     while count < cap:
         e = min(count + block, cap)
         qs = pos + stride * np.arange(count, e, dtype=np.int64)
-        ok = np.ones(len(qs), dtype=bool)
-        for j in range(ones):
-            ok &= bits[qs + j] == 1
-        if term:
-            ok &= bits[qs + ones] == 0
-        bad = np.flatnonzero(~ok)
+        bad = np.flatnonzero((bits[qs] == 0) | (bits[qs + 1] == 1))
         if len(bad):
             return count + int(bad[0])
         count = e
@@ -455,184 +444,32 @@ def _sign_extend(raw: np.ndarray, bits: int) -> np.ndarray:
     return np.where(out >= 1 << (bits - 1), out - (1 << bits), out)
 
 
-def _expand_runs(runs: list, with_shift: bool):
-    """Expand recorded (idx, count, pos0, stride, pay[, shift]) runs into
-    flat per-field (dst, pos, len[, shift]) arrays — the repeat/cumsum
+def _intra(counts: np.ndarray) -> np.ndarray:
+    """[0..c0), [0..c1), ... concatenated — the arange-minus-repeat trick."""
+    total = int(counts.sum())
+    return np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(counts) - counts, counts)
+
+
+def _expand_runs(runs: list):
+    """Expand recorded (idx, count, pos0, stride, pay, shift) runs into
+    flat per-field (dst, pos, len, shift) arrays — the repeat/cumsum
     trick, so payloads for ALL runs gather in one pass regardless of how
     short individual runs were."""
     cols = list(zip(*runs))
     cnts = np.array(cols[1], dtype=np.int64)
-    total = int(cnts.sum())
 
     def rep(vals):
         return np.repeat(np.array(vals, dtype=np.int64), cnts)
 
-    intra = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(cnts) - cnts, cnts)
-    dst = rep(cols[0]) + intra
-    ps = rep(cols[2]) + rep(cols[3]) * intra
-    lens = rep(cols[4])
-    if with_shift:
-        return dst, ps, lens, rep(cols[5])
-    return dst, ps, lens
+    intra = _intra(cnts)
+    return rep(cols[0]) + intra, rep(cols[2]) + rep(cols[3]) * intra, rep(cols[4]), rep(cols[5])
 
 
-#: leading-ones class c → (header bits, payload bits); c=0 is the '0' field
-_DOD_HDR_PAY = {1: (2, 7), 2: (3, 9), 3: (4, 12), 4: (5, 32), 5: (5, 64)}
-
-#: the same table as parallel lookup arrays indexed by class (0..5), for
-#: the batch table decoder: header bits, payload bits, total field bits
+#: dod field class (count of leading 1-bits, 0..5) → header bits, payload
+#: bits, total field bits; class 0 is the 1-bit '0' field (dod == 0)
 _CLS_HDR = np.array([0, 2, 3, 4, 5, 5], dtype=np.int64)
 _CLS_PAY = np.array([0, 7, 9, 12, 32, 64], dtype=np.int64)
 _CLS_LEN = np.array([1, 9, 12, 16, 37, 69], dtype=np.int64)
-
-
-#: after this many walk iterations, re-evaluate run-collapse efficiency
-_RUN_PROBE = 64
-#: below this average fields-per-iteration, switch to the chain fallback
-_RUN_MIN_AVG = 4.0
-
-
-def _ts_chain_tail(bits: np.ndarray, pos: int, count: int) -> tuple[np.ndarray, np.ndarray]:
-    """Chain-walk fallback for run-hostile dod streams (classes alternate
-    every field or two, so per-run vector overhead loses): per-position
-    class/length tables are built columnar over the remaining plane, the
-    walk is a plain list-indexed position chase, and (starts, classes)
-    come back as arrays for the same columnar payload extraction."""
-    nb = len(bits)
-    pad = np.concatenate([bits, np.zeros(5, np.uint8)]).astype(np.int64)
-    ones = [pad[j : j + nb] for j in range(5)]  # ones[j][p] == bits[p+j]
-    cls_at = (
-        ones[0]
-        + ones[0] * ones[1]
-        + ones[0] * ones[1] * ones[2]
-        + ones[0] * ones[1] * ones[2] * ones[3]
-        + ones[0] * ones[1] * ones[2] * ones[3] * ones[4]
-    )
-    len_at = np.array([1, 9, 12, 16, 37, 69], dtype=np.int64)[cls_at]
-    lens = len_at.tolist()
-    starts = []
-    append = starts.append
-    for _ in range(count):
-        append(pos)
-        pos += lens[pos]
-    starts = np.array(starts, dtype=np.int64)
-    return starts, cls_at[starts]
-
-
-def _decode_timestamps_vec(data: bytes, n: int) -> np.ndarray:
-    """Run-collapsing block decode: the stream is walked RUN by run, not
-    field by field — a run of dod=0 fields is one vectorized zero-scan, a
-    run of same-class fields has arithmetic start positions checked in one
-    vectorized pass. Rollup-tier timestamps are near-regular (dod≈0), so
-    the walk does O(#irregularities) Python iterations for n fields, then
-    payloads gather + sign-extend + double-cumsum columnar. Streams where
-    classes flip every field or two (runs don't pay) are detected after
-    ``_RUN_PROBE`` iterations and finish on the chain-walk fallback."""
-    out = np.empty(n, dtype=np.int64)
-    head = int.from_bytes(data[0:8], "big")
-    out[0] = head - (1 << 64) if head >= 1 << 63 else head
-    if n == 1:
-        return out
-    first_delta = _unzigzag(int.from_bytes(data[8:16], "big"))
-    if n == 2:
-        out[1] = out[0] + first_delta
-        return out
-    m = n - 2
-    buf = _padded_buf(data)
-    bits = np.unpackbits(buf)
-    dod = np.zeros(m, dtype=np.int64)
-    pos = 128
-    i = 0
-    iters = 0
-    runs = []  # (field_idx, count, payload_pos0, stride, pay_bits)
-    chain: tuple[np.ndarray, np.ndarray] | None = None
-    while i < m:
-        iters += 1
-        if iters > _RUN_PROBE and i / iters < _RUN_MIN_AVG:
-            chain = (_ts_chain_tail(bits, pos, m - i), i)
-            break
-        if bits[pos] == 0:
-            k = _zero_run(bits, pos, m - i)
-            pos += k
-            i += k
-            continue
-        c = 1
-        while c < 5 and bits[pos + c]:
-            c += 1
-        hdr, pay = _DOD_HDR_PAY[c]
-        stride = hdr + pay
-        cnt = _stride_run(bits, pos, stride, m - i, ones=c, term=c < 5)
-        runs.append((i, cnt, pos + hdr, stride, pay))
-        pos += stride * cnt
-        i += cnt
-    if runs:
-        dst, ps, lens = _expand_runs(runs, with_shift=False)
-        raw = _gather_fields(buf, ps, lens)
-        for _c, (_hdr, pay) in _DOD_HDR_PAY.items():
-            sel = lens == pay
-            if sel.any():
-                dod[dst[sel]] = _sign_extend(raw[sel], pay)
-    if chain is not None:
-        (starts, cls), i0 = chain
-        for c, (hdr, pay) in _DOD_HDR_PAY.items():
-            sel = np.flatnonzero(cls == c)
-            if len(sel) == 0:
-                continue
-            raw = _gather_fields(buf, starts[sel] + hdr, np.full(len(sel), pay, np.int64))
-            dod[i0 + sel] = _sign_extend(raw, pay)
-    deltas = np.empty(n - 1, dtype=np.int64)
-    deltas[0] = first_delta
-    np.cumsum(dod, out=deltas[1:])
-    deltas[1:] += first_delta
-    np.cumsum(deltas, out=out[1:])
-    out[1:] += out[0]
-    return out
-
-
-def _decode_values_vec(data: bytes, n: int) -> np.ndarray:
-    """Run-collapsing block decode of the XOR stream. Gorilla windows are
-    long-lived (the reuse condition only tightens at a violation), so the
-    stream is dominated by fixed-stride '10'+payload runs and '0' repeats —
-    both collapse to one vectorized scan each; '11' window headers are the
-    only per-field scalar work. Payloads then gather in one pass and the
-    values materialize via ``bitwise_xor.accumulate``."""
-    head = int.from_bytes(data[0:8], "big")
-    if n == 1:
-        return np.array([head], dtype=np.uint64).view(np.float64)
-    m = n - 1
-    buf = _padded_buf(data)
-    bits = np.unpackbits(buf)
-    pos = 64
-    i = 0
-    lead = length = 0
-    runs = []  # (field_idx, count, payload_pos0, stride, pay_bits, lshift)
-    while i < m:
-        if bits[pos] == 0:
-            k = _zero_run(bits, pos, m - i)
-            pos += k
-            i += k
-            continue
-        if bits[pos + 1]:  # '11' — new window header (scalar, rare)
-            lead = _bits_val(bits, pos + 2, 5)
-            length = _bits_val(bits, pos + 7, 6) + 1
-            runs.append((i, 1, pos + 13, 0, length, 64 - lead - length))
-            pos += 13 + length
-            i += 1
-            continue
-        stride = 2 + length  # '10' reuse run — arithmetic starts
-        cnt = _stride_run(bits, pos, stride, m - i, ones=1, term=True)
-        runs.append((i, cnt, pos + 2, stride, length, 64 - lead - length))
-        pos += stride * cnt
-        i += cnt
-    xors = np.zeros(m, dtype=np.uint64)
-    if runs:
-        dst, ps, lens, shf = _expand_runs(runs, with_shift=True)
-        raw = _gather_fields(buf, ps, lens)
-        xors[dst] = raw << shf.astype(np.uint64)
-    out = np.empty(n, dtype=np.uint64)
-    out[0] = head
-    out[1:] = xors
-    return np.bitwise_xor.accumulate(out).view(np.float64)
 
 
 # ---------------------------------------------------------------------------
@@ -645,7 +482,7 @@ def encode_chunk(ts: np.ndarray, values: np.ndarray) -> bytes:
 
     Validation raises (never ``assert`` — stripped under ``python -O``,
     and executors may run optimized). n=0 encodes to a bare header that
-    ``decode_chunk`` round-trips to empty arrays."""
+    ``decode_chunks`` round-trips to empty arrays."""
     if len(ts) != len(values):
         raise ValueError(f"length mismatch: {len(ts)} timestamps vs {len(values)} values")
     if len(ts) == 0:
@@ -821,46 +658,35 @@ def encode_chunks(ts: np.ndarray, values: np.ndarray, offsets: np.ndarray) -> li
     return out
 
 
-def decode_chunk(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
-    magic = payload[:4]
-    if magic not in (MAGIC, MAGIC_V1):
-        raise ValueError(f"not a Gorilla chunk (magic {magic!r})")
-    n, tlen = struct.unpack("<IQ", payload[4:16])
-    if n == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    tseg, vseg = payload[16 : 16 + tlen], payload[16 + tlen :]
-    if magic == MAGIC_V1:  # legacy stream: scalar decoder understands it
-        return (
-            _decode_timestamps_scalar(_BitReader(tseg), n, legacy_v1=True),
-            _decode_values_scalar(_BitReader(vseg), n),
+def _check_section_ends(what: str, ends: np.ndarray, nbytes: np.ndarray, chunks: np.ndarray) -> None:
+    """Raise unless every section's last decoded field ends in the
+    section's last byte — bit ``[8·L − 7, 8·L]`` of its L bytes, since the
+    encoder zero-pads a section only up to the byte boundary. A truncated
+    or overlong section, or a wrong ``tlen``, moves that end."""
+    bad = np.flatnonzero((ends > 8 * nbytes) | (ends < 8 * nbytes - 7))
+    if len(bad):
+        j = bad[0]
+        raise ValueError(
+            f"malformed Gorilla chunk {chunks[j]}: its {what} fields end at bit "
+            f"{ends[j]}, but its {what} section holds {nbytes[j]} bytes"
         )
-    return _decode_timestamps_vec(tseg, n), _decode_values_vec(vseg, n)
-
-
-def _intra(counts: np.ndarray) -> np.ndarray:
-    """[0..c0), [0..c1), ... concatenated — the arange-minus-repeat trick."""
-    total = int(counts.sum())
-    return np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(counts) - counts, counts)
 
 
 def decode_chunks(payloads) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch ``decode_chunk`` over a sequence of payloads → flat
-    ``(timestamps, values, offsets)`` with chunk c occupying
-    ``[offsets[c], offsets[c+1])`` — value-identical to per-chunk decode
-    (adversarial + hypothesis equivalence suites).
+    """Decode a sequence of payloads → flat ``(timestamps, values,
+    offsets)`` with chunk c occupying ``[offsets[c], offsets[c+1])`` —
+    bit-identical to the scalar reference decoder (adversarial +
+    hypothesis suites).
 
-    Why this exists, and why the timestamp side changes ALGORITHM: at
-    tier-sized chunks the per-chunk decoder is walk-bound — gap-y rollup
-    tiers emit a ±dod class pair per missing bucket, so the run-collapsing
-    walk does O(#gaps) numpy-backed iterations per chunk (measured 170k
-    pts/s/thread at 234-point 15%-gap chunks vs 1.8M on one huge chunk).
-    Here the dod stream is decoded with NO sequential walk at all:
+    The dod stream is decoded with NO sequential walk (a field walk is
+    bound by its iteration count: gap-y rollup tiers emit a ±dod class
+    pair per missing bucket):
 
     1. every chunk's timestamp section concatenates into ONE bit plane
        (sections are byte-aligned, so positions are exact);
     2. a class table is built columnar over the whole plane — ``cls_at[p]``
        / ``len_at[p]`` = the field class/length IF a field started at bit
-       p (the ``_ts_chain_tail`` construction, globalized);
+       p;
     3. all field start positions materialize by POINTER DOUBLING on the
        jump array ``J[p] = p + len_at[p]``: level k emits fields
        [2^k, 2^{k+1}) of every chunk from the already-known first 2^k via
@@ -870,48 +696,53 @@ def decode_chunks(payloads) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     4. payloads for ALL chunks gather in one ``_gather_fields`` pass and
        timestamps rebuild with segmented (boundary-subtracted) cumsums.
 
-    The value sections keep the per-chunk run walk (field length depends
-    on live window state, so no position-indexed table exists), but all
-    chunks' runs accumulate into ONE list → one ``_expand_runs`` + one
-    gather + one segmented ``bitwise_xor.accumulate`` (the per-chunk
-    correction term is the accumulated value at each chunk's last
-    predecessor position). Legacy GOR1 payloads fall back to the scalar
-    per-chunk decoder and splice into the output by offset."""
+    The value sections are walked run by run per chunk (field length
+    depends on live window state, so no position-indexed table exists): a
+    run of '0' fields is one vectorized zero-scan, a run of '10' reuse
+    fields has arithmetic starts checked in one vectorized pass, and only
+    '11' window headers are read field by field. All chunks' runs
+    accumulate into ONE list → one ``_expand_runs`` + one gather + one
+    segmented ``bitwise_xor.accumulate`` (the per-chunk correction term
+    is the accumulated value at each chunk's last predecessor position).
+
+    Raises ``ValueError`` for a wrong magic, and one naming the chunk
+    index for a header that does not fit the payload or a section whose
+    decoded fields do not end in its last byte (``_check_section_ends``). A wrong ``n`` that
+    the zero padding absorbs is not detectable."""
     k = len(payloads)
     ns = np.zeros(k, dtype=np.int64)
     tlens = np.zeros(k, dtype=np.int64)
-    legacy: list[int] = []
+    vlens = np.zeros(k, dtype=np.int64)
     for c, p in enumerate(payloads):
         magic = p[:4]
-        if magic not in (MAGIC, MAGIC_V1):
+        if magic != MAGIC:
             raise ValueError(f"not a Gorilla chunk (magic {magic!r})")
+        if len(p) < 16:
+            raise ValueError(f"malformed Gorilla chunk {c}: {len(p)} bytes, shorter than its header")
         n, tlen = struct.unpack("<IQ", p[4:16])
-        ns[c] = n
-        tlens[c] = tlen
-        if magic == MAGIC_V1 and n > 0:
-            legacy.append(c)
-    out_off = np.zeros(k + 1, dtype=np.int64)
-    np.cumsum(ns, out=out_off[1:])
-    n_total = int(out_off[-1])
+        # every point takes ≥1 bit of each section, so n > 8·len(p) is
+        # never valid (the bound also keeps a corrupt n from sizing the
+        # output); an empty chunk is its bare header
+        if 16 + tlen > len(p) or n > 8 * len(p) or (n == 0 and len(p) > 16):
+            raise ValueError(
+                f"malformed Gorilla chunk {c}: header (n={n}, tlen={tlen}) "
+                f"does not fit its {len(p)} bytes"
+            )
+        ns[c], tlens[c], vlens[c] = n, tlen, len(p) - 16 - tlen
+    offsets = np.zeros(k + 1, dtype=np.int64)
+    np.cumsum(ns, out=offsets[1:])
+    n_total = int(offsets[-1])
     ts_out = np.empty(n_total, dtype=np.int64)
     val_out = np.empty(n_total, dtype=np.float64)
-    offsets = out_off
-
-    is_legacy = np.zeros(k, dtype=bool)
-    is_legacy[legacy] = True
-    bi = np.flatnonzero((ns > 0) & ~is_legacy)  # batch (GOR2, non-empty)
-    for c in legacy:
-        t, v = decode_chunk(payloads[c])
-        ts_out[out_off[c] : out_off[c + 1]] = t
-        val_out[out_off[c] : out_off[c + 1]] = v
+    bi = np.flatnonzero(ns > 0)
     if len(bi) == 0:
         return ts_out, val_out, offsets
 
     ns_b = ns[bi]
     tlens_b = tlens[bi]
-    vlens_b = np.array([len(payloads[c]) for c in bi], dtype=np.int64) - 16 - tlens_b
+    vlens_b = vlens[bi]
     kb = len(bi)
-    ob = out_off[bi]  # output start per batch chunk
+    ob = offsets[bi]  # output start per non-empty chunk
 
     # --- timestamp plane -------------------------------------------------
     ts_buf = _padded_buf(b"".join(bytes(payloads[c][16 : 16 + tlens[c]]) for c in bi))
@@ -924,6 +755,7 @@ def decode_chunks(payloads) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     if n2.any():
         zz = _gather_fields(ts_buf, tb_off[n2] + 64, full64[n2])
         firstd[n2] = (zz >> _ONE).astype(np.int64) ^ -(zz & _ONE).astype(np.int64)
+    t_end = np.where(n2, 128, 64)  # bit where each section's last field ends
 
     m_per = np.maximum(ns_b - 2, 0)
     M = int(m_per.sum())
@@ -957,6 +789,8 @@ def decode_chunks(payloads) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
             if (m_per - filled).any():
                 jump = jump[jump]  # double the stride for the next level
         cls = cls_at[starts]
+        last = im[1:][has] - 1
+        t_end[has] = starts[last] + _CLS_LEN[cls[last]] - tb_off[has]
         nzf = np.flatnonzero(cls)
         if len(nzf):
             cl = cls[nzf].astype(np.int64)
@@ -967,11 +801,12 @@ def decode_chunks(payloads) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
                 sel = cl == c
                 if sel.any():
                     dod[nzf[sel]] = _sign_extend(raw[sel], int(_CLS_PAY[c]))
+    _check_section_ends("timestamp", t_end, tlens_b, bi)
 
     # segmented double cumsum: dod → deltas → timestamps, per chunk, via
     # boundary subtraction (int64 wrap-around is modular, so global
     # cumsums minus the chunk-start prefix equal per-chunk cumsums bit
-    # for bit — the same wrap semantics as the per-chunk decoder)
+    # for bit — the same wrap semantics as the scalar decoder)
     dcnt = ns_b - 1  # ≥0; deltas per chunk
     D = int(dcnt.sum())
     doff = np.zeros(kb + 1, dtype=np.int64)
@@ -998,21 +833,24 @@ def decode_chunks(payloads) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     xm = np.zeros(kb + 1, dtype=np.int64)
     np.cumsum(xcnt, out=xm[1:])
     xors = np.zeros(X, dtype=np.uint64)
+    v_end = full64.copy()
     if X:
         bits_v = np.unpackbits(v_buf)
         runs = []  # (global_field_idx, count, payload_pos0, stride, pay_bits, lshift)
         xm_l = xm.tolist()
         vb_l = vb_off.tolist()
         xc_l = xcnt.tolist()
+        vl_l = vlens_b.tolist()
         for c in range(kb):
             m = xc_l[c]
             pos = vb_l[c] + 64
+            limit = vb_l[c] + 8 * vl_l[c]  # no field starts past the section
             base = xm_l[c]
             i = 0
             lead = length = 0
-            while i < m:
+            while i < m and pos < limit:
                 if bits_v[pos] == 0:
-                    z = _zero_run(bits_v, pos, m - i)
+                    z = _zero_run(bits_v, pos, min(m - i, limit - pos))
                     pos += z
                     i += z
                     continue
@@ -1024,14 +862,16 @@ def decode_chunks(payloads) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
                     i += 1
                     continue
                 stride = 2 + length
-                cnt = _stride_run(bits_v, pos, stride, m - i, ones=1, term=True)
+                cnt = _stride_run(bits_v, pos, stride, m - i)
                 runs.append((base + i, cnt, pos + 2, stride, length, 64 - lead - length))
                 pos += stride * cnt
                 i += cnt
+            v_end[c] = pos - vb_l[c] + (m - i)  # each field left takes ≥1 bit
         if runs:
-            dst, ps, lens, shf = _expand_runs(runs, with_shift=True)
+            dst, ps, lens, shf = _expand_runs(runs)
             raw = _gather_fields(v_buf, ps, lens)
             xors[dst] = raw << shf.astype(np.uint64)
+    _check_section_ends("value", v_end, vlens_b, bi)
     # segmented XOR accumulate: place each chunk head at its first slot,
     # run ONE global accumulate, then cancel the cross-chunk prefix by
     # XORing every chunk with the accumulated value just before its start

@@ -77,8 +77,8 @@ def chunk_frame(
             "series_key": np.asarray(keys, dtype=object)[g0],
             "tier": tier,
             "chunk_start": np.asarray(cstarts, dtype=np.int64)[g0],
-            # v2: 64-bit dod escape class (payload magic GOR2); v1
-            # payloads stay readable via decode_chunk's legacy branch
+            # v2: 64-bit dod escape class (payload magic GOR2), the one
+            # format ``codec.decode_chunks`` reads
             "codec": "gorilla-dod-xor-v2",
             "n_points": offsets[1:] - g0,
             "t_min": ts[g0],
@@ -138,10 +138,10 @@ def decompress_to_points(compressed: DataFrame) -> DataFrame:
     ``groupBy().applyInPandas`` shape paid a full exchange for nothing.
     Per Arrow batch, ALL payloads decode in one ``codec.decode_chunks``
     call (table-driven batch decoder: pointer-doubled dod field starts,
-    one global gather, segmented cumsum/XOR-accumulate — measured 2.3×
-    over per-chunk decode at gap-y 234-pt tier chunks, 4.5× on
-    class-hostile streams); key/tier columns are np.repeat'd from the
-    returned offsets — no per-row Python anywhere."""
+    one global gather, segmented cumsum/XOR-accumulate); key/tier columns
+    are np.repeat'd from the returned offsets — no per-row Python
+    anywhere. A malformed payload fails the task with the codec's
+    ``ValueError``."""
     import numpy as np
     import pyspark.sql.types as T
 
@@ -195,23 +195,17 @@ def read_range(
     boundary chunks, which straddle the requested window.
 
     ``series_keys``: optional key pruning (same mechanism — dictionary /
-    min-max stats on a string column). Stores written before the stat
-    columns existed (schema v1) lack ``t_min``/``t_max``; the fallback
-    prunes on ``chunk_start <= t_hi`` only (rows are never below their
-    chunk_start; no upper bound is known without the chunk span) — exact,
-    just weaker. Output schema = ``decompress_to_points``.
+    min-max stats on a string column). ``compressed`` must carry the
+    ``COMPRESSED`` stat columns, as every ``chunk_frame`` writer does.
+    Output schema = ``decompress_to_points``.
     """
-    have_stats = "t_min" in compressed.columns and "t_max" in compressed.columns
     pruned = compressed
     if series_keys is not None:
         pruned = pruned.where(F.col("series_key").isin(series_keys))
-    if have_stats:
-        if t_lo is not None:
-            pruned = pruned.where(F.col("t_max") >= int(t_lo))
-        if t_hi is not None:
-            pruned = pruned.where(F.col("t_min") <= int(t_hi))
-    elif t_hi is not None:
-        pruned = pruned.where(F.col("chunk_start") <= int(t_hi))
+    if t_lo is not None:
+        pruned = pruned.where(F.col("t_max") >= int(t_lo))
+    if t_hi is not None:
+        pruned = pruned.where(F.col("t_min") <= int(t_hi))
 
     pts = decompress_to_points(pruned)
     if t_lo is not None:

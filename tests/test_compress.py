@@ -5,7 +5,7 @@ import pytest
 
 from series_correction_project_updated_spark.functions import compress as codec
 from series_correction_project_updated_spark.functions.compress import (
-    decode_chunk,
+    decode_chunks,
     encode_chunk,
 )
 
@@ -15,7 +15,7 @@ def test_roundtrip_regular(n):
     ts = np.arange(n, dtype=np.int64) * 60 + 1_577_836_800
     vals = np.sin(np.arange(n) / 5.0) * 100 + 3.0
     payload = encode_chunk(ts, vals)
-    ts2, vals2 = decode_chunk(payload)
+    ts2, vals2, _ = decode_chunks([payload])
     np.testing.assert_array_equal(ts, ts2)
     np.testing.assert_array_equal(vals.view(np.uint64), vals2.view(np.uint64))
 
@@ -29,7 +29,7 @@ def test_roundtrip_irregular_and_nan():
     vals[7] = np.inf
     vals[11] = -np.inf
     payload = encode_chunk(ts, vals)
-    ts2, vals2 = decode_chunk(payload)
+    ts2, vals2, _ = decode_chunks([payload])
     np.testing.assert_array_equal(ts, ts2)
     np.testing.assert_array_equal(vals.view(np.uint64), vals2.view(np.uint64))
 
@@ -38,7 +38,7 @@ def test_roundtrip_constant_values():
     ts = np.arange(100, dtype=np.int64) * 3600
     vals = np.full(100, 42.5)
     payload = encode_chunk(ts, vals)
-    ts2, vals2 = decode_chunk(payload)
+    ts2, vals2, _ = decode_chunks([payload])
     np.testing.assert_array_equal(vals, vals2)
     # constants compress to ~1 bit/point after the first
     assert len(payload) < 16 + 8 + 8 + 8 + 100 // 8 + 24
@@ -55,63 +55,9 @@ def test_compression_ratio_on_regular_rollup():
 def test_negative_timestamps_and_deltas():
     ts = np.array([-1000, -500, -499, 0, 1, 1000000], dtype=np.int64)
     vals = np.array([1.5, -2.5, 3.5, -4.5, 5.5, 0.0])
-    ts2, vals2 = decode_chunk(encode_chunk(ts, vals))
+    ts2, vals2, _ = decode_chunks([encode_chunk(ts, vals)])
     np.testing.assert_array_equal(ts, ts2)
     np.testing.assert_array_equal(vals, vals2)
-
-
-def _encode_v1_timestamps(ts):
-    """Hand-rolled GOR1 (pre-escape-class) timestamp bitstream: the old
-    format's '1111'+32b top class, no 5th class bit."""
-    bits = []
-
-    def emit(v, n):
-        bits.append(format(v & ((1 << n) - 1), f"0{n}b"))
-
-    emit(int(ts[0]), 64)
-    deltas = np.diff(np.asarray(ts, dtype=np.int64))
-    if len(deltas):
-        d0 = int(deltas[0])
-        emit((d0 << 1) ^ (d0 >> 63), 64)
-    for i in range(1, len(deltas)):
-        dod = int(deltas[i]) - int(deltas[i - 1])
-        if dod == 0:
-            bits.append("0")
-        elif -63 <= dod <= 64:
-            emit((0b10 << 7) | (dod & 0x7F), 9)
-        elif -255 <= dod <= 256:
-            emit((0b110 << 9) | (dod & 0x1FF), 12)
-        elif -2047 <= dod <= 2048:
-            emit((0b1110 << 12) | (dod & 0xFFF), 16)
-        else:
-            emit((0b1111 << 32) | (dod & 0xFFFFFFFF), 36)
-    s = "".join(bits)
-    s += "0" * (-len(s) % 8)
-    return bytes(int(s[i : i + 8], 2) for i in range(0, len(s), 8))
-
-
-def test_gor1_legacy_payloads_still_decode():
-    """Round-2 changed the dod bitstream ('1111'+32b -> '11110'/'11111'
-    classes) and bumped MAGIC to GOR2; persisted GOR1 payloads (e.g. a
-    checkpoint-resumed compressed sink) must still decode exactly, including
-    the old 32-bit top class (ADVICE r2)."""
-    import struct
-
-    from series_correction_project_updated_spark.functions.compress import (
-        _encode_values_codes,
-        _pack_codes,
-    )
-
-    # dods exercise every v1 class: 0, 7b, 9b, 12b and the 32-bit top class
-    deltas = [10, 10, 50, 250, 2000, 1_000_000, -900_000, 10]
-    ts = np.cumsum([1_577_836_800] + deltas).astype(np.int64)
-    vals = np.array([1.5, -2.5, 3.5, 0.0, 0.0, 42.0, np.nan, 7.0, 7.0])
-    tbytes = _encode_v1_timestamps(ts)
-    vbytes = _pack_codes(*_encode_values_codes(vals))
-    payload = b"GOR1" + struct.pack("<IQ", len(ts), len(tbytes)) + tbytes + vbytes
-    ts2, vals2 = decode_chunk(payload)
-    np.testing.assert_array_equal(ts, ts2)
-    np.testing.assert_array_equal(vals.view(np.uint64), vals2.view(np.uint64))
 
 
 def test_v2_payloads_carry_new_magic():
@@ -134,7 +80,7 @@ def test_dod_class_boundaries_roundtrip_exact():
     ):
         ts = np.array([0, 100, 200 + d + 100], dtype=np.int64)
         vals = np.array([1.0, 2.0, 3.0])
-        t2, v2 = codec.decode_chunk(codec.encode_chunk(ts, vals))
+        t2, v2, _ = codec.decode_chunks([codec.encode_chunk(ts, vals)])
         assert (t2 == ts).all(), (d, t2.tolist())
         assert (v2 == vals).all()
 
@@ -184,11 +130,11 @@ def test_encode_chunks_bad_offsets_raise():
         codec.encode_chunks(ts, np.ones(3), np.array([0, 4], dtype=np.int64))  # len mismatch
 
 
-def test_decode_chunks_matches_per_chunk_adversarial():
-    """decode_chunks must be value-identical to decode_chunk per chunk —
-    empty chunks, n=1/2/3 specials, NaN/inf/-0.0, wrapping timestamps,
-    64-bit dod escapes, gap-y tier-like streams, class-hostile jittered
-    streams, and legacy GOR1 payloads spliced between GOR2 ones."""
+def test_decode_chunks_matches_scalar_adversarial(decode_chunk_scalar):
+    """decode_chunks must be bit-identical to the field-at-a-time scalar
+    reference per chunk — empty chunks, n=1/2/3 specials, NaN/inf/-0.0,
+    wrapping timestamps, 64-bit dod escapes, gap-y tier-like streams and
+    class-hostile jittered streams, decoded in one batch."""
     rng = np.random.default_rng(99)
     chunks = [
         (np.empty(0, np.int64), np.empty(0, np.float64)),
@@ -213,18 +159,51 @@ def test_decode_chunks_matches_per_chunk_adversarial():
              np.round(rng.normal(100, 5, n), 3))
         )
     payloads = [codec.encode_chunk(t, v) for t, v in chunks]
-    # splice legacy-magic copies: a GOR1 payload decodes via the scalar
-    # fallback but must land at the right offsets
-    legacy = codec.MAGIC_V1 + payloads[3][4:]
-    payloads_all = payloads[:5] + [legacy] + payloads[5:]
-    chunks_all = chunks[:5] + [chunks[3]] + chunks[5:]
-    ts, vs, off = codec.decode_chunks(payloads_all)
-    assert len(off) == len(payloads_all) + 1
-    for c, (t, v) in enumerate(chunks_all):
-        assert (ts[off[c] : off[c + 1]] == t).all(), c
-        assert (vs[off[c] : off[c + 1]].view(np.uint64) == v.view(np.uint64)).all(), c
+    ts, vs, off = codec.decode_chunks(payloads)
+    assert len(off) == len(payloads) + 1
+    for c, (t, v) in enumerate(chunks):
+        want_t, want_v = decode_chunk_scalar(payloads[c])
+        assert (want_t == t).all() and (want_v.view(np.uint64) == v.view(np.uint64)).all(), c
+        assert (ts[off[c] : off[c + 1]] == want_t).all(), c
+        assert (vs[off[c] : off[c + 1]].view(np.uint64) == want_v.view(np.uint64)).all(), c
 
 
 def test_decode_chunks_bad_magic_raises():
     with pytest.raises(ValueError):
         codec.decode_chunks([b"NOPE" + b"\x00" * 12])
+
+
+def test_decode_chunks_malformed_payloads_raise():
+    """A payload whose header or sections do not fit fails loudly with a
+    ValueError naming its chunk index — never wrong points or an
+    IndexError/struct.error: truncated by 1, 8 or 40 bytes, one trailing
+    extra byte, tlen one short, shorter than the header, a header-only
+    payload with n > 0, an empty chunk with a trailing byte, and the
+    retired GOR1 magic."""
+    import struct
+
+    rng = np.random.default_rng(5)
+    ts = np.cumsum(rng.integers(55, 65, 1000)).astype(np.int64)
+    p = encode_chunk(ts, np.round(rng.normal(100, 5, 1000), 3))
+    n, tlen = struct.unpack("<IQ", p[4:16])
+    good = encode_chunk(ts[:50], np.arange(50.0))
+    damaged = {
+        "cut 1": p[:-1],
+        "cut 8": p[:-8],
+        "cut 40": p[:-40],
+        "extra byte": p + b"\x00",
+        "tlen - 1": p[:4] + struct.pack("<IQ", n, tlen - 1) + p[16:],
+        "under 16 bytes": p[:10],
+        "header only": p[:4] + struct.pack("<IQ", 5, 0),
+        "empty + byte": encode_chunk(ts[:0], ts[:0].astype(float)) + b"\x00",
+    }
+    for bad in damaged.values():
+        with pytest.raises(ValueError, match="malformed Gorilla chunk 1"):
+            codec.decode_chunks([good, bad, good])
+        with pytest.raises(ValueError, match="malformed Gorilla chunk 0"):
+            codec.decode_chunks([bad])
+    with pytest.raises(ValueError, match="not a Gorilla chunk"):
+        codec.decode_chunks([good, b"GOR1" + p[4:]])
+    # the undamaged batch still decodes
+    t2, _, off = codec.decode_chunks([good, p, good])
+    assert (t2[off[1] : off[2]] == ts).all()

@@ -40,7 +40,7 @@ def test_gorilla_roundtrip_any_values(ts_raw, data):
         dtype=np.float64,
     )
     payload = codec.encode_chunk(ts, vals)
-    ts2, vals2 = codec.decode_chunk(payload)
+    ts2, vals2, _ = codec.decode_chunks([payload])
     assert (ts2 == ts).all()
     # bit-exact incl. NaN payloads and signed zeros
     assert (vals2.view(np.uint64) == vals.view(np.uint64)).all()
@@ -53,7 +53,7 @@ def test_gorilla_regular_timestamps_near_one_bit(n, step):
     ts = np.arange(n, dtype=np.int64) * step
     vals = np.full(n, 1.25)
     payload = codec.encode_chunk(ts, vals)
-    ts2, vals2 = codec.decode_chunk(payload)
+    ts2, vals2, _ = codec.decode_chunks([payload])
     assert (ts2 == ts).all() and (vals2 == vals).all()
     if n > 50:  # amortized ≈1 bit/ts + 1 bit/val + heads + chunk framing
         assert len(payload) * 8 < 64 * 6 + 3 * n
@@ -322,23 +322,8 @@ def test_bit_length_u64_random(vals):
     np.testing.assert_array_equal(got, want)
 
 
-# --- Vectorized block decoder == scalar reference decoder ---------------------
-
-
-def _decode_chunk_scalar(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
-    """Field-at-a-time reference decoder (any magic): the oracle the
-    vectorized ``codec.decode_chunk`` is checked against."""
-    magic = payload[:4]
-    if magic not in (codec.MAGIC, codec.MAGIC_V1):
-        raise ValueError(f"not a Gorilla chunk (magic {magic!r})")
-    n, tlen = struct.unpack("<IQ", payload[4:16])
-    if n == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    ts = codec._decode_timestamps_scalar(
-        codec._BitReader(payload[16 : 16 + tlen]), n, legacy_v1=magic == codec.MAGIC_V1
-    )
-    vals = codec._decode_values_scalar(codec._BitReader(payload[16 + tlen :]), n)
-    return ts, vals
+# --- Vectorized batch decoder == scalar reference decoder ---------------------
+# (the reference, ``decode_chunk_scalar``, is a conftest fixture)
 
 
 @settings(max_examples=80, deadline=None)
@@ -348,41 +333,45 @@ def _decode_chunk_scalar(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
     ),
     st.data(),
 )
-def test_vectorized_decode_matches_scalar(deltas, data):
-    """The run-collapsing vectorized decoder (r3 verdict #2) must be
-    bit-identical to the field-at-a-time scalar reference on arbitrary
-    dod classes (incl. 32/64-bit escapes), window churn, and NaN values."""
+def test_vectorized_decode_matches_scalar(decode_chunk_scalar, deltas, data):
+    """``decode_chunks`` must be bit-identical to the field-at-a-time
+    scalar reference on arbitrary dod classes (incl. 32/64-bit escapes),
+    window churn, and NaN values."""
     ts = np.cumsum(np.asarray(deltas, dtype=np.int64))
     vals = np.array(
         data.draw(st.lists(finite_or_special, min_size=len(ts), max_size=len(ts))),
         dtype=np.float64,
     )
     payload = codec.encode_chunk(ts, vals)
-    t_vec, v_vec = codec.decode_chunk(payload)
-    t_sca, v_sca = _decode_chunk_scalar(payload)
+    t_vec, v_vec, _ = codec.decode_chunks([payload])
+    t_sca, v_sca = decode_chunk_scalar(payload)
     assert (t_vec == t_sca).all() and (t_vec == ts).all()
     assert (v_vec.view(np.uint64) == v_sca.view(np.uint64)).all()
     assert (v_vec.view(np.uint64) == vals.view(np.uint64)).all()
 
 
-def test_vectorized_decode_fallback_paths():
-    """Force both walk strategies on large inputs: a run-friendly regular
-    stream (no fallback) and a class-churning stream that trips the
-    _RUN_PROBE heuristic into the chain-walk tail."""
+def test_vectorized_decode_fallback_paths(decode_chunk_scalar):
+    """Large streams of four shapes, decoded in one batch and checked
+    against the scalar reference: dod=0 runs, one repeating dod class,
+    class-hostile random deltas and a mixed stream. They drive the
+    pointer doubling through ~15 levels and the value walk's vectorized
+    growing-block scans past their scalar peeks."""
     rng = np.random.default_rng(11)
     n = 30_000
     cases = [
         np.arange(n, dtype=np.int64) * 60,  # dod=0 runs
         np.cumsum(np.tile([60, 120], n // 2)[:n]).astype(np.int64),  # one class run
-        np.cumsum(rng.integers(-(10**12), 10**12, size=n)).astype(np.int64),  # fallback
+        np.cumsum(rng.integers(-(10**12), 10**12, size=n)).astype(np.int64),  # hostile
         np.cumsum(rng.choice([60, 60, 60, 120, 300], size=n)).astype(np.int64),  # mixed
     ]
-    for ts in cases:
-        vals = np.cumsum(rng.normal(0, 1, n)).round(3)
-        payload = codec.encode_chunk(ts, vals)
-        t_vec, v_vec = codec.decode_chunk(payload)
-        assert (t_vec == ts).all()
-        assert (v_vec.view(np.uint64) == vals.view(np.uint64)).all()
+    chunks = [(ts, np.cumsum(rng.normal(0, 1, n)).round(3)) for ts in cases]
+    payloads = [codec.encode_chunk(ts, vals) for ts, vals in chunks]
+    t_vec, v_vec, off = codec.decode_chunks(payloads)
+    for c, (ts, vals) in enumerate(chunks):
+        t_sca, v_sca = decode_chunk_scalar(payloads[c])
+        assert (t_sca == ts).all() and (v_sca.view(np.uint64) == vals.view(np.uint64)).all()
+        assert (t_vec[off[c] : off[c + 1]] == t_sca).all()
+        assert (v_vec[off[c] : off[c + 1]].view(np.uint64) == v_sca.view(np.uint64)).all()
 
 
 @settings(max_examples=40, deadline=None)
@@ -417,8 +406,8 @@ def test_encode_chunks_equals_per_chunk(ts_raw, data):
     st.lists(st.integers(min_value=-(2**62), max_value=2**62), min_size=0, max_size=120),
     st.data(),
 )
-def test_decode_chunks_equals_per_chunk(ts_raw, data):
-    """Batch decoder ≡ per-chunk decoder under ARBITRARY chunk partitions:
+def test_decode_chunks_equals_scalar(decode_chunk_scalar, ts_raw, data):
+    """Batch decoder ≡ scalar reference under ARBITRARY chunk partitions:
     the pointer-doubled dod table, segmented cumsums, and segmented XOR
     accumulate must reproduce every chunk bit-for-bit (NaN payloads
     compared on the uint64 view)."""
@@ -439,7 +428,7 @@ def test_decode_chunks_equals_per_chunk(ts_raw, data):
     got_ts, got_vals, got_off = codec.decode_chunks(payloads)
     assert (got_off == offsets).all()
     for c in range(len(payloads)):
-        want_t, want_v = codec.decode_chunk(payloads[c])
+        want_t, want_v = decode_chunk_scalar(payloads[c])
         t2 = got_ts[got_off[c] : got_off[c + 1]]
         v2 = got_vals[got_off[c] : got_off[c + 1]]
         assert (t2 == want_t).all()

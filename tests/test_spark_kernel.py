@@ -213,11 +213,6 @@ def test_read_range_prunes_chunks_and_matches_full_decode(spark, series_pdf):
         check_exact=True,
     )
 
-    # v1 stores (no stat columns): weaker chunk_start-only pruning, same rows
-    v1 = comp.drop("t_min", "t_max")
-    got_v1 = read_range(v1, t_lo, t_hi).orderBy("series_key", "bucket_start").toPandas()
-    pd.testing.assert_frame_equal(got_v1, want, check_exact=True)
-
 
 def test_text_byte_identity(spark):
     """north_rule invariant: extracted text stays byte-identical per url."""
