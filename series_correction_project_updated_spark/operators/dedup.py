@@ -392,17 +392,3 @@ def _simhash_fold_portable(word_arrays: pd.Series) -> pd.Series:
 # 64 longs/doc). At 100k docs/local[32] it ran 3.6s vs the Arrow fold's
 # 0.26s and the HOF's 0.41s — the 64-aggregate codegen + shuffle cost far
 # exceeds the Arrow transfer it avoids. Numbers in BENCH/BASELINE.md.
-
-
-def simhash_near_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", max_hamming: int = 8) -> DataFrame:
-    """Near-dup pairs: same top-16-bit band AND hamming(simhash) ≤ k."""
-    sig = simhash_signatures(docs, text_col, id_col)
-    a = sig.alias("a")
-    b = sig.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"), "hamming")
-    )  # unordered by design — see minhash_candidate_pairs

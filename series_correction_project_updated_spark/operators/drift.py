@@ -66,8 +66,7 @@ DRIFT_SCHEMA = T.StructType(
 
 
 def _popcount64(x: np.ndarray) -> np.ndarray:
-    """Vectorized popcount of int64 values (numpy<2 has no bitwise_count).
-    Shared with streaming/drift_stream."""
+    """Vectorized popcount of int64 values (numpy<2 has no bitwise_count)."""
     return (
         np.unpackbits(x.astype(np.int64).view(np.uint8).reshape(-1, 8), axis=1)
         .sum(axis=1)
@@ -223,51 +222,6 @@ def drift_summary(drifts: DataFrame) -> DataFrame:
     )
 
 
-def recrawl_sample(
-    summary: DataFrame,
-    k_per_domain: int,
-    salt: int = 0,
-    floor_weight: float = 0.05,
-    unseen_weight: float = 1.0,
-) -> DataFrame:
-    """The freshness-weighted sampler the module doc promises: pick
-    ``k_per_domain`` urls per registrable domain for recrawl, inclusion
-    probability ∝ observed churn. Input is ``drift_summary`` output;
-    returns (url, domain, recrawl_weight).
-
-    weight = ``floor_weight`` + rewrite_rate, with urls that have no
-    recrawl evidence yet (single crawl ⇒ null rewrite_rate) getting
-    ``unseen_weight`` instead of the rate — never-probed pages are the
-    highest-information recrawls, while the floor keeps provably-static
-    pages reachable (weight 0 would mean "never recrawl again").
-
-    Composition, not new machinery: ``sampling.weighted_bottom_k``
-    (Efraimidis–Spirakis keyed on the url hash) per domain — so a
-    scheduling round is DETERMINISTIC given ``salt`` (re-running a
-    crashed round picks the same urls; the next round rotates the salt
-    for a fresh draw), shuffles ≤k urls per domain per task
-    (WindowGroupLimit), and stays coordinated with any other sampler
-    keyed on the same urls."""
-    from .sampling import weighted_bottom_k
-    from .urls import url_domain
-
-    if floor_weight < 0 or unseen_weight <= 0:
-        raise ValueError(
-            f"floor_weight must be >= 0 and unseen_weight > 0, got {floor_weight}/{unseen_weight}"
-        )
-    weighted = summary.select(
-        "url",
-        url_domain("url").alias("domain"),
-        (
-            F.lit(float(floor_weight))
-            + F.coalesce(F.col("rewrite_rate"), F.lit(float(unseen_weight)))
-        ).alias("recrawl_weight"),
-    )
-    return weighted_bottom_k(
-        weighted, k_per_domain, "domain", "recrawl_weight", ["url"], salt=salt
-    )
-
-
 def redrift_urls(
     pages: DataFrame,
     late: DataFrame,
@@ -278,8 +232,7 @@ def redrift_urls(
     hamming_threshold: int = 3,
     portable: bool = False,
 ) -> DataFrame:
-    """Late-crawl repair for the drift signal store — the batch path the
-    streaming classifier's ``change='late'`` rows route into (the same
+    """Late-crawl repair for the drift signal store (the same
     invalidation law as ``refresh.recorrect_series``): a late crawl
     re-orders its url's history, so every subsequent classification of
     that url may change — the invalidation unit is the URL. Recompute

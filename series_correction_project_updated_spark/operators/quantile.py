@@ -35,7 +35,7 @@ partitionings and collect order — pinned by tests. Laws:
                               level with a cascade allowance)
 
 Scale shape: ``collect_list`` per (key, 1m bucket) is bounded by the
-sampling interval (same boundedness the streaming state relies on); build
+sampling interval; build
 coarser tiers via ``quantile_cascade`` from 1m — it touches only digests
 (<= k doubles per bucket), never raw points. Any-window percentiles
 (whole-series, trailing-N-bucket) re-merge stored digests with the same

@@ -108,37 +108,6 @@ def hash_bernoulli(
     return df.where(_hash_u(id_cols, salt, portable) < F.lit(float(rate)))
 
 
-def stratified_bernoulli(
-    df: DataFrame,
-    rates: dict,
-    stratum_col: str,
-    id_cols: list[str],
-    salt: int = 0,
-    default_rate: float = 0.0,
-    portable: bool = False,
-) -> DataFrame:
-    """Per-stratum Bernoulli — ``rates`` maps stratum values (e.g. domain,
-    language) to keep-rates; strata absent from the map use
-    ``default_rate``. How corpus mixes are built ("keep 100% of wiki, 5%
-    of the crawl tail"). Still a single zero-shuffle filter: the rate is
-    a literal CASE on ``stratum_col`` (no join — ``rates`` is part of the
-    plan, fine for the dozens-to-hundreds of strata a mix spec has; for a
-    rate TABLE, broadcast-join it and filter on the joined column). The
-    same hash uniform as ``hash_bernoulli`` ⇒ per-stratum samples stay
-    nested across rate changes and coordinated across tables."""
-    for s, r in rates.items():
-        if not 0.0 <= r <= 1.0:
-            raise ValueError(f"rate for stratum {s!r} must be in [0, 1], got {r}")
-    if not 0.0 <= default_rate <= 1.0:
-        raise ValueError(f"default_rate must be in [0, 1], got {default_rate}")
-    if not id_cols:
-        raise ValueError("id_cols must be non-empty")
-    rate = F.lit(float(default_rate))
-    for s, r in rates.items():
-        rate = F.when(F.col(stratum_col) == F.lit(s), F.lit(float(r))).otherwise(rate)
-    return df.where(_hash_u(id_cols, salt, portable) < rate)
-
-
 def hash_split(
     df: DataFrame,
     weights: dict[str, float],

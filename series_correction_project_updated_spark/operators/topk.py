@@ -1,12 +1,9 @@
 """Heavy-hitters (approximate top-k) tiers with SpaceSaving-style
 error bounds.
 
-"Top domains per hour / top tokens per day" cannot cascade from exact
-per-bucket top-k lists alone — an item just below every fine bucket's
-cut could dominate the coarse bucket. The classic fix (Misra–Gries /
-SpaceSaving, Metwally et al. 2005) keeps a bounded summary whose
-per-item counts carry explicit error: this tier stores, per
-(key, bucket),
+Per (key, bucket) the tier stores a bounded summary whose per-item
+counts carry explicit error (Misra–Gries / SpaceSaving, Metwally et al.
+2005):
 
   items:  top-``m`` array<struct<item, lo, hi>> — lo/hi bound the
           item's true in-bucket count (exact rollup ⇒ lo == hi),
@@ -14,22 +11,15 @@ per-item counts carry explicit error: this tier stores, per
   n:      exact total (always sums exactly).
 
 Within a bucket counts are EXACT (a JVM hash aggregate), so ``err`` is
-the largest dropped count (0 when everything fit). Merging summaries
-S_1..S_C: an item's lower bound sums where present; its upper bound
-adds each non-containing child's ``err`` (the most it could have hidden
-there); the merged ``err`` is the largest dropped upper (or the total
-of child errs when nothing is dropped). Invariants, test-pinned:
+the largest dropped count (0 when everything fit). Invariants,
+test-pinned:
 
-    lo <= true count <= hi            for every kept item, every tier
+    lo <= true count <= hi            for every kept item
     true(absent item) <= err
-    every bucket fits in m  =>  cascade == direct == exact (bit-equal)
-    a planted dominant item is NEVER lost by cascading (its hi ranks
-    above the cut — SpaceSaving's no-false-negative property)
+    every bucket fits in m  =>  the summary is the exact count table
 
 Execution: exact counts = one map-side-combining hash aggregate over
-raw; summarization = sort_array + slice (JVM); cascade touches only
-tier rows (explode of <= m items per fine bucket, re-aggregate,
-co-partitioned join for the per-bucket err totals). No Python anywhere.
+raw; summarization = sort_array + slice (JVM). No Python anywhere.
 """
 
 from __future__ import annotations
@@ -62,7 +52,7 @@ def _summarize(grouped: DataFrame, key_cols: list[str], m: int) -> DataFrame:
         F.transform(
             kept, lambda s: F.struct(s["item"].alias("item"), s["lo"].alias("lo"), s["hi"].alias("hi"))
         ).alias("items"),
-        F.greatest(max_dropped, F.col("_base_err")).alias("err"),
+        F.greatest(max_dropped, F.lit(0.0)).alias("err"),
         F.col("n"),
     )
 
@@ -99,48 +89,5 @@ def topk_rollup(
             asc=False,
         ).alias("_arr"),
         F.sum("cnt").cast("long").alias("n"),
-        F.lit(0.0).alias("_base_err"),
-    )
-    return _summarize(grouped, key_names, m)
-
-
-def topk_cascade(
-    fine: DataFrame,
-    to_tier: str,
-    m: int = 20,
-    key_col: str | None = None,
-) -> DataFrame:
-    """Merge fine summaries into a coarser tier, maintaining the lo/hi
-    bounds — touches only tier rows."""
-    sec = TIER_SECONDS[to_tier]
-    keys = ([F.col(key_col)] if key_col else []) + [
-        _bucket("bucket_start", sec).alias("bucket_start")
-    ]
-    key_names = ([key_col] if key_col else []) + ["bucket_start"]
-
-    child = fine.select(
-        *keys, F.col("items"), F.col("err"), F.col("n")
-    )
-    totals = child.groupBy(*key_names).agg(
-        F.sum("err").alias("_total_err"), F.sum("n").alias("n")
-    )
-    ex = child.select(*key_names, F.col("err").alias("_cerr"), F.explode("items").alias("it"))
-    per_item = ex.groupBy(*key_names, F.col("it.item").alias("item")).agg(
-        F.sum("it.lo").alias("lo"),
-        F.sum("it.hi").alias("_hi_present"),
-        F.sum("_cerr").alias("_err_present"),
-    )
-    # co-partitioned join: both sides were just aggregated on key_names
-    joined = per_item.join(totals, on=key_names)
-    joined = joined.withColumn(
-        "hi", F.col("_hi_present") + F.col("_total_err") - F.col("_err_present")
-    )
-    grouped = joined.groupBy(*key_names).agg(
-        F.sort_array(
-            F.collect_list(F.struct("hi", "lo", "item")), asc=False
-        ).alias("_arr"),
-        F.first("n").alias("n"),
-        # absent-everywhere items are bounded by the summed child errs
-        F.first("_total_err").alias("_base_err"),
     )
     return _summarize(grouped, key_names, m)

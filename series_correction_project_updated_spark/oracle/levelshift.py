@@ -20,7 +20,6 @@ operator (operators/level_shift.py) expresses it with a running-sum window.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 

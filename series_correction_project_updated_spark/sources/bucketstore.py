@@ -43,7 +43,6 @@ note as operators/ingest.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.timeutil import utc_day
 

@@ -101,12 +101,3 @@ def write_pages(df: DataFrame, location: str, url_buckets: int = 32) -> None:
         .partitionBy("_day", "_url_bucket")
         .parquet(location)
     )
-
-
-def read_pages_fallback_pruned(spark: SparkSession, location: str, day: str) -> DataFrame:
-    """Day-pruned read against the fallback layout (partition pruning on
-    ``_day`` — the parquet analog of Iceberg's hidden days(warc_ts))."""
-    df = spark.read.parquet(location)
-    from pyspark.sql import functions as F
-
-    return df.where(F.col("_day") == day).drop("_day", "_url_bucket")

@@ -1,35 +1,39 @@
 """One grouped-map driver for the keyed stateful stream families.
 
-Every stateful family in this package (gap, jump, smooth, funnel,
-stateagg, drift, counter, timeweight, quantile, histogram, stats, topk)
-is one ``groupBy(key).applyInPandasWithState`` call made here. A family
-supplies its schemas, its pre-projection and a ``step`` hook that holds
-its arithmetic; this module owns the rest of the per-group contract.
+Every stateful family in this package (evict: gap, stateagg; flush:
+counter, histogram, stats) is one ``groupBy(key).applyInPandasWithState``
+call made here. A family supplies its schemas, its pre-projection and a
+``step`` hook that holds its arithmetic; this module owns the rest of the
+per-group contract.
 
 Shared stream policy:
 
+* **Null keys.** A null key names no series, so its rows yield no output:
+  they are filtered in the JVM before the ``groupBy``, the same policy
+  ``operators/_keyed.map_keyed`` applies to every batch operator. (A null
+  key would otherwise reach the non-nullable key field of the output
+  schema and fail the query.)
 * **Late rows.** Which rows a family accepts is its own ``step``'s rule,
   different on purpose: point families keep a ``t > last_t`` frontier
   (a row at or before the stored ``last_t`` is skipped — the batch
   operators sort globally and never see cross-batch disorder);
-  histogram, stats and topk keep only a *bucket* frontier, because
-  counting and summing commute inside the open bucket; drift emits an
-  older crawl as ``change='late'``. A skipped row never touches state;
-  late data reconciles through the batch ``refresh_tier`` path. Within
-  one micro-batch rows are sorted before the fold, so only cross-batch
-  disorder is ever dropped.
+  histogram and stats keep only a *bucket* frontier, because counting
+  and summing commute inside the open bucket. A skipped row never
+  touches state; late data reconciles through the batch ``refresh_tier``
+  path. Within one micro-batch rows are sorted before the fold, so only
+  cross-batch disorder is ever dropped.
 * **TTL.** ``state_ttl_ms > 0`` arms a ProcessingTime timeout and re-arms
   it after every batch that leaves state behind, including a batch whose
   rows were all late. When a key times out, a *flush* family (counter,
-  timeweight, quantile, histogram, stats, topk — state is one open
-  bucket) emits that bucket through its ``flush`` hook, trading the exact
-  close-on-next-bucket boundary for bounded emission delay; an *evict*
-  family drops the state and emits nothing.
+  histogram, stats — state is one open bucket) emits that bucket through
+  its ``flush`` hook, trading the exact close-on-next-bucket boundary for
+  bounded emission delay; an *evict* family drops the state and emits
+  nothing.
 * **Why ``NoTimeout`` is the default.** Per-key state is already bounded
-  by each family (a reservoir, a window, one open bucket, one frontier
-  row), and an armed timeout makes Spark schedule state-cleanup
-  micro-batches forever, so ``processAllAvailable``-style draining (tests,
-  batch replay) never sees the stream go idle. Set a TTL on long-running
+  by each family (a reservoir, one open bucket, one frontier row), and an
+  armed timeout makes Spark schedule state-cleanup micro-batches forever,
+  so ``processAllAvailable``-style draining (tests, batch replay) never
+  sees the stream go idle. Set a TTL on long-running
   streams whose key sets churn.
 * **Time quantization.** Families whose closed buckets must equal a batch
   operator bit for bit read ``t`` through :func:`quantized_t`, the batch
@@ -96,7 +100,8 @@ def stateful_stream(
     the state unchanged, and ``out`` (a frame or row tuples; ``None`` or
     empty emits nothing) is appended to the output. On timeout ``flush``
     (flush families) turns the stored state into one output row or
-    ``None``; without ``flush`` the state is evicted silently."""
+    ``None``; without ``flush`` the state is evicted silently. Rows with a
+    null ``key_col`` are dropped before the grouping."""
     cols = [f.name for f in out_schema.fields]
 
     def _update(
@@ -124,7 +129,8 @@ def stateful_stream(
         if state_ttl_ms > 0
         else GroupStateTimeout.NoTimeout
     )
-    return df.groupBy(key_col).applyInPandasWithState(
+    keyed = df.where(F.col(key_col).isNotNull())
+    return keyed.groupBy(key_col).applyInPandasWithState(
         _update,
         outputStructType=out_schema,
         stateStructType=state_schema,

@@ -8,7 +8,7 @@ x bucket-relative, the same precision contract as the batch tier
 
 Exactness: n is exact; the five float sums match the batch JVM
 aggregate to reassociation (~1e-12 relative, the same law the batch
-cascade and the EWM stream pin — a distributed ``F.sum`` has no
+cascade pins — a distributed ``F.sum`` has no
 defined addition order, so bit-equality is not a meaningful target
 here, unlike the integer histogram tier). Per-point arithmetic is
 bitwise-identical: the pre-projection computes bucket id and

@@ -1,4 +1,5 @@
-"""Tests: config loader guard, CSV sources/sinks, sheet-name validation."""
+"""Tests: config loader guard, CSV sources/sinks, sheet-name validation,
+spreadsheet-formula escaping."""
 
 import json
 
@@ -48,3 +49,24 @@ def test_write_csv_safely_escapes(spark, tmp_path):
     write_csv_safely(df, out)
     back = spark.read.csv(out, header=True).orderBy("id").toPandas()
     assert back["note"].tolist() == ["'=EVIL()", "fine"]
+
+
+def test_formula_escape_semantics(spark):
+    from series_correction_project_updated_spark.functions.safety import sanitize_for_export
+
+    rows = [
+        (0, "=HYPERLINK(evil)"),
+        (1, "  +SUM(A1)"),
+        (2, "-2+3"),
+        (3, "@cmd"),
+        (4, "normal text"),
+        (5, "'=already escaped"),
+    ]
+    df = spark.createDataFrame(rows, "id long, cell string")
+    out = sanitize_for_export(df, ["cell"]).orderBy("id").toPandas()["cell"].tolist()
+    assert out[0] == "'=HYPERLINK(evil)"
+    assert out[1] == "'  +SUM(A1)"
+    assert out[2] == "'-2+3"
+    assert out[3] == "'@cmd"
+    assert out[4] == "normal text"
+    assert out[5] == "'=already escaped"  # idempotent

@@ -113,41 +113,6 @@ def test_summary(spark, pages):
     assert s["c"]["rewrite_rate"] == pytest.approx(1.0)
 
 
-def test_recrawl_sample_weights_budget_determinism(spark):
-    """The freshness-weighted recrawl picker: per-domain budget honored,
-    weights composed as documented (floor + rate; unseen urls get
-    floor + unseen_weight), deterministic across partitionings."""
-    from series_correction_project_updated_spark.operators.drift import recrawl_sample
-
-    rows = []
-    for d, n in (("alpha.com", 30), ("beta.org", 30)):
-        for i in range(n):
-            # thirds: churny (rate 0.9), static (0.0), unseen (null)
-            rate = [0.9, 0.0, None][i % 3]
-            rows.append((f"https://{d}/p{i}", rate))
-    summary = spark.createDataFrame(rows, "url string, rewrite_rate double")
-    out = recrawl_sample(summary, 5, salt=11).toPandas()
-    assert sorted(out["domain"].value_counts().to_dict().items()) == [
-        ("alpha.com", 5),
-        ("beta.org", 5),
-    ]
-    w = dict(zip(out["url"], out["recrawl_weight"]))
-    src = dict(rows)
-    for u, got in w.items():
-        want = 0.05 + (1.0 if src[u] is None else src[u])
-        assert got == pytest.approx(want)
-    rep = recrawl_sample(
-        spark.createDataFrame(rows, "url string, rewrite_rate double").repartition(16),
-        5,
-        salt=11,
-    ).toPandas()
-    assert sorted(rep["url"]) == sorted(out["url"])
-    with pytest.raises(ValueError):
-        recrawl_sample(summary, 5, floor_weight=-0.1)
-    with pytest.raises(ValueError):
-        recrawl_sample(summary, 5, unseen_weight=0.0)
-
-
 def test_plan_shape(spark, pages):
     """One exchange (the url window); Python only in the signature
     projection BEFORE the shuffle — signatures travel, text doesn't."""

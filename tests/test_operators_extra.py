@@ -46,15 +46,10 @@ def test_minhash_jaccard_estimate(spark, docs):
 
 
 def test_simhash_exact_dup_same_signature(spark, docs):
-    from series_correction_project_updated_spark.operators.dedup import (
-        simhash_near_pairs,
-        simhash_signatures,
-    )
+    from series_correction_project_updated_spark.operators.dedup import simhash_signatures
 
     sig = simhash_signatures(docs).toPandas().set_index("doc_id")["simhash"]
     assert sig[0] == sig[1]
-    near = simhash_near_pairs(docs, max_hamming=10).toPandas()
-    assert ((near.doc_a == 0) & (near.doc_b == 1)).any()
 
 
 def test_simhash_deterministic_across_runs(spark, docs):
@@ -670,124 +665,6 @@ def test_simhash_arrow_fold_matches_reference_expr(spark, docs):
         for r in got.where(F.col("doc_id").isin(9001, 9002, 9003)).collect()
     )
     assert nulls == {9001: 0, 9002: 0, 9003: 0}
-
-
-def test_streaming_jump_detect_matches_batch(spark, tmp_path):
-    """The stateful streaming CUSUM jump detector must trigger at the same
-    positions as the batch detector on planted level shifts (single
-    micro-batch; margins large enough that the rolling-std ulp difference
-    between pandas' Welford kernel and np.std cannot flip a decision)."""
-    from series_correction_project_updated_spark.oracle import correction as oracle
-    from series_correction_project_updated_spark.streaming.jump_stream import (
-        detect_jumps_stream,
-    )
-
-    rng = np.random.default_rng(7)
-    rows = []
-    for key in ("a", "b"):
-        vals = rng.normal(0.0, 0.5, 120)
-        vals[40:] += 25.0  # planted level shift
-        vals[85:] -= 25.0  # and a second one back down
-        for i, v in enumerate(vals):
-            rows.append((key, 10.0 * (i + 1), float(v)))
-    pdf = pd.DataFrame(rows, columns=["series_key", "t", "value"])
-    src = str(tmp_path / "src")
-    spark.createDataFrame(pdf).write.parquet(src)
-
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = (
-        detect_jumps_stream(stream, window_size=5, threshold=3.0)
-        .writeStream.format("memory")
-        .queryName("jumps_stream")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = (
-        spark.sql("SELECT series_key, t FROM jumps_stream")
-        .toPandas()
-        .sort_values(["series_key", "t"])
-        .reset_index(drop=True)
-    )
-
-    want_rows = []
-    for key, grp in pdf.groupby("series_key"):
-        grp = grp.sort_values("t").reset_index(drop=True)
-        idx = oracle.detect_jumps(grp["value"].to_numpy(), 5, 3.0)
-        for i in idx:
-            want_rows.append((key, grp["t"].iloc[i]))
-    want = (
-        pd.DataFrame(want_rows, columns=["series_key", "t"])
-        .sort_values(["series_key", "t"])
-        .reset_index(drop=True)
-    )
-    assert len(want) >= 4  # both planted shifts detected per series
-    pd.testing.assert_frame_equal(got, want)
-
-
-def test_streaming_jump_state_carries_across_microbatches(spark, tmp_path):
-    """State (trailing window + running cusum) must persist across
-    micro-batches: a level shift whose trigger lands in batch 2 while its
-    trailing context arrived in batch 1 is still detected at the same
-    position as the single-batch run."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from series_correction_project_updated_spark.oracle import correction as oracle
-    from series_correction_project_updated_spark.streaming.jump_stream import (
-        detect_jumps_stream,
-    )
-
-    rng = np.random.default_rng(11)
-    vals = rng.normal(0.0, 0.5, 80)
-    vals[41:] += 25.0  # shift lands right after the batch split below
-    ts = [10.0 * (i + 1) for i in range(80)]
-
-    src = tmp_path / "src_mb"
-    src.mkdir()
-    schema = pa.schema(
-        [("series_key", pa.string()), ("t", pa.float64()), ("value", pa.float64())]
-    )
-
-    def _write(name, sl, mtime):
-        tbl = pa.table(
-            {
-                "series_key": ["a"] * len(ts[sl]),
-                "t": ts[sl],
-                "value": [float(v) for v in vals[sl]],
-            },
-            schema=schema,
-        )
-        path = str(src / name)
-        pq.write_table(tbl, path)
-        os.utime(path, (mtime, mtime))
-
-    now = _time.time()
-    _write("part1.parquet", slice(0, 40), now - 60)
-    _write("part2.parquet", slice(40, 80), now)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(str(src)).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        detect_jumps_stream(stream, window_size=5, threshold=3.0)
-        .writeStream.format("memory")
-        .queryName("jumps_stream_mb")
-        .outputMode("append")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(spark.sql("SELECT t FROM jumps_stream_mb").toPandas()["t"].tolist())
-
-    idx = oracle.detect_jumps(vals, 5, 3.0)
-    want = sorted(ts[i] for i in idx)
-    assert len(want) >= 1 and got == want
 
 
 def test_downsample_m4_properties(spark):

@@ -1,8 +1,6 @@
 """Property-based tests (hypothesis) for the pure-Python kernels: the
-Gorilla/delta-of-delta codec, the XLSX codec, the multimodal decoders, and
+Gorilla/delta-of-delta codec, the XLSX codec, and
 the rolling-window oracle math vs naive reimplementations."""
-
-import struct
 
 import numpy as np
 import pandas as pd
@@ -11,7 +9,6 @@ from hypothesis import strategies as st
 
 from series_correction_project_updated_spark.functions import compress as codec
 from series_correction_project_updated_spark.functions.xlsx import decode_xlsx, encode_xlsx
-from series_correction_project_updated_spark.operators.multimodal import _decode_payload
 from series_correction_project_updated_spark.oracle import correction as oracle
 
 # --- Gorilla codec: bit-exact roundtrip for ANY doubles -----------------------
@@ -94,25 +91,6 @@ def test_xlsx_roundtrip_property(n_cols, n_rows, data):
             else:
                 assert g == w
 
-# --- multimodal decoders ------------------------------------------------------
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.integers(min_value=1, max_value=40), st.integers(min_value=1, max_value=40), st.randoms())
-def test_bmp_decode_property(w, h, rnd):
-    rng = np.random.default_rng(rnd.randint(0, 2**31))
-    gray = rng.integers(0, 256, (h, w), dtype=np.uint8)
-    stride = (w * 3 + 3) & ~3
-    body = bytearray()
-    for row in gray[::-1]:
-        line = np.repeat(row, 3).astype(np.uint8).tobytes()
-        body += line + b"\x00" * (stride - len(line))
-    offset = 14 + 40
-    hdr = b"BM" + struct.pack("<IHHI", offset + len(body), 0, 0, offset)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 0, 0, 0, 0)
-    kind, gw, gh, _nf, _sr, out = _decode_payload(bytes(hdr + info + body))
-    assert (kind, gw, gh) == ("image", w, h)
-    assert (out == gray.ravel()).all()
 
 # --- oracle rolling windows vs naive definitions ------------------------------
 

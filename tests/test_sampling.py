@@ -13,7 +13,6 @@ from series_correction_project_updated_spark.operators.sampling import (
     bottom_k_sample,
     hash_bernoulli,
     hash_split,
-    stratified_bernoulli,
     weighted_bottom_k,
 )
 
@@ -65,32 +64,6 @@ def test_bernoulli_coordinated_across_tables(docs, spark):
     s_docs = {r.doc_id for r in hash_bernoulli(docs, 0.2, ["doc_id"]).collect()}
     s_meta = {r.doc_id for r in hash_bernoulli(meta, 0.2, ["doc_id"]).collect()}
     assert s_docs == s_meta
-
-
-def test_stratified_rates_and_coordination(docs):
-    """Per-stratum rates hold (binomial tolerance), absent strata use the
-    default, and each stratum's sample is EXACTLY the plain bernoulli of
-    that stratum at its rate — the corpus-mix spec is just a per-stratum
-    view of the one global hash draw."""
-    rates = {0: 1.0, 1: 0.2, 2: 0.0}
-    out = stratified_bernoulli(docs, rates, "domain", ["doc_id"], default_rate=0.5)
-    counts = {r.domain: r["count"] for r in out.groupBy("domain").count().collect()}
-    per = {r.domain: r["count"] for r in docs.groupBy("domain").count().collect()}
-    assert counts[0] == per[0]  # rate 1.0 keeps everything
-    assert 2 not in counts  # rate 0.0 keeps nothing
-    assert abs(counts[1] - 0.2 * per[1]) < 80
-    for d in (3, 4, 5, 6):  # default_rate strata
-        assert abs(counts[d] - 0.5 * per[d]) < 100
-    dom1 = {r.doc_id for r in out.where(F.col("domain") == 1).collect()}
-    plain = {
-        r.doc_id
-        for r in hash_bernoulli(docs.where(F.col("domain") == 1), 0.2, ["doc_id"]).collect()
-    }
-    assert dom1 == plain
-    with pytest.raises(ValueError):
-        stratified_bernoulli(docs, {0: 1.2}, "domain", ["doc_id"])
-    with pytest.raises(ValueError):
-        stratified_bernoulli(docs, {0: 0.5}, "domain", ["doc_id"], default_rate=-0.1)
 
 
 def test_hash_split_exhaustive_disjoint(docs):
@@ -196,8 +169,6 @@ def test_weighted_excludes_nonpositive_null_and_nan(spark):
 def test_nan_weight_and_rn_collision_validation(docs, spark):
     with pytest.raises(ValueError):  # NaN sums pass neither check silently
         hash_split(docs, {"a": float("nan"), "b": 0.5}, ["doc_id"])
-    with pytest.raises(ValueError):
-        stratified_bernoulli(docs, {0: float("nan")}, "domain", ["doc_id"])
     carrying = docs.withColumn("__rn", F.lit(1))
     with pytest.raises(ValueError):  # would silently drop the caller's column
         bottom_k_sample(carrying, 3, "domain", ["doc_id"])

@@ -1,13 +1,12 @@
-"""Heavy-hitters tier: exact-when-fits bit-equality, lo/hi bound
-invariants under truncation, no-false-negative on a planted dominant
-item, absent-item err bound, JVM-only plan."""
+"""Heavy-hitters tier: exact when every bucket fits, lo/hi bound
+invariants under truncation, absent-item err bound, JVM-only plan."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from series_correction_project_updated_spark.operators.topk import topk_cascade, topk_rollup
+from series_correction_project_updated_spark.operators.topk import topk_rollup
 
 
 def _events(spark, seed=23, n=20000, n_items=120):
@@ -39,26 +38,21 @@ def _exact(pdf, sec):
 
 def test_exact_when_everything_fits(spark):
     df, pdf = _events(spark, n=5000, n_items=30)
-    via = topk_cascade(topk_rollup(df, "1m", m=64), "1h", m=64).toPandas()
     direct = topk_rollup(df, "1h", m=64).toPandas()
-    via = via.sort_values("bucket_start").reset_index(drop=True)
-    direct = direct.sort_values("bucket_start").reset_index(drop=True)
     exact = _exact(pdf, 3600)
-    assert len(via) == len(direct) > 0
-    for (_, a), (_, b) in zip(via.iterrows(), direct.iterrows()):
-        assert a["bucket_start"] == b["bucket_start"]
-        assert a["n"] == b["n"] == exact[exact.index.get_level_values(0) == a["bucket_start"]].sum()
-        assert a["err"] == b["err"] == 0.0
+    assert len(direct) > 0
+    for _, a in direct.iterrows():
+        assert a["n"] == exact[exact.index.get_level_values(0) == a["bucket_start"]].sum()
+        assert a["err"] == 0.0
         ia = [(x["item"], x["lo"], x["hi"]) for x in a["items"]]
-        ib = [(x["item"], x["lo"], x["hi"]) for x in b["items"]]
-        assert ia == ib
+        assert len(ia) == (exact.index.get_level_values(0) == a["bucket_start"]).sum()
         for item, lo, hi in ia:
             assert lo == hi == exact[(a["bucket_start"], item)]
 
 
 def test_bounds_hold_under_truncation(spark):
     df, pdf = _events(spark)
-    tier = topk_cascade(topk_rollup(df, "1m", m=8), "1h", m=8).toPandas()
+    tier = topk_rollup(df, "1h", m=8).toPandas()
     exact = _exact(pdf, 3600)
     assert (tier["err"] > 0).any()  # truncation actually exercised
     for _, row in tier.iterrows():
@@ -74,20 +68,6 @@ def test_bounds_hold_under_truncation(spark):
                 assert true <= row["err"], (b, item, true, row["err"])
 
 
-def test_planted_dominant_item_never_lost(spark):
-    df, pdf = _events(spark, n=15000)
-    # plant a dominant item: 25% extra volume concentrated on one item
-    extra = pdf.sample(n=4000, random_state=1).copy()
-    extra["event_type"] = "WHALE"
-    pdf2 = pd.concat([pdf, extra], ignore_index=True)
-    df2 = df.sparkSession.createDataFrame(pdf2)
-    tier = topk_cascade(topk_rollup(df2, "1m", m=6), "1d", m=6).toPandas()
-    for _, row in tier.iterrows():
-        assert any(x["item"] == "WHALE" for x in row["items"])
-        # and it ranks first by both bounds
-        assert row["items"][0]["item"] == "WHALE"
-
-
 def test_keyed_variant_and_plan(spark):
     df, _ = _events(spark, n=4000)
     df = df.withColumn("user_id", (F.xxhash64("ts") % 5).cast("string"))
@@ -98,11 +78,3 @@ def test_keyed_variant_and_plan(spark):
     plan = tier._jdf.queryExecution().executedPlan().toString()
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert node not in plan
-    casc_plan = (
-        topk_cascade(tier, "1d", m=5, key_col="user_id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in casc_plan
