@@ -15,6 +15,17 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 _OBJ_AGG_KEY = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+# forks the Python workers with a stat-guarded zip re-read (see the module);
+# the package's root goes on the workers' path so the daemon can start
+_DAEMON_MODULE = "series_correction_project_updated_spark._pyworker"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _usable_cpus() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
 
 
 def get_spark(
@@ -25,12 +36,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
-    bench/tests control parallelism via one knob. ``shuffle_partitions``
-    defaults to the core count — at 100 TB you'd raise it to ~2-4× total
-    cores; AQE coalesces small post-shuffle partitions either way.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    CPUs this process may run on) so bench/tests control parallelism via
+    one knob. ``shuffle_partitions`` defaults to the core count — at 100 TB
+    you'd raise it to ~2-4× total cores; AQE coalesces small post-shuffle
+    partitions either way. Python workers start from the package's own
+    daemon (``_pyworker``), which skips an unchanged zip re-read per task.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -58,6 +71,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", _DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
