@@ -138,21 +138,34 @@ def _emit_rollup(segments: Iterator[Segment], sec: int) -> Iterator[pd.DataFrame
         yield _rollup_frame(buf, sec)
 
 
-def _widened(side: pd.DataFrame, kind: str) -> pd.DataFrame:
-    """One ``row_kind``'s frame over every ``ROLLUP_WITH_LINEAGE`` column:
-    the other sides' columns are typed nulls (nullable Int64 / float64 /
-    object), so the three sides concatenate dtype-stably."""
-    n = len(side)
+def _union_frame(sides: dict[str, pd.DataFrame]) -> pd.DataFrame:
+    """The ``row_kind`` sides stacked into one ``ROLLUP_WITH_LINEAGE`` frame,
+    built column by column: a side's missing columns are typed nulls
+    (masked ``IntegerArray`` for longs, NaN for doubles, ``None`` objects
+    otherwise). ``pd.concat`` of widened frames gives the same Arrow batch
+    but pays pandas' all-NA checks on every ``None`` object column."""
+    items = [(side, len(side)) for side in sides.values()]
+
+    def stacked(name: str, dtype: Any, fill: Any) -> np.ndarray:
+        return np.concatenate([
+            side[name].to_numpy(dtype) if name in side else np.full(n, fill, dtype=dtype)
+            for side, n in items
+        ])
+
+    cols: dict[str, Any] = {}
     for f in ROLLUP_WITH_LINEAGE.fields:
-        if f.name not in side:
-            if isinstance(f.dataType, LongType):
-                side[f.name] = pd.array([None] * n, dtype="Int64")
-            elif isinstance(f.dataType, DoubleType):
-                side[f.name] = np.full(n, np.nan)
-            else:
-                side[f.name] = np.full(n, None, dtype=object)
-    side["row_kind"] = kind
-    return side[ROLLUP_WITH_LINEAGE.fieldNames()]
+        if f.name == "row_kind":
+            cols[f.name] = np.repeat(np.array(list(sides), dtype=object), [n for _, n in items])
+        elif isinstance(f.dataType, LongType):
+            # 1 under the mask, as pandas fills it: the Arrow stream is
+            # byte-identical to the concatenated frames'
+            missing = np.concatenate([np.full(n, f.name not in side) for side, n in items])
+            cols[f.name] = pd.arrays.IntegerArray(stacked(f.name, np.int64, 1), missing)
+        elif isinstance(f.dataType, DoubleType):
+            cols[f.name] = stacked(f.name, np.float64, np.nan)
+        else:
+            cols[f.name] = stacked(f.name, object, None)
+    return pd.DataFrame(cols)
 
 
 def _emit_rollup_lineage(segments: Iterator[Segment], tier: str) -> Iterator[pd.DataFrame]:
@@ -174,8 +187,6 @@ def _emit_rollup_lineage(segments: Iterator[Segment], tier: str) -> Iterator[pd.
             ],
             columns=lin_cols,
         )
-        for c in ("n_detected", "n_rows_in", "n_rows_out"):
-            lin[c] = lin[c].astype("Int64")
         keys = agg["series_key"].to_numpy()
         ts = agg["bucket_start"].to_numpy()
         cstarts = chunk_starts(ts, tier)
@@ -186,10 +197,7 @@ def _emit_rollup_lineage(segments: Iterator[Segment], tier: str) -> Iterator[pd.
             keys, cstarts, ts, np.where(np.isnan(vsum), np.nan, vsum),
             np.append(np.flatnonzero(change), len(agg)), tier,
         )
-        yield pd.concat(
-            [_widened(agg, "rollup"), _widened(lin, "lineage"), _widened(chunks, "chunk")],
-            ignore_index=True,
-        )
+        yield _union_frame({"rollup": agg, "lineage": lin, "chunk": chunks})
 
 
 def correct_series(

@@ -11,6 +11,25 @@ directory is written once. Coarser tiers cascade in the JVM from the tier
 below them, and the metrics row is a JVM-side one-row plan. Every count in
 the returned summary is an ``Observation`` on the write that produces it,
 so no job runs only to count.
+
+The write phase is a small dependency graph, not a sequence::
+
+    kernel (persisted) ──► rollup_<finest> ──┬─► lineage
+                                             ├─► compressed_<finest>
+                                             └─► rollup_<2nd> ─► rollup_<3rd> ...
+                                         then metrics (after every branch)
+
+The finest-tier write runs first and alone: it materializes the persisted
+kernel output, so the three branches after it only read the cache or a
+written tier. The branches run at once on driver threads; each write is a
+few small tasks plus a fixed driver cost (planning, commit), so on a
+few-core box they overlap instead of queueing. Each cached side is
+coalesced to ``defaultParallelism`` tasks: one wave of write tasks, at
+most one part file per core. The coarser tiers still cascade from the
+*written* tier below, not from the cache: a 1d tier summed from the
+written 1h tier adds ``vsum`` in the association of a tier-by-tier
+build, so no output byte depends on how the branches interleave, and
+each read is ~60x smaller than the level below.
 """
 
 from __future__ import annotations
@@ -18,13 +37,15 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from ..operators.correct import correct_rollup_lineage
 from ..operators.rollup import cascade
@@ -54,6 +75,22 @@ def _write(df: DataFrame, path: str, **metrics: Column) -> dict[str, Any]:
     obs = Observation()
     df.observe(obs, *(m.alias(k) for k, m in metrics.items())).write.mode("overwrite").parquet(path)
     return obs.get
+
+
+def _run_branches(spark: SparkSession, *branches: Callable[[], Any]) -> list[Any]:
+    """Run each branch on its own driver thread and return their results
+    in order. Every branch ends before this returns; the earliest failure
+    is then raised. ``inheritable_thread_target`` gives each branch the
+    caller's local properties (job group, description, scheduler pool)
+    and session tags."""
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(len(branches), thread_name_prefix="run_pipeline") as pool:
+        futures = [pool.submit(inherit(b)) for b in branches]
+        errors = [f.exception() for f in as_completed(futures)]
+    for err in errors:
+        if err is not None:
+            raise err
+    return [f.result() for f in futures]
 
 
 def _step_sum(step: str, col: Column) -> Column:
@@ -92,19 +129,22 @@ def run_pipeline(
 
     # The finest tier, the lineage rows and the finest tier's Gorilla chunks
     # come out of ONE kernel execution (correct_rollup_lineage), held in
-    # memory (spilling to disk) while its three row_kind sides are written;
-    # coarser tiers cascade from the written tier below them, each read
-    # ~60x smaller than the raw points.
+    # memory (spilling to disk) while its three row_kind sides are written.
+    # The finest tier is written first: that write materializes the kernel
+    # output. The lineage write, the chunk write and the coarser-tier chain
+    # then run at once, each reading only the cache or a written tier.
     finest = cfg.tiers[0]
     fine_path = os.path.join(out_dir, f"rollup_{finest}")
     fused = correct_rollup_lineage(points, finest, cfg.correction, num_partitions=cfg.n_buckets)
     fused.persist(StorageLevel.MEMORY_AND_DISK)
+    width = spark.sparkContext.defaultParallelism
 
     def side(kind: str, schema: StructType) -> DataFrame:
-        return fused.where(F.col("row_kind") == kind).select(*schema.fieldNames())
+        # one wave of write tasks, and at most one part file per core
+        return fused.where(F.col("row_kind") == kind).select(*schema.fieldNames()).coalesce(width)
 
-    try:
-        lin = _write(
+    def write_lineage() -> dict[str, Any]:
+        return _write(
             side("lineage", LINEAGE),
             os.path.join(out_dir, "lineage"),
             # rows INCLUDING null-valued ones (e.g. an all-NaN series that
@@ -114,23 +154,33 @@ def run_pipeline(
             outliers_replaced=_step_sum("outliers", F.col("n_detected")),
             jumps_corrected=_step_sum("jumps", F.col("n_detected")),
         )
-        # corrected_points counts non-null VALUES (the sum of the tier's cnt),
-        # not rows: an all-NaN series' rows are excluded
-        fine = _write(side("rollup", ROLLUP), fine_path, rows=F.count("*"), cnt=F.sum("cnt"))
-        comp = _write(
+
+    def write_chunks() -> dict[str, Any]:
+        return _write(
             side("chunk", COMPRESSED),
             os.path.join(out_dir, f"compressed_{finest}"),
             bytes_per_point=F.sum(F.length("payload")) / F.sum("n_points"),
         )
+
+    def write_coarser() -> dict[str, int]:
+        # each tier cascades from the WRITTEN tier below it, ~60x smaller
+        # than the raw points, in the same association as a serial build
+        counts, lower = {}, spark.read.schema(ROLLUP).parquet(fine_path)
+        for name in cfg.tiers[1:]:
+            path = os.path.join(out_dir, f"rollup_{name}")
+            counts[name] = _write(cascade(lower, name), path, rows=F.count("*"))["rows"]
+            lower = spark.read.schema(ROLLUP).parquet(path)
+        return counts
+
+    try:
+        # corrected_points counts non-null VALUES (the sum of the tier's cnt),
+        # not rows: an all-NaN series' rows are excluded
+        fine = _write(side("rollup", ROLLUP), fine_path, rows=F.count("*"), cnt=F.sum("cnt"))
+        lin, comp, coarser = _run_branches(spark, write_lineage, write_chunks, write_coarser)
     finally:
         fused.unpersist()
 
-    tier_counts = {finest: fine["rows"]}
-    lower = spark.read.schema(ROLLUP).parquet(fine_path)
-    for name in cfg.tiers[1:]:
-        path = os.path.join(out_dir, f"rollup_{name}")
-        tier_counts[name] = _write(cascade(lower, name), path, rows=F.count("*"))["rows"]
-        lower = spark.read.schema(ROLLUP).parquet(path)
+    tier_counts = {finest: fine["rows"], **coarser}
     n_corrected = int(fine["cnt"] or 0)
 
     # Every series yields rollup rows, so an empty finest tier means an

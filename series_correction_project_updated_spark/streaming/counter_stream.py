@@ -141,5 +141,5 @@ def counter_stream(
         F.col(key_col), quantized_t(time_col).alias(time_col), F.col(value_col)
     )
     return stateful_stream(
-        quantized, key_col, _step, COUNTER_BUCKET, _STATE_SCHEMA, state_ttl_ms, _flush
+        quantized, key_col, time_col, _step, COUNTER_BUCKET, _STATE_SCHEMA, state_ttl_ms, _flush
     )

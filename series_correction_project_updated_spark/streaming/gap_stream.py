@@ -14,6 +14,9 @@ State per series (explicitly bounded):
   over an unbounded stream needs unbounded state; the bounded reservoir is
   the deliberate streaming trade-off (the batch path stays exact), and at
   ``max_deltas`` samples the estimate converges for stationary cadences.
+  A sorted copy of the reservoir is kept beside it during a batch, so
+  each row reads the median in O(1) and updates it in O(max_deltas)
+  (a ``bisect`` insert and remove) instead of sorting the reservoir.
 
 Output rows mirror the batch detector: (series_key, t, prev_t, delta) for
 each gap START. Scale notes: state is per-key and O(max_deltas) doubles —
@@ -22,6 +25,9 @@ beyond what the key distribution already has.
 """
 
 from __future__ import annotations
+
+from bisect import bisect_left, insort
+from collections import deque
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -57,12 +63,19 @@ def detect_gaps_stream(
     """Keyed stateful gap detection on a stream of (series_key, t, ...)
     rows; ``state_ttl_ms > 0`` evicts idle series."""
 
+    if max_deltas < 1:
+        raise ValueError(f"max_deltas must be at least 1, got {max_deltas}")
+
     def _step(key, pdf, st):
-        last_t, deltas = (None, []) if st is None else (st[0], list(st[1]))
+        last_t = None if st is None else st[0]
+        # the reservoir in arrival order (a loaded state trimmed to its
+        # newest max_deltas), and a sorted copy the median is read off
+        deltas = deque(() if st is None else st[1], maxlen=max_deltas)
+        ranked = sorted(deltas)
         out = []
-        for t in np.sort(pdf[time_col].to_numpy(dtype="float64")):
+        for t in np.sort(pdf[time_col].to_numpy(dtype="float64")).tolist():
             if last_t is not None:
-                delta = float(t - last_t)
+                delta = t - last_t
                 if delta <= 0:
                     # A row from a later micro-batch arriving with t ≤ the
                     # stored last_t (cross-batch disorder). The batch
@@ -71,16 +84,21 @@ def detect_gaps_stream(
                     # median down and cause spurious gap flags. Skip the
                     # row and keep last_t monotone.
                     continue
-                if len(deltas) >= 4:  # enough history for a median estimate
-                    med = float(np.median(deltas))
+                n = len(ranked)
+                if n >= 4:  # enough history for a median estimate
+                    # np.median's arithmetic: the middle value, or the
+                    # mean of the two middle values
+                    h = n // 2
+                    med = ranked[h] if n % 2 else (ranked[h - 1] + ranked[h]) / 2
                     if med > 0 and delta > threshold_factor * med:
-                        out.append((key, float(t), float(last_t), delta))
+                        out.append((key, t, last_t, delta))
+                if len(deltas) == max_deltas:
+                    del ranked[bisect_left(ranked, deltas[0])]  # evicted below
                 deltas.append(delta)
-                if len(deltas) > max_deltas:
-                    deltas = deltas[-max_deltas:]
-            last_t = float(t)
-        return (last_t, deltas), out
+                insort(ranked, delta)
+            last_t = t
+        return (last_t, list(deltas)), out
 
     return stateful_stream(
-        points_stream, key_col, _step, GAP_EVENT, _STATE_SCHEMA, state_ttl_ms
+        points_stream, key_col, time_col, _step, GAP_EVENT, _STATE_SCHEMA, state_ttl_ms
     )

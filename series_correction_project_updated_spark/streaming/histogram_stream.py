@@ -104,6 +104,7 @@ def histogram_stream(
     return stateful_stream(
         pre,
         key_col,
+        "_bucket",
         _step,
         HISTOGRAM_BUCKET,
         _STATE_SCHEMA,

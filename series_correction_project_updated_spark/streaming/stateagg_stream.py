@@ -65,7 +65,7 @@ def state_rollup_stream(
         points_stream[key_col].cast("string").alias("series_key"),
         quantized_t(time_col).alias("t"),
         points_stream[state_col].cast("string").alias("state"),
-    ).where("state IS NOT NULL AND t IS NOT NULL")
+    ).where("state IS NOT NULL")
 
     def _pieces(key: str, t0: float, t1: float, s: str) -> list[tuple]:
         if max_gap_sec is not None and t1 - t0 > max_gap_sec:
@@ -92,5 +92,5 @@ def state_rollup_stream(
         return (last_t, last_state), rows
 
     return stateful_stream(
-        src, "series_key", _step, STATE_PIECE, _STATE_SCHEMA, state_ttl_ms
+        src, "series_key", "t", _step, STATE_PIECE, _STATE_SCHEMA, state_ttl_ms
     )

@@ -13,6 +13,12 @@ Shared stream policy:
   ``operators/_keyed.map_keyed`` applies to every batch operator. (A null
   key would otherwise reach the non-nullable key field of the output
   schema and fail the query.)
+* **Null times.** A row with a null time has no place in a series, so it
+  yields no output either: it is filtered in the JVM beside the null-key
+  filter, on the column of the family's projection that carries the
+  time. (Unfiltered, a null ``t`` became NaN in the step: one NaN in a
+  gap reservoir made its median NaN and hid every gap until it aged out,
+  and a stats key's first bucket id read as ``-2**63``.)
 * **Late rows.** Which rows a family accepts is its own ``step``'s rule,
   different on purpose: point families keep a ``t > last_t`` frontier
   (a row at or before the stored ``last_t`` is skipped — the batch
@@ -86,6 +92,7 @@ def left_fold(seed: float, xs: np.ndarray) -> float:
 def stateful_stream(
     df: DataFrame,
     key_col: str,
+    time_col: str,
     step: Step,
     out_schema: T.StructType,
     state_schema: T.StructType,
@@ -101,7 +108,8 @@ def stateful_stream(
     empty emits nothing) is appended to the output. On timeout ``flush``
     (flush families) turns the stored state into one output row or
     ``None``; without ``flush`` the state is evicted silently. Rows with a
-    null ``key_col`` are dropped before the grouping."""
+    null ``key_col`` or a null ``time_col`` (the column of ``df`` that
+    carries the row's time) are dropped before the grouping."""
     cols = [f.name for f in out_schema.fields]
 
     def _update(
@@ -129,7 +137,7 @@ def stateful_stream(
         if state_ttl_ms > 0
         else GroupStateTimeout.NoTimeout
     )
-    keyed = df.where(F.col(key_col).isNotNull())
+    keyed = df.where(F.col(key_col).isNotNull() & F.col(time_col).isNotNull())
     return keyed.groupBy(key_col).applyInPandasWithState(
         _update,
         outputStructType=out_schema,

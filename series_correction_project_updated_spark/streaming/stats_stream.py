@@ -115,6 +115,7 @@ def stats_stream(
     return stateful_stream(
         pre,
         key_col,
+        "_bucket",
         _step,
         STATS_BUCKET,
         _STATE_SCHEMA,

@@ -315,6 +315,60 @@ def test_run_pipeline_domain_counters(spark, tmp_path):
     assert summary["tier_counts"] == {"1m": 45, "1h": 1, "1d": 1}
 
 
+def test_run_pipeline_branch_failure_propagates_after_all_branches(spark, tmp_path, monkeypatch):
+    """A failing write branch (here the coarser-tier chain) makes
+    ``run_pipeline`` raise its error, but only once the other branches have
+    finished; the kernel cache is released and no branch thread is left."""
+    import threading
+
+    from series_correction_project_updated_spark.plans import pipeline
+    from series_correction_project_updated_spark.sources.synth import generate_pages
+
+    def boom(lower, name):
+        raise RuntimeError(f"cascade to {name} failed")
+
+    monkeypatch.setattr(pipeline, "cascade", boom)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = tmp_path / "out"
+    with pytest.raises(RuntimeError, match="cascade to 1h failed"):
+        pipeline.run_pipeline(spark, generate_pages(spark, n_urls=4, samples_per_url=60), str(out))
+    # the sibling branches ran to their commit before the error surfaced
+    for name in ("rollup_1m", "lineage", "compressed_1m"):
+        assert (out / name / "_SUCCESS").exists(), name
+    assert not (out / "rollup_1h").exists()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert [t.name for t in threading.enumerate() if t.name.startswith("run_pipeline")] == []
+
+
+def test_run_pipeline_writes_one_file_per_core_at_most(spark, tmp_path):
+    """Every cached side is written in one wave of tasks: with more kernel
+    buckets than cores, each side holds at most ``defaultParallelism``
+    part files. The caller's job group covers the jobs of every branch."""
+    from series_correction_project_updated_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+    from series_correction_project_updated_spark.sources.synth import generate_pages
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    out = tmp_path / "out"
+    pages = generate_pages(spark, n_urls=40, samples_per_url=60)
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("one_build_op", "run_pipeline under a job group")
+    try:
+        summary = run_pipeline(spark, pages, str(out), PipelineConfig(n_buckets=2 * cores + 1))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    assert len(sc.statusTracker().getJobIdsForGroup("one_build_op")) >= 6
+    assert summary["tier_counts"]["1m"] > 0
+    for name in ("lineage", "rollup_1m", "compressed_1m"):
+        parts = [f for f in os.listdir(out / name) if f.startswith("part-")]
+        assert 1 <= len(parts) <= cores, (name, parts)
+
+
 # --- chunked correction + boundary alignment -----------------------------------
 
 
